@@ -47,6 +47,13 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Memoized per (application, realpath, table, source-fingerprint) —
     see _LOAD_MEMO above; `_load_build` is the actual scan plan.
 
+    Memoized frames share attribute IDs: two `load` calls for the same
+    table return the same plan, so a self-join of that table must join
+    on string keys (USING columns, or `alias()`-qualified names such as
+    `F.col("a.x")`), never on `df1["x"] == df2["y"]` conditions, which
+    Spark rejects as ambiguous. Returning `alias()` copies from `load`
+    would not avoid this: an alias keeps the attribute IDs.
+
     Timestamp normalization (the "one choke point" of session.py's
     docstring): driver testdata has shipped ts columns in two parquet
     encodings across rounds — TIMESTAMP(NANOS) (unreadable by Spark's

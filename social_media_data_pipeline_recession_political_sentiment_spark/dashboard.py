@@ -3,12 +3,19 @@ calls (ref: `Analysis Dashboard/app.py` — 13 parametrized SQL routes;
 `Data Analysis/Analysis_queries.ipynb` cells 0-1).
 
 A reference user's daily queries are exactly these routes. Each is a
-plain function `(spark, sf_dir, start, end) -> DataFrame` over gold
-views derived deterministically from the testdata `events` table,
-with the reference's three timestamp encodings preserved on purpose
-(SURVEY §1.2): native timestamps (Reddit/politics), display TEXT
-needing a cast at query time (4chan, `app.py:71,105,222`), and
-ISO-8601 TEXT compared lexically (YouTube, `app.py:152,244`).
+plain function `(spark, sf_dir, start, end) -> DataFrame` over the
+testdata `events` table. The reference stores comment time in three
+encodings (SURVEY §1.2): native timestamps (Reddit/politics), display
+TEXT needing a cast at query time (4chan, `app.py:71,105,222`), and
+ISO-8601 TEXT compared lexically (YouTube, `app.py:152,244`). The
+DuckDB oracles below replay those encodings literally; the engine
+evaluates each route's predicate as an equivalent one over the native
+`ts` column, so the oracles cross-check every rewrite.
+
+The twelve count and distribution routes are projections of ONE
+per-page aggregate (`page_summary`): one `events` scan, one window and
+one grouping-sets aggregate keyed by platform. `politics_comments`
+and `daily_counts` are two small native-ts scans.
 
 Platform mapping onto the synthetic events stream (fixed, arbitrary):
 click=reddit, error=4chan, purchase=youtube, signup=politics.
@@ -19,11 +26,12 @@ is_hate_speech = value >= 150, confidence = min(value/200, 0.99).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog import load
+from .catalog import compute_once, load
 from .registry import register
+from .session import scoped_conf
 
 PLATFORMS = {
     "reddit": "click",
@@ -37,135 +45,135 @@ PLATFORMS = {
 DEFAULT_START = "2024-01-05"
 DEFAULT_END = "2024-01-25"
 
+# grouping_id() of page_summary's three grouping sets over
+# (platform, sentiment, is_hate_speech); a set bit is a rolled-up column
+_GID = {"platform": 0b011, "sentiment": 0b001, "is_hate_speech": 0b010}
 
-def _base(spark: SparkSession, sf_dir: str, platform: str) -> DataFrame:
-    e = load(spark, sf_dir, "events").filter(
-        F.col("event_type") == PLATFORMS[platform]
+
+def page_summary(spark: SparkSession, sf_dir: str, start=DEFAULT_START, end=DEFAULT_END) -> DataFrame:
+    """Every count and distribution number of one dashboard page
+    (`app.py:64-265`) from one `events` scan.
+
+    Rows are the grouping sets (platform), (platform, sentiment) and
+    (platform, is_hate_speech), told apart by `gid` (`_GID`), because a
+    NULL `value` yields a NULL is_hate_speech group. `n_count` counts
+    the rows in the count routes' window. `n_dist` reproduces the
+    distribution routes' enriched-JOIN-raw on the string `event_id`:
+    each row weighs as many in-window rows as share its non-NULL
+    (platform, event_id), so a redelivered id counts once per copy and
+    a NULL id never joins.
+
+    Each route's TEXT/ISO predicate is evaluated on `ts` directly. The
+    ISO text is whole seconds, so `comment_time < 'endT00:00:00Z'` is
+    `ts < end` and `comment_time <= 'endT23:59:59Z'` is
+    `ts < end + 1 day`; the display text's date is `to_date(ts)`."""
+    ts, day = F.col("ts"), F.to_date("ts")
+    s_ts, e_ts = F.lit(start).cast("timestamp"), F.lit(end).cast("timestamp")
+    s_day, e_day = F.lit(start).cast("date"), F.lit(end).cast("date")
+    et = F.col("event_type")
+    chan, youtube = et == PLATFORMS["chan"], et == PLATFORMS["youtube"]
+    # count routes (app.py:70-72): half-open, on days for 4chan's DATE()
+    in_count = F.when(chan, (day >= s_day) & (day < e_day)).otherwise(
+        (ts >= s_ts) & (ts < e_ts)
     )
-    return e.select(
-        F.col("event_id").cast("string").alias("comment_id"),
-        F.col("ts"),
-        F.col("value"),
+    # distribution routes (app.py:105-265): BETWEEN on each encoding
+    in_dist = (
+        F.when(chan, day.between(s_day, e_day))
+        .when(youtube, (ts >= s_ts) & (ts < F.date_add(e_day, 1).cast("timestamp")))
+        .otherwise(ts.between(s_ts, e_ts))
     )
-
-
-def day_expr(platform: str):
-    """The platform's day-of-comment expression over its raw table —
-    the single dispatch site for the reference's three time encodings
-    (native ts / display TEXT / ISO TEXT)."""
-    if platform == "chan":  # TEXT display ts → cast (app.py:71)
-        return F.to_date("timestamp")
-    if platform == "youtube":  # ISO TEXT → parse (app.py:152)
-        return F.to_date(F.to_timestamp("comment_time", "yyyy-MM-dd'T'HH:mm:ss'Z'"))
-    return F.to_date("created_utc")  # native ts (reddit/politics)
-
-
-def raw_comments(spark: SparkSession, sf_dir: str, platform: str) -> DataFrame:
-    """Per-platform raw table with the reference's time encoding:
-    native ts (reddit/politics), TEXT 'yyyy-MM-dd HH:mm:ss' (4chan),
-    ISO-8601 TEXT (youtube)."""
-    b = _base(spark, sf_dir, platform)
-    if platform == "chan":
-        return b.select(
-            F.col("comment_id").alias("postnumber"),
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("timestamp"),
-        )
-    if platform == "youtube":
-        return b.select(
-            "comment_id",
-            F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("comment_time"),
-        )
-    return b.select("comment_id", F.col("ts").alias("created_utc"))
-
-
-def enriched(spark: SparkSession, sf_dir: str, platform: str) -> DataFrame:
-    """The an_* analysis table for a platform (ref DDL:
-    `Reddit_4chan_Analysis.py:65-77`), derived deterministically."""
-    b = _base(spark, sf_dir, platform)
+    platform = (
+        F.when(et == "click", "reddit")
+        .when(et == "error", "chan")
+        .when(et == "purchase", "youtube")
+        .when(et == "signup", "politics")
+    )
     sentiment = (
         F.when(F.col("value") >= 100, "positive")
         .when(F.col("value") < 30, "negative")
         .otherwise("neutral")
     )
-    return b.select(
-        "comment_id",
+    rows = load(spark, sf_dir, "events").filter(et.isin(*PLATFORMS.values())).select(
+        platform.alias("platform"),
+        F.col("event_id").cast("string").alias("key"),
         sentiment.alias("sentiment"),
         (F.col("value") >= 150).alias("is_hate_speech"),
-        F.least(F.col("value") / 200, F.lit(0.99)).alias("hate_speech_confidence"),
+        F.coalesce(in_count, F.lit(False)).cast("long").alias("n_count"),
+        F.coalesce(in_dist, F.lit(False)).cast("long").alias("in_dist"),
+    )
+    joined = F.sum("in_dist").over(Window.partitionBy("platform", "key"))
+    n_dist = F.when(F.col("key").isNotNull(), joined).otherwise(0)
+    return (
+        rows.withColumn("n_dist", n_dist)
+        .filter((F.col("n_count") > 0) | (F.col("n_dist") > 0))
+        .groupingSets(
+            [["platform"], ["platform", "sentiment"], ["platform", "is_hate_speech"]],
+            "platform",
+            "sentiment",
+            "is_hate_speech",
+        )
+        .agg(
+            F.sum("n_count").alias("n_count"),
+            F.sum("n_dist").alias("n_dist"),
+            F.grouping_id().alias("gid"),
+        )
+    )
+
+
+def _count_of(summary: DataFrame, platform: str) -> DataFrame:
+    """A count route (`app.py:70-72`): one row, 0 when nothing matches."""
+    cell = (F.col("platform") == platform) & (F.col("gid") == _GID["platform"])
+    return summary.filter(cell).agg(F.coalesce(F.sum("n_count"), F.lit(0)).alias("count"))
+
+
+def _dist_of(summary: DataFrame, platform: str, col: str) -> DataFrame:
+    """A distribution route (`app.py:105-265`): `col`, count."""
+    cell = (F.col("platform") == platform) & (F.col("gid") == _GID[col])
+    return summary.filter(cell & (F.col("n_dist") > 0)).select(
+        col, F.col("n_dist").alias("count")
+    )
+
+
+def _in_window(spark, sf_dir, platform, start, end) -> DataFrame:
+    """The platform's events with `start <= ts < end`."""
+    ts = F.col("ts")
+    return load(spark, sf_dir, "events").filter(
+        (F.col("event_type") == PLATFORMS[platform])
+        & (ts >= F.lit(start).cast("timestamp"))
+        & (ts < F.lit(end).cast("timestamp"))
     )
 
 
 # ---------------------------------------------------------------- routes
 # 1 (app.py:34-38): politics comments in a half-open range, ordered
 def politics_comments(spark, sf_dir, start=DEFAULT_START, end=DEFAULT_END):
-    r = raw_comments(spark, sf_dir, "politics")
     return (
-        r.filter(
-            (F.col("created_utc") >= F.lit(start).cast("timestamp"))
-            & (F.col("created_utc") < F.lit(end).cast("timestamp"))
-        )
-        .select("created_utc")
+        _in_window(spark, sf_dir, "politics", start, end)
+        .select(F.col("ts").alias("created_utc"))
         .orderBy("created_utc")
     )
 
 
-# 2-4 (app.py:70-77): per-platform volume counts, one per encoding
+# 2-4 (app.py:70-77): per-platform volume counts
 def platform_count(spark, sf_dir, platform, start=DEFAULT_START, end=DEFAULT_END):
-    r = raw_comments(spark, sf_dir, platform)
-    if platform == "chan":  # DATE(timestamp) cast on TEXT, app.py:71
-        pred = (F.to_date("timestamp") >= F.lit(start).cast("date")) & (
-            F.to_date("timestamp") < F.lit(end).cast("date")
-        )
-    elif platform == "youtube":  # lexical TEXT compare, app.py:72
-        pred = (F.col("comment_time") >= f"{start}T00:00:00Z") & (
-            F.col("comment_time") < f"{end}T00:00:00Z"
-        )
-    else:
-        pred = (F.col("created_utc") >= F.lit(start).cast("timestamp")) & (
-            F.col("created_utc") < F.lit(end).cast("timestamp")
-        )
-    return r.filter(pred).agg(F.count("*").alias("count"))
+    return _count_of(page_summary(spark, sf_dir, start, end), platform)
 
 
-def _dist(spark, sf_dir, platform, col, start, end):
-    """Routes 5-12 share one shape: enriched JOIN raw on the key,
-    BETWEEN on the platform's time encoding, GROUP BY col
-    (app.py:105-265)."""
-    r = raw_comments(spark, sf_dir, platform)
-    s = enriched(spark, sf_dir, platform)
-    if platform == "chan":  # TO_CHAR(timestamp::date,...) BETWEEN, app.py:105,222
-        key = "postnumber"
-        s = s.withColumnRenamed("comment_id", key)
-        cond = F.date_format(F.to_date("timestamp"), "yyyy-MM-dd").between(start, end)
-    elif platform == "youtube":  # lexical BETWEEN, app.py:152,244
-        key = "comment_id"
-        cond = F.col("comment_time").between(f"{start}T00:00:00Z", f"{end}T23:59:59Z")
-    else:  # native ts BETWEEN, app.py:109,175,198,265
-        key = "comment_id"
-        cond = F.col("created_utc").between(
-            F.lit(start).cast("timestamp"), F.lit(end).cast("timestamp")
-        )
-    return (
-        s.join(r, key, "inner").filter(cond).groupBy(col).agg(F.count("*").alias("count"))
-    )
-
-
+# 5-12 (app.py:105-265): per-platform sentiment / hate distributions
 def sentiment_distribution(spark, sf_dir, platform, start=DEFAULT_START, end=DEFAULT_END):
-    return _dist(spark, sf_dir, platform, "sentiment", start, end)
+    return _dist_of(page_summary(spark, sf_dir, start, end), platform, "sentiment")
 
 
 def hate_distribution(spark, sf_dir, platform, start=DEFAULT_START, end=DEFAULT_END):
-    return _dist(spark, sf_dir, platform, "is_hate_speech", start, end)
+    return _dist_of(page_summary(spark, sf_dir, start, end), platform, "is_hate_speech")
 
 
 # 13 (app.py:44-59): the manual daily-count loop as one aggregation.
-# Works for every platform by normalizing its time encoding to a day.
+# Every encoding's day is the date of `ts`.
 def daily_counts(spark, sf_dir, platform="politics", start=DEFAULT_START, end=DEFAULT_END):
-    r = raw_comments(spark, sf_dir, platform)
-    day = day_expr(platform)
     return (
-        r.filter((day >= F.lit(start).cast("date")) & (day < F.lit(end).cast("date")))
-        .groupBy(day.alias("day"))
+        _in_window(spark, sf_dir, platform, start, end)
+        .groupBy(F.to_date("ts").alias("day"))
         .agg(F.count("*").alias("count"))
         .orderBy("day")
     )
@@ -173,12 +181,18 @@ def daily_counts(spark, sf_dir, platform="politics", start=DEFAULT_START, end=DE
 
 def all_routes(spark, sf_dir, start=DEFAULT_START, end=DEFAULT_END) -> dict[str, DataFrame]:
     """Every dashboard route, keyed like the Flask endpoints — the
-    drop-in surface for a reference user."""
+    drop-in surface for a reference user. The page's summary is
+    computed once, by the first route collected, and the twelve count
+    and distribution routes read it. Adaptive execution is off while
+    the summary is checkpointed: it would run the summary's shuffle
+    stages right there, and building a page must run no job."""
+    with scoped_conf(spark, "spark.sql.adaptive.enabled", "false"):
+        summary = compute_once(page_summary(spark, sf_dir, start, end))
     out = {"politics_comments": politics_comments(spark, sf_dir, start, end)}
     for p in PLATFORMS:
-        out[f"count_{p}"] = platform_count(spark, sf_dir, p, start, end)
-        out[f"sentiment_{p}"] = sentiment_distribution(spark, sf_dir, p, start, end)
-        out[f"hate_{p}"] = hate_distribution(spark, sf_dir, p, start, end)
+        out[f"count_{p}"] = _count_of(summary, p)
+        out[f"sentiment_{p}"] = _dist_of(summary, p, "sentiment")
+        out[f"hate_{p}"] = _dist_of(summary, p, "is_hate_speech")
     out["daily_politics"] = daily_counts(spark, sf_dir, "politics", start, end)
     return out
 
@@ -262,85 +276,30 @@ def dash_politics_comments(spark: SparkSession, sf_dir: str) -> DataFrame:
     return politics_comments(spark, sf_dir)
 
 
-@register("dash_count_reddit", oracle=_count_oracle("reddit"))
-def dash_count_reddit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Route 2 (`app.py:70`): reddit volume count over native
-    timestamps."""
-    return platform_count(spark, sf_dir, "reddit")
+def _register_platform_routes() -> None:
+    """Routes 2-12 at the default window, one registration per family
+    and platform, in the order count, sentiment, hate x reddit, chan,
+    youtube, politics. Reference lines (`app.py`): counts 70, 71 (DATE()
+    cast over the display TEXT), 72 (lexical compare on ISO TEXT),
+    70/175; sentiment 109, 105, 152, 175; hate 198, 222, 244, 265."""
+
+    def query(route, platform):
+        def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return route(spark, sf_dir, platform)
+
+        return fn
+
+    for family, route, col in (
+        ("count", platform_count, None),
+        ("sentiment", sentiment_distribution, "sentiment"),
+        ("hate", hate_distribution, "is_hate_speech"),
+    ):
+        for p in PLATFORMS:
+            oracle = _count_oracle(p) if col is None else _dist_oracle(p, col)
+            register(f"dash_{family}_{p}", oracle=oracle)(query(route, p))
 
 
-@register("dash_count_chan", oracle=_count_oracle("chan"))
-def dash_count_chan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Route 3 (`app.py:71`): 4chan volume count — DATE() cast over the
-    display-TEXT timestamp."""
-    return platform_count(spark, sf_dir, "chan")
-
-
-@register("dash_count_youtube", oracle=_count_oracle("youtube"))
-def dash_count_youtube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Route 4 (`app.py:72`): YouTube volume count — lexical compare on
-    ISO-8601 TEXT."""
-    return platform_count(spark, sf_dir, "youtube")
-
-
-@register("dash_count_politics", oracle=_count_oracle("politics"))
-def dash_count_politics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Route 2 politics variant (`app.py:70,175`): volume count over
-    native timestamps."""
-    return platform_count(spark, sf_dir, "politics")
-
-
-@register("dash_sentiment_reddit", oracle=_dist_oracle("reddit", "sentiment"))
-def dash_sentiment_reddit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Route 6 (`app.py:109`): reddit sentiment distribution."""
-    return sentiment_distribution(spark, sf_dir, "reddit")
-
-
-@register("dash_sentiment_chan", oracle=_dist_oracle("chan", "sentiment"))
-def dash_sentiment_chan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Route 5 (`app.py:105`): 4chan sentiment distribution — the
-    TEXT-timestamp cast quirk (`TO_CHAR(timestamp::date, ...)
-    BETWEEN`) preserved end to end."""
-    return sentiment_distribution(spark, sf_dir, "chan")
-
-
-@register("dash_sentiment_youtube", oracle=_dist_oracle("youtube", "sentiment"))
-def dash_sentiment_youtube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Route 7 (`app.py:152`): YouTube sentiment distribution — lexical
-    ISO-TEXT BETWEEN."""
-    return sentiment_distribution(spark, sf_dir, "youtube")
-
-
-@register("dash_sentiment_politics", oracle=_dist_oracle("politics", "sentiment"))
-def dash_sentiment_politics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Route 8 (`app.py:175`): politics sentiment distribution."""
-    return sentiment_distribution(spark, sf_dir, "politics")
-
-
-@register("dash_hate_reddit", oracle=_dist_oracle("reddit", "is_hate_speech"))
-def dash_hate_reddit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Route 9 (`app.py:198`): reddit hate-speech distribution."""
-    return hate_distribution(spark, sf_dir, "reddit")
-
-
-@register("dash_hate_chan", oracle=_dist_oracle("chan", "is_hate_speech"))
-def dash_hate_chan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Route 10 (`app.py:222`): 4chan hate-speech distribution — TEXT
-    timestamp cast quirk."""
-    return hate_distribution(spark, sf_dir, "chan")
-
-
-@register("dash_hate_youtube", oracle=_dist_oracle("youtube", "is_hate_speech"))
-def dash_hate_youtube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Route 11 (`app.py:244`): YouTube hate-speech distribution — the
-    lexical ISO-TEXT BETWEEN quirk preserved end to end."""
-    return hate_distribution(spark, sf_dir, "youtube")
-
-
-@register("dash_hate_politics", oracle=_dist_oracle("politics", "is_hate_speech"))
-def dash_hate_politics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Route 12 (`app.py:265`): politics hate-speech distribution."""
-    return hate_distribution(spark, sf_dir, "politics")
+_register_platform_routes()
 
 
 @register(
@@ -365,11 +324,16 @@ def dash_daily_politics(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _summary_oracle(start: str = DEFAULT_START, end: str = DEFAULT_END) -> str:
     """Replays each route family's predicate over the platform's OWN
     time encoding (TEXT casts and lexical compares included), so the
-    one-pass operator's ts-derived predicates are independently
-    cross-checked."""
+    summary's ts-native predicates are independently cross-checked.
+    As in the route oracles, count cells count the raw rows
+    (`_count_oracle`) and distribution cells count the enriched-JOIN-
+    raw rows (`_dist_oracle`), so a redelivered id weighs the same here
+    as in the routes."""
     branches = []
     for p in PLATFORMS:
         raw = _raw_sql(p)
+        # the raw table plus each row's own enrichment (count cells)
+        raw_enriched = raw.replace(" FROM events", f", {_ENRICH_SQL} FROM events", 1)
         if p == "chan":
             key = "postnumber"
             in_count = (
@@ -401,109 +365,39 @@ def _summary_oracle(start: str = DEFAULT_START, end: str = DEFAULT_END) -> str:
                 f"AND TIMESTAMP '{end} 00:00:00'"
             )
         branches.append(
-            f"SELECT '{p}' AS platform, an.sentiment, an.is_hate_speech, "
-            f"({in_count}) AS in_count, ({in_dist}) AS in_dist "
+            f"SELECT '{p}' AS platform, r.sentiment, r.is_hate_speech, 1 AS c, 0 AS d "
+            f"FROM ({raw_enriched}) r WHERE {in_count}"
+        )
+        branches.append(
+            f"SELECT '{p}' AS platform, an.sentiment, an.is_hate_speech, 0 AS c, 1 AS d "
             f"FROM ({raw}) r JOIN (SELECT CAST(event_id AS VARCHAR) AS {key}, "
             f"{_ENRICH_SQL} FROM events WHERE event_type='{PLATFORMS[p]}') an "
-            f"USING ({key})"
+            f"USING ({key}) WHERE {in_dist}"
         )
     u = " UNION ALL ".join(branches)
     return (
         f"WITH plat AS ({u}) "
         "SELECT platform, sentiment, is_hate_speech, "
-        "CAST(sum(CASE WHEN in_count THEN 1 ELSE 0 END) AS BIGINT) AS n_count_window, "
-        "CAST(sum(CASE WHEN in_dist THEN 1 ELSE 0 END) AS BIGINT) AS n_dist_window "
-        "FROM plat WHERE in_count OR in_dist "
-        "GROUP BY GROUPING SETS ((platform), (platform, sentiment), "
+        "CAST(sum(c) AS BIGINT) AS n_count_window, "
+        "CAST(sum(d) AS BIGINT) AS n_dist_window "
+        "FROM plat GROUP BY GROUPING SETS ((platform), (platform, sentiment), "
         "(platform, is_hate_speech))"
     )
 
 
 @register("dash_summary_onepass", oracle=_summary_oracle())
 def dash_summary_onepass(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ENTIRE per-platform dashboard in ONE query: all four count
-    routes and all eight distribution routes (`app.py:64-265`) as a
-    single scan + single GROUPING SETS aggregate — the columnar-
-    engine answer to the reference serving 12 separate SQL round
-    trips per page load. Grouping-set rows: (platform) carries the
-    count-route number in n_count_window; (platform, sentiment) and
-    (platform, is_hate_speech) carry the distribution numbers in
-    n_dist_window.
-
-    The routes' time predicates differ per platform AND per family
-    (half-open vs BETWEEN, TEXT casts, lexical ISO compares), so the
-    one-pass derives each as a ts-native expression: the lexical
-    'YYYY-MM-DDTHH:MM:SSZ' compare truncates to seconds, making
-    `comment_time <= 'endT23:59:59Z'` ⟺ `ts < end+1 day` and
-    `comment_time < 'endT00:00:00Z'` ⟺ `ts < end` — equivalences the
-    oracle PROVES by replaying the original TEXT predicates over the
-    encoded columns. pytest additionally reconciles every cell
-    against the 12 individual routes.
-
-    Scale shape: one events scan (ts, event_type, value pruned), one
-    Expand(3) + hash aggregate — versus 12 scans and 12 aggregates;
-    at dashboard QPS this is the difference between a cached
-    one-job summary and hammering the warehouse."""
-    start, end = DEFAULT_START, DEFAULT_END
-    e = load(spark, sf_dir, "events")
-    platform = (
-        F.when(F.col("event_type") == "click", "reddit")
-        .when(F.col("event_type") == "error", "chan")
-        .when(F.col("event_type") == "purchase", "youtube")
-        .when(F.col("event_type") == "signup", "politics")
-    )
-    s_ts = F.lit(start).cast("timestamp")
-    e_ts = F.lit(end).cast("timestamp")
-    e_next = F.date_add(F.lit(end).cast("date"), 1).cast("timestamp")
-    sentiment = (
-        F.when(F.col("value") >= 100, "positive")
-        .when(F.col("value") < 30, "negative")
-        .otherwise("neutral")
-    )
-    native_count = (F.col("ts") >= s_ts) & (F.col("ts") < e_ts)
-    in_count = (
-        F.when(
-            F.col("platform") == "chan",
-            (F.to_date("ts") >= F.lit(start).cast("date"))
-            & (F.to_date("ts") < F.lit(end).cast("date")),
-        ).otherwise(native_count)  # native ts AND the lexical-ISO form
-    )
-    in_dist = (
-        F.when(
-            F.col("platform") == "chan",
-            F.to_date("ts").between(
-                F.lit(start).cast("date"), F.lit(end).cast("date")
-            ),
-        )
-        .when(
-            F.col("platform") == "youtube",
-            (F.col("ts") >= s_ts) & (F.col("ts") < e_next),
-        )
-        .otherwise((F.col("ts") >= s_ts) & (F.col("ts") <= e_ts))
-    )
-    d = (
-        e.filter(F.col("event_type").isin(*PLATFORMS.values()))
-        .select(
-            platform.alias("platform"),
-            sentiment.alias("sentiment"),
-            (F.col("value") >= 150).alias("is_hate_speech"),
-            "ts",
-        )
-        .select(
-            "platform",
-            "sentiment",
-            "is_hate_speech",
-            in_count.alias("in_count"),
-            in_dist.alias("in_dist"),
-        )
-        .filter(F.col("in_count") | F.col("in_dist"))
-    )
-    return d.groupingSets(
-        [["platform"], ["platform", "sentiment"], ["platform", "is_hate_speech"]],
+    """The ENTIRE per-platform dashboard in ONE query: `page_summary`
+    at the default window — all four count routes and all eight
+    distribution routes (`app.py:64-265`) from one scan, where the
+    reference serves 12 SQL round trips per page load. Grouping-set
+    rows: (platform) carries the count-route number in n_count_window;
+    (platform, sentiment) and (platform, is_hate_speech) carry the
+    distribution numbers in n_dist_window."""
+    return page_summary(spark, sf_dir).select(
         "platform",
         "sentiment",
         "is_hate_speech",
-    ).agg(
-        F.sum(F.col("in_count").cast("long")).alias("n_count_window"),
-        F.sum(F.col("in_dist").cast("long")).alias("n_dist_window"),
+        F.col("n_count").alias("n_count_window"),
+        F.col("n_dist").alias("n_dist_window"),
     )

@@ -24,6 +24,7 @@ these operators are the north-star extension grounded in the
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -578,13 +579,16 @@ def _shingle_pair_intersections(spark: SparkSession, sf_dir: str):
     four self-joins with one."""
     sh = _shingles_pinned(spark, sf_dir)
 
+    @functools.cache
     def _idf_weights() -> DataFrame:
         """Per-shingle idf-milli weights — `ext_dedup_weighted_jaccard`'s
         exactness device (round(ln(N/df)*1000) as BIGINT), computed
         inside the pin builds below so the ONE shingle self-join
         yields both the plain count and the weighted intersection
-        (r14, verdict r13 item 5). compute_once: the SAME weights
-        frame feeds the sizes build and the intersection build."""
+        (r14, verdict r13 item 5). Planned only when a pin builds, and
+        once per call: the SAME compute_once weights frame feeds the
+        sizes build and the intersection build (they normally trigger
+        in the same first invocation, so it materializes once)."""
         n = _load_docs(spark, sf_dir).agg(F.count("*").alias("nd"))
         dfq = sh.groupBy("s").agg(F.count("*").alias("df"))
         return compute_once(
@@ -598,11 +602,6 @@ def _shingle_pair_intersections(spark: SparkSession, sf_dir: str):
             )
         )
 
-    # ONE weights frame for both pin builds below (they normally
-    # trigger in the same first invocation, so the compute_once
-    # materializes once)
-    w = _idf_weights()
-
     # the per-doc size frame is a full pass over the pinned shingle
     # relation — pinned too since r13 (four consumers re-ran it).
     # Since r14 it also carries the per-doc idf-weight total `tw`
@@ -612,7 +611,7 @@ def _shingle_pair_intersections(spark: SparkSession, sf_dir: str):
     # the whole weighted-postings relation per invocation.
     def _build_sizes() -> DataFrame:
         return (
-            sh.join(w, "s")
+            sh.join(_idf_weights(), "s")
             .groupBy("doc_id")
             .agg(F.count("*").alias("n"), F.sum("iw").alias("tw"))
         )
@@ -625,7 +624,7 @@ def _shingle_pair_intersections(spark: SparkSession, sf_dir: str):
         # (i — the multiset is unchanged by the multiplicity-1 idf
         # join) and the idf-weighted intersection (wi = Σ iw over
         # shared shingles, exact BIGINT — the oracle's `sum(w.iw)`)
-        a = sh.join(w, "s").alias("a")
+        a = sh.join(_idf_weights(), "s").alias("a")
         b = sh.alias("b")
         return (
             a.join(

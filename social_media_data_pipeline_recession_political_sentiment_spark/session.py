@@ -51,10 +51,12 @@ ENGINE_CONFS: dict[str, str] = {
 # query per pass for values that were already set (r14 optimization
 # pass, guide §1/§5: pure driver-side overhead). Keyed by applicationId
 # (unique per SparkContext instance), so a fresh driver session is
-# always configured on its first query. Deliberate trade-off: a caller
-# that mutates one of these confs mid-session is no longer re-pinned on
-# the next query call — no harness path does that (the one scoped
-# mutation, scoped_shuffle_partitions, restores what it changed).
+# always configured on its first query. An app joins the set only once
+# every runtime-modifiable conf was set without error; a failed set is
+# retried on the next call. Deliberate trade-off: a caller that mutates
+# one of these confs mid-session is no longer re-pinned on the next
+# query call — no harness path does that (the scoped mutations,
+# scoped_conf and scoped_shuffle_partitions, restore what they changed).
 _CONFS_APPLIED: set = set()
 
 
@@ -62,22 +64,39 @@ def apply_engine_confs(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine confs to an existing session.
 
     Used when the driver hands us a session it built (driver contract:
-    ``entry(spark)``). Only runtime-mutable confs are set here.
-    Idempotent per session: subsequent calls on an already-configured
-    applicationId return immediately (see _CONFS_APPLIED)."""
+    ``entry(spark)``). Static confs cannot change on a running session
+    and are skipped. Idempotent per session: once every modifiable conf
+    was set, later calls on that applicationId return immediately (see
+    _CONFS_APPLIED)."""
     app = spark.sparkContext.applicationId
     if app in _CONFS_APPLIED:
         return spark
+    ok = True
     for k, v in ENGINE_CONFS.items():
+        if not spark.conf.isModifiable(k):
+            continue
         try:
             spark.conf.set(k, v)
         except Exception:
-            pass  # static conf on a running session -- keep going
-    _CONFS_APPLIED.add(app)
+            ok = False  # keep setting the rest; the next call retries
+    if ok:
+        _CONFS_APPLIED.add(app)
     return spark
 
 
 @contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str):
+    """Temporarily set one runtime conf of the session (restored on
+    exit). The conf is session-wide, so queries planned on other
+    threads meanwhile see the value too."""
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
 def scoped_shuffle_partitions(spark: SparkSession, n: int):
     """Temporarily pin `spark.sql.shuffle.partitions` (restored on exit).
 
@@ -87,13 +106,7 @@ def scoped_shuffle_partitions(spark: SparkSession, n: int):
     micro-batch. At cluster scale the caller sizes `n` to key
     cardinality/throughput instead of inheriting the batch default.
     """
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+    return scoped_conf(spark, "spark.sql.shuffle.partitions", str(n))
 
 
 def get_session(

@@ -3,6 +3,8 @@ surface): every route runs, and the per-encoding quirks hold."""
 
 from __future__ import annotations
 
+import pytest
+
 from social_media_data_pipeline_recession_political_sentiment_spark import dashboard
 from tests.conftest import SF_SMOKE
 
@@ -93,3 +95,179 @@ def test_summary_onepass_reconciles_all_twelve_routes(spark):
         hate = {r.is_hate_speech: r["count"] for r in qs[f"dash_hate_{p}"](spark, SF_SMOKE).collect()}
         for h, n in hate.items():
             assert cells[(p, None, h)][1] == n, (p, h)
+
+
+# ------------------------------------------- written edge-case fixture
+# Every window edge of every fixture window, for every platform: a row
+# sub-second before start, at start, just before end, at end 00:00:00,
+# at end 23:59:59, sub-second after it and at the next midnight. Each
+# edge row's id is also redelivered unchanged, redelivered with a
+# changed payload (another time and value), or NULL; `value` cycles
+# through every sentiment and hate bucket and NULL.
+WINDOWS = [
+    ("2024-01-10", "2024-01-11"),  # 1 day
+    ("2024-01-05", "2024-01-25"),  # 20 days, the default window
+    ("2024-01-20", "2024-02-01"),  # ends on a month boundary
+    ("2024-03-01", "2024-03-02"),  # no rows: counts are 0, dists empty
+]
+
+
+def _write_fixture(path) -> str:
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    edges = [
+        dt.timedelta(seconds=-0.5),
+        dt.timedelta(0),
+        dt.timedelta(microseconds=-1),  # from here on relative to end
+        dt.timedelta(days=0),  # end 00:00:00
+        dt.timedelta(hours=23, minutes=59, seconds=59),
+        dt.timedelta(hours=23, minutes=59, seconds=59.5),
+        dt.timedelta(days=1),
+    ]
+    values = [10.0, 50.0, 120.0, 160.0, None]
+    rows = []  # (event_id, ts, event_type, value)
+    n = 0
+    for et in dashboard.PLATFORMS.values():
+        for start, end in WINDOWS[:3]:
+            s, e = dt.datetime.fromisoformat(start), dt.datetime.fromisoformat(end)
+            for i, d in enumerate(edges):
+                ts = (s if i < 2 else e) + d
+                n += 1
+                v = values[n % len(values)]
+                kind = n % 4
+                if kind == 3:  # NULL id
+                    rows.append((None, ts, et, v))
+                    continue
+                rows.append((n, ts, et, v))
+                if kind == 1:  # redelivered unchanged
+                    rows.append((n, ts, et, v))
+                elif kind == 2:  # same id, changed time and payload
+                    rows.append((n, ts + dt.timedelta(days=3), et, values[(n + 2) % 5]))
+    rows.append((1, dt.datetime(2024, 1, 12), "error", 120.0))  # a click id, as 4chan's
+    rows.append((n + 1, None, "click", 120.0))  # NULL ts
+    rows.append((n + 2, dt.datetime(2024, 1, 12), "other", 120.0))  # no platform
+    cols = list(zip(*rows))
+    table = pa.table(
+        {
+            "event_id": pa.array(cols[0], pa.int64()),
+            "ts": pa.array(cols[1], pa.timestamp("us")),
+            "user_id": pa.array([1] * len(rows), pa.int64()),
+            "event_type": pa.array(cols[2], pa.string()),
+            "value": pa.array(cols[3], pa.float64()),
+            "props": pa.array([None] * len(rows), pa.string()),
+        }
+    )
+    pq.write_table(table, f"{path}/events.parquet")
+    return str(path)
+
+
+@pytest.fixture(scope="module")
+def edge_dir(tmp_path_factory):
+    return _write_fixture(tmp_path_factory.mktemp("dash_edges"))
+
+
+def _norm(cols, rows):
+    """Order-insensitive (column names, rows) with values as strings."""
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    return (
+        [cols[i] for i in order],
+        sorted(tuple("NULL" if r[i] is None else str(r[i]) for i in order) for r in rows),
+    )
+
+
+def _route_oracle(route: str, start: str, end: str) -> str:
+    if route == "politics_comments":
+        return (
+            f"WITH raw AS ({dashboard._raw_sql('politics')}) SELECT created_utc "
+            f"FROM raw WHERE created_utc >= TIMESTAMP '{start} 00:00:00' "
+            f"AND created_utc < TIMESTAMP '{end} 00:00:00'"
+        )
+    if route == "daily_politics":
+        return (
+            "SELECT CAST(date_trunc('day', ts) AS DATE) AS day, count(*) AS count "
+            "FROM events WHERE event_type = 'signup' "
+            f"AND ts >= TIMESTAMP '{start} 00:00:00' "
+            f"AND ts < TIMESTAMP '{end} 00:00:00' GROUP BY day"
+        )
+    kind, platform = route.split("_", 1)
+    if kind == "count":
+        return dashboard._count_oracle(platform, start, end)
+    col = "sentiment" if kind == "sentiment" else "is_hate_speech"
+    return dashboard._dist_oracle(platform, col, start, end)
+
+
+def test_routes_match_oracles_on_duplicate_and_null_keys(spark, edge_dir):
+    """Every `all_routes` route equals its DuckDB oracle over each
+    window of the edge fixture, and `dash_summary_onepass` equals
+    `_summary_oracle`: the one-scan page reproduces the reference's
+    self-join (a redelivered id counts once per in-window copy, a NULL
+    id never joins) and its three time encodings at every edge."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.sql("SET TimeZone = 'UTC'")
+    con.sql(f"CREATE VIEW events AS SELECT * FROM '{edge_dir}/events.parquet'")
+
+    def want(sql):
+        res = con.sql(sql)
+        return _norm(list(res.columns), res.fetchall())
+
+    for start, end in WINDOWS:
+        for route, df in dashboard.all_routes(spark, edge_dir, start, end).items():
+            got = _norm(df.columns, df.collect())
+            assert got == want(_route_oracle(route, start, end)), (route, start, end)
+    summary = dashboard.dash_summary_onepass(spark, edge_dir)
+    assert _norm(summary.columns, summary.collect()) == want(dashboard._summary_oracle())
+    con.close()
+
+
+def _job_count(spark, group: str) -> int:
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def test_all_routes_builds_without_a_job(spark):
+    """Building a page only plans it; the first route collected runs
+    the page summary."""
+    dashboard.all_routes(spark, SF_SMOKE)  # warm the table's load memo
+    sc = spark.sparkContext
+    sc.setJobGroup("dash_build_lazy", "all_routes build")
+    try:
+        routes = dashboard.all_routes(spark, SF_SMOKE, "2024-01-03", "2024-01-09")
+        assert _job_count(spark, "dash_build_lazy") == 0
+        routes["count_reddit"].collect()
+        assert _job_count(spark, "dash_build_lazy") > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_page_summaries_are_released_after_gc(spark):
+    """Each page's summary is a compute_once checkpoint; once its
+    routes are dropped, a GC releases its cached partitions, so a long
+    session's storage stays bounded."""
+    import gc
+    import time
+
+    sc = spark.sparkContext
+
+    def cached() -> int:
+        return sum(i.numCachedPartitions() for i in sc._jsc.sc().getRDDStorageInfo())
+
+    def load_page(i: int) -> None:
+        for df in dashboard.all_routes(spark, SF_SMOKE, f"2024-01-{1 + i % 20:02d}", "2024-01-25").values():
+            df.collect()
+
+    gc.collect()
+    before = cached()
+    for i in range(24):
+        load_page(i)
+    for _ in range(40):
+        gc.collect()
+        sc._jvm.System.gc()
+        time.sleep(0.25)
+        if cached() <= before + 3:
+            break
+    assert cached() <= before + 3

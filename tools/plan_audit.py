@@ -360,11 +360,13 @@ AUDIT = {
         "no new quadratic stage rides on top of the bucketed miner",
     ),
     "dash_sentiment_chan": (
-        "the an_* side and raw side are two projections of the SAME "
-        "events scan joined on the key; one side broadcast",
-        "the dashboard's enriched-JOIN-raw shape keeps the TEXT "
-        "timestamp cast out of the scan (bronze fidelity) while the "
-        "join stays broadcast at dashboard-filter cardinalities",
+        "a filter + project over the page summary: ONE events "
+        "FileScan, a Window sum over (platform, event_id) and one "
+        "Expand(3) + HashAggregate; no join",
+        "the reference's enriched-JOIN-raw on the key becomes a "
+        "per-key window weight over the same scan, so a redelivered "
+        "id weighs as in the join without a second scan or a shuffle "
+        "of the joined rows",
     ),
     "sink_batched_commit": (
         "parallel parquet write with maxRecordsPerFile, then a "
@@ -711,9 +713,9 @@ AUDIT = {
         "second pass over the payloads; the metric is map-side",
     ),
     "dash_summary_onepass": (
-        "ONE FileScan (ts, event_type, value ReadSchema) feeding "
-        "Expand(3) + a single HashAggregate with partial "
-        "aggregation",
+        "ONE FileScan (event_id, ts, event_type, value ReadSchema) "
+        "feeding a Window sum over (platform, event_id), then "
+        "Expand(3) + a single HashAggregate with partial aggregation",
         "twelve dashboard routes collapse to one scan and one "
         "shuffle; the expand factor is |sets| = 3, not 2^n",
     ),
