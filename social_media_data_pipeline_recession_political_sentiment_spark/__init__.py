@@ -15,7 +15,7 @@ Layout:
     registry    -- query + DuckDB-oracle registration (driver contract)
     functions/  -- scalar expression layers (text, time, json)
     operators/  -- relational core, dedup, similarity, text analysis
-    enrich/     -- sentiment / hate-speech enrichment (pandas UDFs)
+    enrich/     -- sentiment / hate-speech scorers, the an_* gold table
     sources/    -- batch/streaming source adapters (csv, json, parquet)
     streaming/  -- Structured Streaming jobs (dedup, windows, sessions)
     plans/      -- medallion pipeline composition + maintenance jobs

@@ -1,110 +1,90 @@
-"""Hate-speech enrichment (SURVEY §2.8 `udf_hatespeech_api`).
+"""Hate-speech enrichment (SURVEY §2.8 `udf_hatespeech_api`) and the
+an_* gold table built from both enrichment halves.
 
 The reference POSTs every comment to the ModerateHateSpeech REST API,
 one HTTP round-trip per row, skip-on-error (ref:
 `Data Analysis/Reddit_4chan_Analysis.py:18-53`, `Youtube_Analysis.py:
-18-53`). The engine shape here is ``mapInPandas``: one scorer
-(HTTP session in the real deployment) per partition, whole Arrow
-batches scored at once, client-side batching replacing per-row
-round-trips.
-
-The scorer is pluggable. Tests and the oracle gate use
-``KeywordScorer`` — a deterministic, SQL-mirrorable stub — because
-correctness tests never call external APIs (SURVEY §5 hermeticity).
-A real ``ApiScorer`` would keep a requests.Session per partition and
-rate-limit client-side; it is stubbed behind NotImplementedError
-since this environment has no network.
+18-53`). Correctness tests never call external APIs (SURVEY §5
+hermeticity), so the engine scores with a deterministic keyword
+stand-in for the API's (class, confidence) response. It is a plain
+Column expression over the same term counts as the sentiment lexicon
+— no Python stage, and exactly what the oracles write in SQL.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..functions.text import clean_comment, hate_flag
 from ..registry import register
-
-CONF_THRESHOLD = 0.9  # strict >, ref: Reddit_4chan_Analysis.py:19,42
-
-
-class KeywordScorer:
-    """Deterministic stand-in for the ModerateHateSpeech API response:
-    (class, confidence) per text. confidence = min(0.99, 0.2*n_dup +
-    0.1*n_hash) over substring counts; class 'flag' iff conf >= 0.5."""
-
-    def score(self, texts: pd.Series) -> pd.DataFrame:
-        conf = np.minimum(0.99, 0.2 * texts.str.count("dup") + 0.1 * texts.str.count("hash"))
-        clazz = np.where(conf >= 0.5, "flag", "ok")
-        return pd.DataFrame({"hs_class": clazz, "hs_conf": conf})
+from .sentiment import enrich_sentiment, term_count
 
 
-class ApiScorer:
-    """Per-partition HTTP client against the ModerateHateSpeech API
-    (ref: `Reddit_4chan_Analysis.py:18-53`). Deliberately unbuilt in
-    this hermetic environment — the engine plumbing (partition-level
-    batching, session reuse, rate limiting) is what `mapInPandas`
-    provides; the transport is deployment-specific."""
-
-    def score(self, texts: pd.Series) -> pd.DataFrame:
-        raise NotImplementedError("external API access is out of scope for tests")
-
-
-def enrich_hatespeech(df: DataFrame, text_col: str = "text", scorer_cls=KeywordScorer) -> DataFrame:
-    """Attach (is_hate_speech, hate_speech_confidence) — the an_*
-    table's moderation half (ref: `Reddit_4chan_Analysis.py:65-77`,
+def enrich_hatespeech(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Attach (hs_class, hate_speech_confidence, is_hate_speech) — the
+    an_* table's moderation half (ref: `Reddit_4chan_Analysis.py:65-77`,
     flag rule at `:42-45`: class=='flag' AND confidence > 0.9).
 
-    STATED DELTA from the reference (r8 ADVICE): the reference's
-    `hs_check_comment` (`Reddit_4chan_Analysis.py:54`) returns
-    (False, None) for any unscorable comment — it folds "no
-    verdict" into is_hate_speech=false. This engine instead reads
-    NULL (class, confidence, flag) for a NULL comment, the Kleene
-    three-valued contract the r8 NULL sweep pinned cross-engine: a
-    downstream `is_hate_speech = false` filter here EXCLUDES
-    NULL-text rows where the reference would include them. Chosen
-    deliberately — "no text, no moderation verdict" keeps
-    unscorable distinguishable from scored-clean; consumers that
-    want the reference fold apply coalesce(is_hate_speech, false).
+    confidence = min(0.99, 0.2*n_dup + 0.1*n_hash); class 'flag' iff
+    confidence >= 0.5, else 'ok'. The 0.2/0.1 weights are ``F.lit``
+    doubles, matching the oracles' CAST(... AS DOUBLE).
+
+    STATED DELTA from the reference: the reference's `hs_check_comment`
+    (`Reddit_4chan_Analysis.py:54`) returns (False, None) for any
+    unscorable comment — it folds "no verdict" into
+    is_hate_speech=false. This engine instead reads NULL (class,
+    confidence, flag) for a NULL comment, the Kleene three-valued
+    contract pinned cross-engine: a downstream `is_hate_speech = false`
+    filter here EXCLUDES NULL-text rows where the reference would
+    include them. "No text, no moderation verdict" keeps unscorable
+    distinguishable from scored-clean; consumers that want the
+    reference fold apply coalesce(is_hate_speech, false). The
+    ``isNotNull`` guard is load-bearing: Spark's ``least`` skips NULL
+    operands, so an unguarded NULL comment would read 0.99.
     """
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    out_schema = f"{fields}, hs_class string, hs_conf double"
-
-    def score_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        scorer = scorer_cls()  # one per partition: session/model init amortized
-        for pdf in batches:
-            scores = scorer.score(pdf[text_col].fillna(""))
-            yield pd.concat([pdf.reset_index(drop=True), scores], axis=1)
-
-    scored = df.mapInPandas(score_partition, schema=out_schema)
-    # NULL pin (r8 sweep): no text, no moderation verdict — a NULL
-    # comment reads NULL (class, confidence, flag) on both engines.
-    # The scorer still runs on fillna('') batches (mapInPandas row
-    # alignment); the mask re-asserts the contract after the fact.
-    scored = scored.withColumn(
-        "hs_class", F.when(F.col(text_col).isNotNull(), F.col("hs_class"))
-    ).withColumn(
-        "hs_conf", F.when(F.col(text_col).isNotNull(), F.col("hs_conf"))
+    text = F.col(text_col)
+    score = F.lit(0.2) * term_count(text, "dup") + F.lit(0.1) * term_count(text, "hash")
+    conf = F.when(text.isNotNull(), F.least(F.lit(0.99), score))
+    clazz = F.when(conf >= 0.5, "flag").when(conf < 0.5, "ok")
+    return df.withColumns(
+        {
+            "hs_class": clazz,
+            "hate_speech_confidence": conf,
+            "is_hate_speech": hate_flag(clazz, conf),
+        }
     )
-    return scored.withColumn(
+
+
+def an_table(comments: DataFrame) -> DataFrame:
+    """(comment_id, text) comments → the an_* analysis table (ref:
+    `Reddit_4chan_Analysis.py:65-77`: comment_id, original_comment,
+    cleaned_comment, is_hate_speech, hate_speech_confidence,
+    sentiment, sentiment_score). Every column is an expression over
+    the text, so the whole table is one narrow projection, and a
+    consumer that reads a subset of it plans only that subset."""
+    out = enrich_sentiment(enrich_hatespeech(comments))
+    return out.select(
+        "comment_id",
+        F.col("text").alias("original_comment"),
+        clean_comment(F.col("text")).alias("cleaned_comment"),
         "is_hate_speech",
-        (F.col("hs_class") == "flag") & (F.col("hs_conf") > CONF_THRESHOLD),
-    ).withColumnRenamed("hs_conf", "hate_speech_confidence")
+        "hate_speech_confidence",
+        "sentiment",
+        "sentiment_score",
+    )
 
 
 @register(
     "udf_hatespeech_api",
     # 0.2/0.1 MUST be DOUBLE literals: DuckDB would otherwise do exact
-    # DECIMAL arithmetic (0.2+0.1 = 0.3) while Spark/NumPy produce the
+    # DECIMAL arithmetic (0.2+0.1 = 0.3) while Spark produces the
     # IEEE double 0.30000000000000004 — a value-hash mismatch that only
     # surfaces on rows with that keyword mix (seen at sf0.1)
-    # the outer CASE WHEN text IS NULL: no text, no verdict (r8 NULL
-    # sweep) — without it DuckDB's least() SKIPS the NULL operand and
-    # reads 0.99 where Spark's masked column reads NULL
+    # the outer CASE WHEN text IS NULL: no text, no verdict — without
+    # it DuckDB's least() SKIPS the NULL operand and reads 0.99 where
+    # Spark's guarded column reads NULL
     oracle=(
         "WITH c AS (SELECT doc_id, CASE WHEN text IS NULL THEN NULL ELSE "
         "least(CAST(0.99 AS DOUBLE), "
@@ -119,9 +99,9 @@ def enrich_hatespeech(df: DataFrame, text_col: str = "text", scorer_cls=KeywordS
     ),
 )
 def udf_hatespeech_api(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched hate-speech scoring through mapInPandas (ref:
+    """Hate-speech scoring of every document (ref:
     `Reddit_4chan_Analysis.py:116-137` — the per-row HTTP loop,
-    re-expressed as partition-level batch scoring)."""
+    re-expressed as one column expression over the scan)."""
     d = load(spark, sf_dir, "documents")
     return enrich_hatespeech(d).select("doc_id", "hate_speech_confidence", "is_hate_speech")
 
@@ -156,25 +136,9 @@ def udf_hatespeech_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def enrich_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full enrichment-stage output — the an_* analysis table
-    schema (ref: `Reddit_4chan_Analysis.py:65-77`: comment_id,
-    original_comment, cleaned_comment, is_hate_speech,
-    hate_speech_confidence, sentiment, sentiment_score), produced as
-    one declarative pipeline: expression-chain cleaning + pandas-UDF
-    sentiment + mapInPandas moderation. The reference does this with
-    1 HTTP + 2 DB round-trips per row; here it is three narrow
-    stages with zero shuffles."""
-    from ..functions.text import clean_comment
-    from .sentiment import enrich_sentiment
-
-    d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    out = enrich_sentiment(enrich_hatespeech(d))
-    return out.select(
-        F.col("doc_id").alias("comment_id"),
-        F.col("text").alias("original_comment"),
-        clean_comment(F.col("text")).alias("cleaned_comment"),
-        "is_hate_speech",
-        "hate_speech_confidence",
-        "sentiment",
-        "sentiment_score",
-    )
+    """The full enrichment-stage output — the an_* analysis table over
+    the documents. The reference does this with 1 HTTP + 2 DB
+    round-trips per row; here it is one narrow projection over the
+    scan with zero shuffles and no Python stage."""
+    d = load(spark, sf_dir, "documents")
+    return an_table(d.select(F.col("doc_id").alias("comment_id"), "text"))

@@ -3,17 +3,20 @@
 The reference scores every comment with VADER, re-instantiating
 ``SentimentIntensityAnalyzer`` on every call — a per-row cost bug
 (ref: `Data Analysis/Reddit_4chan_Analysis.py:145-163`,
-`Youtube_Analysis.py:143-161`). Here the scorer is an Arrow-batched
-**iterator-form pandas UDF**: the analyzer is built once per
-partition, then scores whole batches vectorized. That is the correct
-shape for any per-row NLP model at 100 TB — model init cost is
-amortized O(partitions), not O(rows).
+`Youtube_Analysis.py:143-161`).
 
-Hermeticity (SURVEY §5): real VADER needs the NLTK lexicon download
-(a network dependency, `Reddit_4chan_Analysis.py:11`); tests and the
-oracle gate use a deterministic lexicon stub with the same interface.
-If ``vaderSentiment`` is importable it is used when
-``use_vader=True`` is requested explicitly.
+The default scorer is a deterministic lexicon (hermetic, SURVEY §5:
+real VADER needs the NLTK lexicon download, a network dependency at
+`Reddit_4chan_Analysis.py:11`). It is a plain Column expression —
+weighted substring counts, JVM-side inside whole-stage codegen, no
+Python stage — and the same length/replace counting every oracle
+writes in SQL.
+
+``use_vader=True`` is the one Python scorer seam: VADER rules (the
+installed package if present, else the vendored-lexicon
+re-implementation) run as an Arrow-batched iterator pandas UDF that
+builds the analyzer once per partition, so model init costs
+O(partitions), not O(rows).
 """
 
 from __future__ import annotations
@@ -22,7 +25,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -30,26 +33,28 @@ from ..catalog import load
 from ..functions.text import sentiment_bucket
 from ..registry import register
 
-# Deterministic lexicon stub: term -> weight. Terms chosen from the
+# Deterministic lexicon: term -> weight. Terms chosen from the
 # synthetic corpus vocabulary; none is a substring of another vocab
 # word, so substring counting == token counting here.
 _POS = {"fast": 1.0, "big": 0.5}
 _NEG = {"slow": 1.0, "small": 0.5}
 
 
-class LexiconAnalyzer:
-    """Vectorized stand-in for VADER's SentimentIntensityAnalyzer.
+def term_count(col: Column, term: str) -> Column:
+    """Non-overlapping occurrences of ``term`` in ``col`` (Python's
+    ``str.count``), NULL for a NULL text: the
+    ``(length(c) - length(replace(c, term, ''))) / len(term)``
+    counting the oracles use."""
+    removed = F.length(col) - F.length(F.replace(col, F.lit(term), F.lit("")))
+    return removed / len(term)
 
-    compound = (pos - neg) / (pos + neg + 1) over weighted
-    non-overlapping term counts — bounded to (-1, 1) like VADER's
-    normalized compound, and exactly reproducible in ANSI SQL (the
-    oracle mirrors it with length/replace counting).
-    """
 
-    def score(self, texts: pd.Series) -> pd.Series:
-        pos = sum(w * texts.str.count(t) for t, w in _POS.items())
-        neg = sum(w * texts.str.count(t) for t, w in _NEG.items())
-        return (pos - neg) / (pos + neg + 1.0)
+def lexicon_score(col: Column) -> Column:
+    """compound = (pos - neg) / (pos + neg + 1) over weighted term
+    counts — bounded to (-1, 1) like VADER's normalized compound."""
+    pos = sum(w * term_count(col, t) for t, w in _POS.items())
+    neg = sum(w * term_count(col, t) for t, w in _NEG.items())
+    return (pos - neg) / (pos + neg + 1.0)
 
 
 _VADER_ALPHA = 15.0  # VADER's compound normalization constant
@@ -85,7 +90,7 @@ class VaderMiniAnalyzer:
     3); compound = Σv / sqrt((Σv)² + 15), bounded to (−1, 1).
 
     Used when ``use_vader=True``; the oracle gate keeps the simpler
-    deterministic stub so every rule stays SQL-expressible."""
+    deterministic lexicon so every rule stays SQL-expressible."""
 
     def __init__(self) -> None:
         import os
@@ -141,40 +146,30 @@ class VaderMiniAnalyzer:
         return texts.map(self._score_one)
 
 
-def _make_analyzer(use_vader: bool = False):
-    if use_vader:
-        try:
-            from vaderSentiment.vaderSentiment import SentimentIntensityAnalyzer
+def _make_analyzer():
+    try:
+        from vaderSentiment.vaderSentiment import SentimentIntensityAnalyzer
+    except ImportError:
+        # package not installed -- the vendored-lexicon
+        # re-implementation keeps the real-rules path hermetic
+        return VaderMiniAnalyzer()
 
-            class _Vader:
-                def __init__(self) -> None:
-                    self._a = SentimentIntensityAnalyzer()
+    class _Vader:
+        def __init__(self) -> None:
+            self._a = SentimentIntensityAnalyzer()
 
-                def score(self, texts: pd.Series) -> pd.Series:
-                    return texts.map(lambda s: self._a.polarity_scores(s)["compound"])
+        def score(self, texts: pd.Series) -> pd.Series:
+            return texts.map(lambda s: self._a.polarity_scores(s)["compound"])
 
-            return _Vader()
-        except ImportError:
-            # package not in this image -- the vendored-lexicon
-            # re-implementation keeps the real-rules path hermetic
-            return VaderMiniAnalyzer()
-    return LexiconAnalyzer()
-
-
-@F.pandas_udf(T.DoubleType())
-def compound_score(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Iterator pandas UDF: one analyzer per partition (fixes the
-    reference's per-row re-instantiation), Arrow-batched scoring."""
-    analyzer = _make_analyzer()
-    for texts in batches:
-        yield analyzer.score(texts.fillna(""))
+    return _Vader()
 
 
 @F.pandas_udf(T.DoubleType())
 def compound_score_vader(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Same partition-amortized shape, real VADER rules (installed
-    package if present, else the vendored-lexicon re-implementation)."""
-    analyzer = _make_analyzer(use_vader=True)
+    """Iterator pandas UDF: one analyzer per partition (fixes the
+    reference's per-row re-instantiation), Arrow-batched scoring with
+    the VADER rules."""
+    analyzer = _make_analyzer()
     for texts in batches:
         yield analyzer.score(texts.fillna(""))
 
@@ -184,18 +179,20 @@ def enrich_sentiment(
 ) -> DataFrame:
     """Attach sentiment_score + sentiment bucket columns (the an_*
     table's sentiment half, ref: `Reddit_4chan_Analysis.py:65-77`).
-    ``use_vader=True`` swaps in the VADER-rules scorer; bucketing
-    thresholds (±0.05, `Reddit_4chan_Analysis.py:152-158`) are shared.
+    ``use_vader=True`` swaps the lexicon expression for the VADER
+    pandas UDF; bucketing thresholds (±0.05,
+    `Reddit_4chan_Analysis.py:152-158`) are shared.
 
-    NULL pin (r8 sweep): no text, no score — a NULL comment reads
-    NULL sentiment_score on both engines (the oracle's length(NULL)
-    chain is NULL; the UDF's fillna('') had scored it 0.0 on Spark
-    only), and the bucket's ELSE arm reads 'neutral' identically."""
-    scorer = compound_score_vader if use_vader else compound_score
-    scored = df.withColumn(
-        "sentiment_score",
-        F.when(F.col(text_col).isNotNull(), scorer(F.col(text_col))),
+    No text, no score: a NULL comment reads NULL sentiment_score (the
+    lexicon's length(NULL) chain is NULL, as in the oracle; the UDF is
+    guarded) and the bucket's ELSE arm reads 'neutral'."""
+    text = F.col(text_col)
+    score = (
+        F.when(text.isNotNull(), compound_score_vader(text))
+        if use_vader
+        else lexicon_score(text)
     )
+    scored = df.withColumn("sentiment_score", score)
     return scored.withColumn("sentiment", sentiment_bucket(F.col("sentiment_score")))
 
 
@@ -223,9 +220,9 @@ _ORACLE_COMPOUND = (
     ),
 )
 def udf_vader_sentiment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document sentiment scoring through the pandas-UDF path
-    (ref: `Reddit_4chan_Analysis.py:145-163`). The deterministic
-    lexicon makes the whole Python-UDF pipeline oracle-checkable —
-    counting, weighting, normalization, and the ±0.05 bucketing."""
+    """Per-document sentiment scoring (ref:
+    `Reddit_4chan_Analysis.py:145-163`) with the default lexicon
+    expression: counting, weighting, normalization and the ±0.05
+    bucketing, all oracle-checkable and with no Python stage."""
     d = load(spark, sf_dir, "documents")
     return enrich_sentiment(d).select("doc_id", "sentiment_score", "sentiment")

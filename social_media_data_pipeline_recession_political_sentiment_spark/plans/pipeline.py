@@ -18,26 +18,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import literal_frame, load
-from ..enrich.hatespeech import enrich_hatespeech
-from ..enrich.sentiment import enrich_sentiment
-from ..functions.text import clean_comment
+from ..enrich.hatespeech import an_table, enrich_table
 from ..registry import register
 from ..session import prune_stale_workdirs
-
-
-def build_gold_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Silver documents → gold enriched table (the an_* stage of the
-    DAG, ref: `Airflow.py:69-78` NLP tasks)."""
-    d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    out = enrich_sentiment(enrich_hatespeech(d))
-    return out.select(
-        F.col("doc_id").alias("comment_id"),
-        clean_comment(F.col("text")).alias("cleaned_comment"),
-        "is_hate_speech",
-        "hate_speech_confidence",
-        "sentiment",
-        "sentiment_score",
-    )
 
 
 @register(
@@ -63,7 +46,7 @@ def orchestration_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
     95-102` task chain; the dashboard's sentiment distribution,
     `app.py:105-130`). What Airflow runs as three processes with a
     database between each, Catalyst runs as one fused pipeline."""
-    gold = build_gold_enriched(spark, sf_dir)
+    gold = enrich_table(spark, sf_dir)
     return gold.groupBy("sentiment").agg(F.count("*").alias("cnt"))
 
 
@@ -226,10 +209,11 @@ def stream_medallion_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: each micro-batch shuffles only its own rows for the
     dedup state; the silver anti-join broadcasts sink KEYS, not rows;
-    the gold enrichment is three narrow Arrow-batched stages with zero
-    shuffles (`enrich_table`'s plan). On a cluster the drain is the
-    nightly `availableNow` catch-up run over whatever the fetchers
-    landed — state and shuffle bound by new data, not corpus size."""
+    the gold table is `an_table`, one narrow projection with zero
+    shuffles and no Python stage (`enrich_table`'s plan). On a cluster
+    the drain is the nightly `availableNow` catch-up run over whatever
+    the fetchers landed — state and shuffle bound by new data, not
+    corpus size."""
     import shutil
     import uuid
 
@@ -250,14 +234,4 @@ def stream_medallion_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     silver_df = spark.read.parquet(silver).select(
         "comment_id", F.col("body").alias("text")
     )
-    from ..enrich.sentiment import enrich_sentiment
-
-    gold = enrich_sentiment(enrich_hatespeech(silver_df))
-    return gold.select(
-        "comment_id",
-        clean_comment(F.col("text")).alias("cleaned_comment"),
-        "is_hate_speech",
-        "hate_speech_confidence",
-        "sentiment",
-        "sentiment_score",
-    )
+    return an_table(silver_df).drop("original_comment")

@@ -11,8 +11,13 @@ Usage:
         python tools/pin_economics.py [out.json]
 
 Output JSON:
-    {"queries": {name: {"pass1": s, "pass2": s, "pins_built": [tags]}},
+    {"queries": {name: {"pass1": s, "pass2": s,
+                        "pins_built_p1": [tags], "pins_built_p2": [tags]}},
      "pin_builds": {tag: {"built_during": query, "pass1": s, "pass2": s}}}
+
+pin_builds attributes each tag to the query whose PASS-1 run built it.
+Any pass-2 build (an eviction or a pin that never cached) is printed to
+stderr and kept in that query's pins_built_p2.
 """
 
 from __future__ import annotations
@@ -51,26 +56,29 @@ def main() -> None:
             qs[name](spark, sf_dir).collect()
             dt = round(time.perf_counter() - t0, 3)
             built = sorted({k[1] for k in catalog._SESSION_PINS} - before)
-            r = rec.setdefault(name, {"pins_built": []})
+            r = rec.setdefault(name, {})
             r[f"pass{pass_no}"] = dt
-            if built:
-                r["pins_built"] = built
+            r[f"pins_built_p{pass_no}"] = built
+            if pass_no == 2 and built:
+                # a pass-2 build means a pin was evicted or never
+                # cached: its pass-2 time is not a cached timing
+                print(f"PASS-2 PIN BUILD: {name} rebuilt {built}", file=sys.stderr)
 
     pin_builds = {}
     for name, r in rec.items():
-        for tag in r["pins_built"]:
-            pin_builds[tag] = {
+        for tag in r["pins_built_p1"]:
+            pin_builds.setdefault(tag, {
                 "built_during": name,
                 "pass1": r["pass1"],
                 "pass2": r["pass2"],
-            }
+            })
     payload = {"sf_dir": sf_dir, "cpus": cpus, "queries": rec,
                "pin_builds": pin_builds}
     with open(out_path, "w") as f:
         json.dump(payload, f, indent=1, sort_keys=True)
-    built_total = sum(len(r["pins_built"]) for r in rec.values())
-    print(f"wrote {out_path}: {len(rec)} queries, "
-          f"{built_total} pin builds across {len(pin_builds)} tags")
+    built = {p: sum(len(r[f"pins_built_p{p}"]) for r in rec.values()) for p in (1, 2)}
+    print(f"wrote {out_path}: {len(rec)} queries, {built[1]} pass-1 pin builds "
+          f"across {len(pin_builds)} tags, {built[2]} pass-2 pin builds")
 
 
 if __name__ == "__main__":

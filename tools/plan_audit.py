@@ -617,13 +617,13 @@ AUDIT = {
     ),
     "stream_medallion_gold": (
         "gold-stage plan over the drained silver parquet: FileScan "
-        "-> ArrowEvalPython / MapInPandas enrichment stages, zero "
-        "Exchange (the bronze->silver drain runs eagerly via "
-        "availableNow foreachBatch upstream)",
+        "-> one codegen'd Project of the enrichment expressions, no "
+        "Python evaluation node, zero Exchange (the bronze->silver "
+        "drain runs eagerly via availableNow foreachBatch upstream)",
         "the whole DAG's batch catch-up is bounded by NEW data (the "
         "drain shuffles only each micro-batch's rows for dedup "
         "state; the silver anti-join broadcasts sink keys); the "
-        "gold enrichment is narrow Arrow stages with no shuffle",
+        "gold enrichment is one narrow projection with no shuffle",
     ),
     "ext_social_tags": (
         "scan-local regexp_extract_all + Generate (explode); one "
