@@ -158,7 +158,7 @@ def cache_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Batch-SQL twin of the drained streaming chain: flatten the landed
 # fixture, dedup (fixture duplicates are bit-identical, so DISTINCT ==
-# the stream's watermarked/anti-join dedup), then the gold enrichment
+# the stream's in-batch/anti-join dedup), then the gold enrichment
 # formulas (identical to enrich_table's oracle, over the comment body).
 def _medallion_oracle() -> str:
     from ..sources.rest_json import REDDIT_LISTING_FIXTURE
@@ -201,19 +201,20 @@ def stream_medallion_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     `Airflow.py:95-102` collect → NLP → store): land the listing
     fixture TWICE in bronze (simulating two poll cycles that re-fetch
     overlapping pages), drain the bronze → silver streaming ingest
-    with availableNow (flatten → watermark dedup → anti-join append,
-    streaming/ingest.py), then build the gold enrichment table off the
-    silver parquet. Output equals the pure-batch gold computation on
-    the same payloads — the exactly-once evidence for the chain: the
-    doubled bronze input changes NOTHING downstream.
+    with availableNow (flatten → late-row filter, in-batch dedup and
+    anti-join append, streaming/ingest.py), then build the gold
+    enrichment table off the silver parquet. Output equals the
+    pure-batch gold computation on the same payloads — the
+    exactly-once evidence for the chain: the doubled bronze input
+    changes NOTHING downstream.
 
-    Scale shape: each micro-batch shuffles only its own rows for the
-    dedup state; the silver anti-join broadcasts sink KEYS, not rows;
-    the gold table is `an_table`, one narrow projection with zero
-    shuffles and no Python stage (`enrich_table`'s plan). On a cluster
-    the drain is the nightly `availableNow` catch-up run over whatever
-    the fetchers landed — state and shuffle bound by new data, not
-    corpus size."""
+    Scale shape: the stream is stateless — each micro-batch is one
+    landed page, deduped in a single partition without a shuffle; the
+    silver anti-join broadcasts sink KEYS, not rows; the gold table is
+    `an_table`, one narrow projection with zero shuffles and no Python
+    stage (`enrich_table`'s plan). On a cluster the drain is the
+    nightly `availableNow` catch-up run over whatever the fetchers
+    landed."""
     import shutil
     import uuid
 

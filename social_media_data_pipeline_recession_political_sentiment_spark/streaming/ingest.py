@@ -9,15 +9,18 @@ flatten, and insert row-by-row with a per-row existence probe
     bronze dir (landed JSON payloads, written by a thin fetcher)
       └─ readStream.json(schema)           # micro-batch file source
          └─ flatten_reddit_listing(...)    # typed explode/project
-            └─ withWatermark + dropDuplicates(comment_id)
-               └─ foreachBatch: anti-join against the silver sink
-                  then append parquet      # idempotent, batch-level
+            └─ foreachBatch upsert:        # stateless stream, one dedup layer
+                 drop rows at or below the high-water mark − watermark
+                 dropDuplicates(comment_id) within the batch
+                 anti-join against the silver sink's keys
+                 then append parquet       # idempotent, batch-level
 
-Two dedup layers on purpose: watermarked dropDuplicates handles
-duplicates *within* the stream's state horizon cheaply; the
-foreachBatch anti-join against the sink is the durable cross-restart
-guarantee (the scalable form of the reference's probe — one join per
-micro-batch, not 2 round-trips per row).
+One dedup layer, in the sink: the anti-join against silver is the
+durable cross-restart guarantee (the scalable form of the reference's
+probe — one join per micro-batch, not 2 round-trips per row), so the
+stream keeps no state store. The late-row rule reads a high-water mark
+that silver itself makes durable: its max `created_utc`, read once per
+drain and then raised by each batch's observed max.
 
 Rate limiting (`Reddit.py:23-24,37-59`) maps to source-side
 `maxFilesPerTrigger` — the engine's token bucket is files per
@@ -29,11 +32,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import prune_stale_workdirs, scoped_shuffle_partitions
+from ..session import prune_stale_workdirs
 from ..sources.rest_json import (
     REDDIT_LISTING_FIXTURE,
     REDDIT_LISTING_SCHEMA,
@@ -54,49 +57,62 @@ def read_bronze_stream(
     return reader.json(bronze_dir)
 
 
+def _has_parquet(path: str) -> bool:
+    return os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path))
+
+
 def ingest_to_silver(
     spark: SparkSession,
     bronze_dir: str,
     silver_dir: str,
     checkpoint_dir: str,
     watermark: str = "12 hours",
-    available_now: bool = True,
 ):
-    """Run the collector pipeline: flatten → watermark dedup →
-    foreachBatch anti-join append. Returns the StreamingQuery.
-    availableNow=True is the Airflow-DAG batch run
-    (`Airflow.py:10,95-102`); processingTime triggers give the
-    reference's poll cadences."""
-    flat = flatten_reddit_listing(read_bronze_stream(spark, bronze_dir))
-    deduped = flat.withWatermark("created_utc", watermark).dropDuplicates(["comment_id"])
+    """Drain bronze into silver (availableNow: the Airflow-DAG batch
+    run, `Airflow.py:10,95-102`) and return the finished StreamingQuery.
+
+    Each micro-batch is upserted in one pass: rows with `created_utc`
+    at or below `mark - watermark` are dropped as late, the rest are
+    deduped within the batch and anti-joined against silver's keys.
+    `mark` (unix micros) starts at silver's max `created_utc` and rises
+    to each batch's max event time after its write — the same input
+    rows Spark's watermark would track, but durable in silver, so a
+    fresh checkpoint on an existing silver still rejects old rows."""
+    mark = None
+    if _has_parquet(silver_dir):
+        mark = (
+            spark.read.schema("created_utc timestamp")
+            .parquet(silver_dir)
+            .agg(F.max(F.unix_micros("created_utc")))
+            .first()[0]
+        )
 
     def upsert(batch: DataFrame, epoch_id: int) -> None:
-        # anti-join against sink keys: idempotent across restarts
-        batch = batch.dropDuplicates(["comment_id"])
-        if os.path.isdir(silver_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(silver_dir)
-        ):
-            existing = batch.sparkSession.read.parquet(silver_dir).select("comment_id")
+        nonlocal mark
+        seen = Observation()
+        batch = batch.observe(seen, F.max(F.unix_micros("created_utc")).alias("mark"))
+        if mark is not None:  # NULL event times pass, as under Spark's watermark
+            horizon = F.expr(f"timestamp_micros({mark}) - INTERVAL {watermark}")
+            batch = batch.filter(F.col("created_utc").isNull() | (F.col("created_utc") > horizon))
+        # one landed page per batch: a single partition satisfies the
+        # dedup's distribution, so it plans no Exchange
+        batch = batch.coalesce(1).dropDuplicates(["comment_id"])
+        if _has_parquet(silver_dir):
+            existing = batch.sparkSession.read.schema("comment_id string").parquet(silver_dir)
             batch = batch.join(F.broadcast(existing), "comment_id", "left_anti")
         batch.select(*SILVER_COMMENT_COLS).write.mode("append").parquet(silver_dir)
+        batch_max = seen.get["mark"]
+        if batch_max is not None and (mark is None or batch_max > mark):
+            mark = batch_max
 
-    writer = deduped.writeStream.foreachBatch(upsert).option("checkpointLocation", checkpoint_dir)
-    trigger = {"availableNow": True} if available_now else {"processingTime": "1 seconds"}
-    # dedup state partitions bind to shuffle.partitions when the first
-    # micro-batch is planned (start() is async), so the pinned conf must
-    # stay active until batch 0 has been planned: drained runs hold it
-    # for the whole drain; processingTime runs hold it until the query
-    # reports progress. Cluster deployments size this to cardinality.
-    with scoped_shuffle_partitions(spark, 4):
-        q = writer.trigger(**trigger).start()
-        if available_now:
-            q.awaitTermination()
-        else:
-            import time
-
-            deadline = time.monotonic() + 30
-            while not q.recentProgress and time.monotonic() < deadline:
-                time.sleep(0.1)
+    q = (
+        flatten_reddit_listing(read_bronze_stream(spark, bronze_dir))
+        .writeStream.foreachBatch(upsert)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     return q
 
 
@@ -132,14 +148,13 @@ def stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     batches: list[int] = []
     flat = flatten_reddit_listing(read_bronze_stream(spark, bronze, max_files_per_trigger=1))
-    with scoped_shuffle_partitions(spark, 4):
-        q = (
-            flat.writeStream.foreachBatch(lambda b, _e: batches.append(b.count()))
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = (
+        flat.writeStream.foreachBatch(lambda b, _e: batches.append(b.count()))
+        .option("checkpointLocation", os.path.join(work, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     return spark.createDataFrame(
         [(len(batches), sum(batches))], "n_batches bigint, n_rows bigint"
     )
@@ -162,9 +177,9 @@ def stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_microbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The whole collector path end-to-end on the landed fixture:
-    bronze → flatten → watermark dedup → anti-join silver append,
-    drained with availableNow; returns the silver table (6 unique
-    comments — the fixture's cross-page duplicate is dropped).
+    bronze → flatten → late-row filter, in-batch dedup and anti-join
+    silver append, drained with availableNow; returns the silver table
+    (6 unique comments — the fixture's cross-page duplicate is dropped).
     Re-runs are idempotent: the anti-join keeps the silver table
     stable (asserted in tests/test_streaming.py)."""
     import shutil
@@ -175,8 +190,7 @@ def stream_microbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     bronze, silver, ckpt = (os.path.join(work, d) for d in ("bronze", "silver", "ckpt"))
     os.makedirs(bronze)
     shutil.copy(REDDIT_LISTING_FIXTURE, os.path.join(bronze, "page_0.json"))
-    q = ingest_to_silver(spark, bronze, silver, ckpt)
-    q.awaitTermination()
+    ingest_to_silver(spark, bronze, silver, ckpt)
     return (
         spark.read.parquet(silver)
         .select("comment_id", "subreddit", "score", "created_utc")

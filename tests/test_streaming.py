@@ -75,6 +75,102 @@ def test_ingest_rerun_is_idempotent(spark):
     assert len(k2) == 1 and k2[0].body == "b2"  # first-seen wins, like the reference
 
 
+T0 = 1704103200  # 2024-01-01 10:00:00 UTC
+HOUR = 3600
+
+
+def _land(bronze, pages, first=0):
+    """Write pages as page_<i>.json with increasing mtimes, the order
+    the file source reads them in."""
+    os.makedirs(bronze, exist_ok=True)
+    base = T0 - 1000
+    for i, comments in enumerate(pages, start=first):
+        path = os.path.join(bronze, f"page_{i}.json")
+        with open(path, "w") as f:
+            f.write(_page(comments))
+        os.utime(path, (base + i, base + i))
+
+
+def _silver(spark, silver):
+    return {r.comment_id: r.body for r in spark.read.parquet(silver).collect()}
+
+
+def test_ingest_late_row_boundary(spark):
+    """A new comment exactly 12 h behind the newest event already
+    ingested is late and dropped; one second younger is kept."""
+    work = tempfile.mkdtemp(prefix="smdp_stream_")
+    bronze, silver, ckpt = (os.path.join(work, d) for d in ("bronze", "silver", "ckpt"))
+    _land(bronze, [
+        [("econ", "new", 1, T0, "a")],
+        [("econ", "late", 1, T0 - 12 * HOUR, "at_mark"),
+         ("econ", "edge", 1, T0 - 12 * HOUR + 1, "inside")],
+    ])
+    ingest_to_silver(spark, bronze, silver, ckpt)
+    assert sorted(_silver(spark, silver)) == ["a", "inside"]
+
+
+def test_ingest_restart_rejects_old_and_redelivered_rows(spark):
+    """The high-water mark is durable in silver. After pages 0-1 are
+    drained, a page carrying a never-seen comment older than the mark,
+    a redelivered comment and a fresh comment adds only the fresh one:
+    resumed on the same checkpoint, on a fresh checkpoint over the
+    same bronze, and on a fresh checkpoint over a bronze holding only
+    the new page (there Spark's own watermark would start at 0)."""
+    work = tempfile.mkdtemp(prefix="smdp_stream_")
+    bronze, silver, ckpt = (os.path.join(work, d) for d in ("bronze", "silver", "ckpt"))
+    _land(bronze, [
+        [("econ", "b1", 1, T0, "k1"), ("econ", "b2", 2, T0 + 60, "k2")],
+        [("econ", "b3", 3, T0 + HOUR, "k3")],
+    ])
+    ingest_to_silver(spark, bronze, silver, ckpt)
+    before = _silver(spark, silver)
+    assert sorted(before) == ["k1", "k2", "k3"]
+    new_page = [
+        ("econ", "old", 4, T0 + HOUR - 13 * HOUR, "k_old"),
+        ("econ", "b2 again", 9, T0 + 60, "k2"),
+        ("econ", "b4", 5, T0 + 2 * HOUR, "k4"),
+    ]
+    _land(bronze, [new_page], first=2)
+    only_new = os.path.join(work, "bronze_new")
+    _land(only_new, [new_page], first=2)
+    runs = {
+        "same_ckpt": (bronze, ckpt),
+        "fresh_ckpt": (bronze, os.path.join(work, "ckpt_fresh")),
+        "fresh_ckpt_new_bronze": (only_new, os.path.join(work, "ckpt_new")),
+    }
+    for name, (src, run_ckpt) in runs.items():
+        run_silver = os.path.join(work, f"silver_{name}")
+        shutil.copytree(silver, run_silver)
+        ingest_to_silver(spark, src, run_silver, run_ckpt)
+        assert _silver(spark, run_silver) == {**before, "k4": "b4"}, name
+
+
+def test_ingest_stream_is_stateless(spark):
+    """The ingest stream has no state operator and so no trailing
+    no-data batch: one progress entry and one silver file per page."""
+    work = tempfile.mkdtemp(prefix="smdp_stream_")
+    bronze, silver, ckpt = (os.path.join(work, d) for d in ("bronze", "silver", "ckpt"))
+    _land(bronze, [
+        [("econ", f"b{i}{j}", j, T0 + i * HOUR + j, f"p{i}c{j}") for j in range(5)]
+        for i in range(3)
+    ])
+    q = ingest_to_silver(spark, bronze, silver, ckpt)
+    progress = q.recentProgress
+    assert [p.numInputRows for p in progress] == [1, 1, 1]  # one page each
+    assert all(not p.stateOperators for p in progress)
+    assert len([f for f in os.listdir(silver) if f.endswith(".parquet")]) == 3
+
+
+def test_session_sets_checkpoint_file_manager(spark):
+    from social_media_data_pipeline_recession_political_sentiment_spark.session import (
+        ENGINE_CONFS,
+    )
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert ENGINE_CONFS[key].endswith(".FileSystemBasedCheckpointFileManager")
+    assert spark.conf.get(key) == ENGINE_CONFS[key]
+
+
 def test_watermark_finalized_window_not_reemitted(spark):
     """The watermark guarantee that matters for the recency-filter
     semantics: once append mode finalizes+emits a window, a row
