@@ -305,7 +305,7 @@ def sink_scd1_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates-win coalesce (how engines without a native MERGE — and
     Spark itself before Delta — execute it). Complements
     `join_scd2_dim` (history-keeping type 2) and
-    `stream_upsert_keyed` (the streaming foreachBatch form): this is
+    `stream_upsert_keyed` (the streaming form): this is
     the batch nightly-dimension-refresh shape. Presence is derived
     from the non-null JOIN KEYS themselves (never from a nullable
     payload column — `ext_dataset_diff`'s fixed contract), and the

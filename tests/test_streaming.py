@@ -665,3 +665,144 @@ def test_embcos_incremental_chain_merges_across_batches(spark):
     assert out[50].is_new and not out[50].dup_of_base
     # zero norm -> NULL cosine fails every >= t cut on both sides
     assert out[11].is_new and not out[11].dup_of_base and not out[11].dup_in_increment
+
+
+def _resume_equals_one_shot(spark, fold, drain, schema, pages, k):
+    """Run `fold` over pages 0..k-1 into a checkpointed complete-mode
+    memory sink, land the remaining pages, resume on the same
+    checkpoint, and return (rows read by the resumed run, resumed
+    table, one-shot `drain` over all pages)."""
+    import uuid
+
+    work = tempfile.mkdtemp(prefix="smdp_restart_")
+    ckpt = os.path.join(work, "ckpt")
+
+    def land(i):
+        spark.createDataFrame(pages[i], schema).coalesce(1).write.parquet(
+            os.path.join(work, f"b{i}")
+        )
+
+    def src():
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(os.path.join(work, "b*"))
+        )
+
+    def run():
+        name = f"restart_{uuid.uuid4().hex[:8]}"
+        q = (
+            fold(src()).writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return q, spark.table(name)
+
+    for i in range(k):
+        land(i)
+    run()
+    for i in range(k, len(pages)):
+        land(i)
+    q, resumed = run()
+    n_read = sum(p.numInputRows for p in q.recentProgress)
+    return n_read, sorted(resumed.collect()), sorted(drain(spark, src()).collect())
+
+
+def test_upsert_fold_resumes_from_checkpoint(spark):
+    """The keyed-upsert fold keeps its per-user state in the state
+    store: resumed after pages 0-1 on the same checkpoint, it reads
+    only the new pages and ends equal to one drain over all pages —
+    including a key whose newest version was in the first run and a
+    key whose newest version arrives after the restart."""
+    import datetime as dt
+
+    from social_media_data_pipeline_recession_political_sentiment_spark.streaming.queries import (
+        drain_keyed_upsert,
+        keyed_upsert_fold,
+    )
+
+    t0 = dt.datetime(2021, 1, 1, 12, 0, 0)
+
+    def row(eid, ts_off, uid, et, v):
+        return (eid, t0 + dt.timedelta(seconds=ts_off), uid, et, v, "{}")
+
+    schema = (
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string"
+    )
+    pages = [
+        [row(10, 100, 1, "newest", 9.0), row(11, 0, 2, "old", 1.0)],
+        [row(12, 5, 3, "only", 2.0)],
+        [row(13, 50, 1, "stale", 5.0), row(14, 60, 2, "newer", 3.0)],
+        [row(15, 70, 4, "fresh", 4.0)],
+    ]
+    n_read, resumed, one_shot = _resume_equals_one_shot(
+        spark, keyed_upsert_fold, drain_keyed_upsert, schema, pages, k=2
+    )
+    assert n_read == 3  # only pages 2-3 were read again
+    assert resumed == one_shot
+    assert [(r.user_id, r.event_type) for r in resumed] == [
+        (1, "newest"), (2, "newer"), (3, "only"), (4, "fresh")
+    ]
+
+
+def test_datacard_fold_resumes_from_checkpoint(spark):
+    """The datacard fold keeps its per-cell partials in the state
+    store: resumed after pages 0-1 on the same checkpoint, it reads
+    only the new page and ends equal to one drain over all pages."""
+    from social_media_data_pipeline_recession_political_sentiment_spark.streaming.queries import (
+        datacard_fold,
+        drain_datacard,
+    )
+
+    schema = "doc_id long, source string, lang string, text string"
+    pages = [
+        [(20, "s1", "en", "a b c"), (30, "s2", "en", None)],
+        [(10, "s1", "en", "x"), (40, "s2", "en", None)],
+        [(50, "s1", "de", "p q"), (60, "s1", "en", "m n o p"), (5, "s2", "en", "z")],
+    ]
+    n_read, resumed, one_shot = _resume_equals_one_shot(
+        spark, datacard_fold, drain_datacard, schema, pages, k=2
+    )
+    assert n_read == 3
+    assert resumed == one_shot
+    assert [tuple(r) for r in resumed] == [
+        ("s1", "de", 1, 2, 50, 50),
+        ("s1", "en", 3, 8, 10, 60),
+        ("s2", "en", 3, 1, 5, 40),
+    ]
+
+
+def test_stateful_count_sees_events_rewritten_in_place(spark):
+    """`stream_stateful_count` replays a staged split of events; when
+    `events.parquet` is rewritten at the same path, the next run must
+    count the new rows, not the split staged from the old ones."""
+    import datetime as dt
+
+    from social_media_data_pipeline_recession_political_sentiment_spark.registry import queries
+
+    sf_dir = tempfile.mkdtemp(prefix="smdp_sf_")
+    schema = (
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string"
+    )
+    ts = dt.datetime(2024, 1, 1)
+
+    def write_events(users):
+        rows = [(i, ts, u, "view", 1.0, "{}") for i, u in enumerate(users)]
+        spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(
+            os.path.join(sf_dir, "events.parquet")
+        )
+
+    def counts():
+        out = queries()["stream_stateful_count"](spark, sf_dir).collect()
+        return {r.user_id: r.n_events for r in out}
+
+    write_events([1, 1, 2])
+    assert counts() == {1: 2, 2: 1}
+    write_events([1, 3, 3, 3])
+    assert counts() == {1: 1, 3: 3}

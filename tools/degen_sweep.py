@@ -341,14 +341,13 @@ def build_fixture(
 
     shutil.rmtree(FIXTURE, ignore_errors=True)
     os.makedirs(FIXTURE)
-    # the staged-stream and partitioned-gold queries memoize derived
-    # parquet under sha1(sf_dir) — valid for immutable testdata dirs,
-    # but THIS dir's contents change per sweep mode, so stale caches
-    # would desync Spark (reads the memo) from DuckDB (reads the
-    # table): wipe the fixture-derived cache keys on every rebuild
+    # the partitioned-gold query memoizes derived parquet under
+    # sha1(sf_dir) — valid for immutable testdata dirs, but THIS dir's
+    # contents change per sweep mode, so a stale cache would desync
+    # Spark (reads the memo) from DuckDB (reads the table): wipe the
+    # fixture-derived cache key on every rebuild
     fixture_key = hashlib.sha1(FIXTURE.encode()).hexdigest()[:10]
-    for memo_root in ("/tmp/smdp_stream", "/tmp/smdp_gold"):
-        shutil.rmtree(os.path.join(memo_root, fixture_key), ignore_errors=True)
+    shutil.rmtree(os.path.join("/tmp/smdp_gold", fixture_key), ignore_errors=True)
     for f in glob.glob(f"{SRC_SF}/*.parquet"):
         name = os.path.basename(f)
         if name.split(".")[0] in ("documents", "events", "embeddings"):

@@ -1414,14 +1414,15 @@ AUDIT = {
         "the one row hashes cross-engine",
     ),
     "stream_dedup_incremental_chain": (
-        "drained plan = increment rows (checkpointed ExistingRDD) "
-        "joined to the min-doc fingerprint index and left-joined to "
+        "drained plan = landed increment rows (parquet scan of the "
+        "file sink) joined to the min-doc fingerprint index (one "
+        "aggregate over the same landed rows) and left-joined to "
         "the base corpus's DISTINCT sha2 set; sha2 computed in the "
         "scan projections on both sides",
-        "the per-batch-growing state is the INDEX (one row per "
-        "distinct increment text, algebraic min-merge); batch row "
-        "frames checkpoint once each — O(B), not O(B^2); document "
-        "text never crosses the wire — 32-byte fingerprints do",
+        "per batch only the landing write (batch-proportional); the "
+        "INDEX (one row per distinct increment text, algebraic "
+        "min) is built once at drain; document text never crosses "
+        "the wire — 32-byte fingerprints do",
     ),
     "ext_sim_topk_bitsign": (
         "bit packing in the scan projection (pinned once, feeds "
