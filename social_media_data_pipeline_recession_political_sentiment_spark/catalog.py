@@ -126,9 +126,12 @@ def compute_once(df: DataFrame) -> DataFrame:
     raw wide-text frame (materializing 100 TB to save a columnar
     re-scan is a loss).
 
-    eager=False keeps the registry contract lazy (queries() builds
-    plans without executing); the first action materializes, and
-    concurrent stages at worst duplicate the first computation.
+    eager=False defers only the final stage. Under the engine's AQE
+    conf, `localCheckpoint` runs every shuffle stage beneath the frame
+    when it is called, so a `compute_once` over a `groupBy` runs one
+    job at build time; the first action on the frame then computes
+    its last stage, and concurrent stages at worst duplicate that
+    computation.
 
     Operational caveats (r6 sweep review — stated, not hidden):
     localCheckpoint CUTS LINEAGE, so a pinned partition lost to an
@@ -350,16 +353,10 @@ def range_parts(sf_dir: str, table: str = "documents") -> int:
     per core (the devices' ranks/offsets are partition-count-
     independent by construction, so the OUTPUT is identical — only
     the task count changes); at cluster scale the byte-derived count
-    restores full parallelism at a healthy partition size.
-    `SMDP_RANGE_PART_BYTES` overrides the target for deployments that
-    want a different granularity. An unstatable source falls back to
-    the old defaultParallelism-shaped floor (2)."""
+    restores full parallelism at a healthy partition size. An
+    unstatable source falls back to the floor (2)."""
     import os as _os
 
-    target = (
-        int(_os.environ.get("SMDP_RANGE_PART_BYTES") or 0)
-        or RANGE_PART_TARGET_BYTES
-    )
     path = _os.path.join(sf_dir, f"{table}.parquet")
     try:
         if _os.path.isdir(path):
@@ -371,7 +368,43 @@ def range_parts(sf_dir: str, table: str = "documents") -> int:
             size = _os.stat(path).st_size
     except OSError:
         size = 0
-    return max(2, -(-size // target))
+    return max(2, -(-size // RANGE_PART_TARGET_BYTES))
+
+
+_LOCAL_BITS = 33  # monotonically_increasing_id: pid << 33 | row index
+
+
+def global_rank(df: DataFrame, order: list, n_parts: int) -> tuple[DataFrame, int]:
+    """Distributed global rank: `df` plus a 1-based BIGINT `rank` in
+    `order` (a list of Columns; rows that tie on every one of them get
+    distinct ranks in no set order), and the row count n.
+
+    Not a single-partition `Window.orderBy`, which funnels every row
+    through one task. `df` is range-partitioned into `n_parts` and
+    sorted within partitions; one `monotonically_increasing_id()`
+    projection after the sort carries the partition index (high bits)
+    and the in-partition index (low 33 bits). The frame is checkpointed
+    lazily, so the counts collect and the final projection read the
+    same partitioning instead of recomputing the lineage twice. The P
+    per-partition counts (P scalars, not data) are prefix-summed on the
+    driver and added back as a map literal keyed by partition index.
+    Every row moves once, through the range exchange; empty partitions
+    have no count and need no offset. The ranks do not depend on
+    `n_parts`."""
+    ids = (
+        df.repartitionByRange(n_parts, *order)
+        .sortWithinPartitions(*order)
+        .withColumn("_rid", F.monotonically_increasing_id())
+        .localCheckpoint(eager=False)
+    )
+    pid = F.shiftright("_rid", _LOCAL_BITS).cast("int")
+    offsets, n = [], 0
+    for p, c in sorted(ids.groupBy(pid.alias("p")).count().collect()):
+        offsets += [F.lit(p), F.lit(n).cast("long")]
+        n += c
+    off = F.element_at(F.create_map(*offsets), pid) if offsets else F.lit(0)
+    local = F.col("_rid").bitwiseAND((1 << _LOCAL_BITS) - 1)
+    return ids.withColumn("rank", local + off + 1).drop("_rid"), n
 
 
 def literal_frame(spark: SparkSession, rows, schema: str) -> DataFrame:

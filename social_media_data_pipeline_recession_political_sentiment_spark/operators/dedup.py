@@ -182,7 +182,7 @@ def ext_dedup_incremental_bucketed(spark: SparkSession, sf_dir: str) -> DataFram
     file order). Same semantics and oracle as the plain operator;
     what changes is who pays per night: amortized one bucketed write
     vs re-shuffling the (at scale, enormous) base fingerprint set on
-    every ingest. PLANS.md captures the exchange-free base scan.
+    every ingest. The plan scans the bucketed base with no Exchange.
     The remaining scale knob — a bloom filter built from the base
     buckets to pre-drop the ~99% of increment rows matching nothing
     before the join — stays documented, not built: it changes cost,

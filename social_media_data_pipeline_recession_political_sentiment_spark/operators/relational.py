@@ -26,7 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import compute_once, literal_frame, load, range_parts
+from ..catalog import compute_once, global_rank, literal_frame, load, range_parts
 from ..functions.json_contract import (
     json_int_field,
     json_int_field_sql,
@@ -2469,49 +2469,6 @@ FROM s
 """
 
 
-def gini_partition_summaries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Phase 1 of the two-phase Gini rank: range-partition the
-    per-user counts on (x, user_id), then fold each partition to
-    THREE exact scalars — (count, Σx, Σ local_rank·x) — in one sorted
-    Arrow pass. Returns the P-row summary frame `agg_user_gini`
-    collects and prefix-combines driver-side."""
-    import pandas as pd
-
-    c = load(spark, sf_dir, "events").groupBy("user_id").agg(
-        F.count("*").alias("x")
-    )
-    # scale-adaptive range-partition count (r13, guide §2) — output is
-    # partition-count-independent by the offset construction
-    n_parts = range_parts(sf_dir, "events")
-    ranged = (
-        c.repartitionByRange(n_parts, F.col("x"), F.col("user_id"))
-        .sortWithinPartitions("x", "user_id")
-        .withColumn("pid", F.spark_partition_id())
-    )
-
-    def _part_summary(batches):
-        import numpy as np
-
-        pid, cnt, sx, wl = None, 0, 0, 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pid = int(pdf["pid"].iloc[0])
-            xs = pdf["x"].astype(object).to_numpy()
-            ranks = np.arange(cnt + 1, cnt + len(xs) + 1, dtype=object)
-            cnt += len(xs)
-            sx += int(xs.sum())
-            wl += int((ranks * xs).sum())
-        if cnt:
-            yield pd.DataFrame(
-                {"pid": [pid], "cnt": [cnt], "sx": [sx], "wl": [wl]}
-            )
-
-    return ranged.mapInPandas(
-        _part_summary, "pid int, cnt long, sx long, wl long"
-    )
-
-
 @register("agg_user_gini", oracle=_GINI_ORACLE)
 def agg_user_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini coefficient of per-user event volume — the concentration
@@ -2521,39 +2478,38 @@ def agg_user_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     report quotes. 0 = uniform, →1 = one user is the firehose.
 
     Exactness: Gini = (2·Σi·xᵢ − (n+1)·Σx) / (n·Σx) over ascending
-    (x, user_id)-ranked counts — numerator and denominator are exact
-    BIGINTs, the final division is ONE IEEE op, identical on both
-    engines.
+    (x, user_id)-ranked counts. The numerator and denominator are
+    exact integers and the final division is ONE IEEE op, identical
+    on both engines. The sums accumulate in DECIMAL(38,0), so they
+    never wrap: past BIGINT the `n_users`/`total_events` casts raise
+    under ANSI (as the oracle's BIGINT casts do), and the Gini stays
+    exact until a term passes 10^38, where ANSI decimal overflow
+    raises too. No users reads (0, 0, NULL).
 
     Scale shape: the corpus-width motion is the user-keyed count agg.
-    The rank over the aggregated user table is the
-    `ext_lm_perplexity_buckets` DISTRIBUTED TWO-PHASE device, not a
-    single-partition `Window.orderBy` (the one-reducer funnel that
-    cannot rank billions of users): phase 1 range-partitions on
-    (x, user_id) and folds each partition to THREE exact scalars —
-    count, Σx, and Σ(local_rank·x) — in one sorted `mapInPandas`
-    pass; phase 2 collects the P summary rows (P scalars, not data),
-    prefix-sums the counts into rank offsets, and combines
-    Σi·xᵢ = Σ_p [wl_p + offset_p·Σx_p] exactly. Every user row moves
-    exactly once (the range exchange); nothing user-sized ever lands
-    on one task. Products run in arbitrary-precision Python ints so
-    wsum is exact wherever the oracle's BIGINT is. The distributed
-    stage is exposed as `gini_partition_summaries` so PLANS.md can
-    record its physical plan (RangeRepartition -> MapInPandas, no
-    Window node anywhere)."""
-    parts = gini_partition_summaries(spark, sf_dir).collect()
-    n = tot = wsum = 0
-    off = 0
-    for row in sorted(parts, key=lambda r: r.pid):
-        wsum += row.wl + off * row.sx
-        off += row.cnt
-        n += row.cnt
-        tot += row.sx
-    gini = (
-        float(2 * wsum - (n + 1) * tot) / float(n * tot) if n and tot else None
+    The rank over the aggregated user table is `catalog.global_rank`
+    (range exchange, P per-partition counts, offsets added back
+    natively), not a single-partition `Window.orderBy`; the three
+    sums are then one global aggregate with map-side partials, so
+    nothing user-sized lands on one task and no Python runs."""
+    c = load(spark, sf_dir, "events").groupBy("user_id").agg(
+        F.count("*").alias("x")
     )
-    return literal_frame(
-        spark, [(n, tot, gini)], "n_users long, total_events long, gini double"
+    ranked, _ = global_rank(
+        c, [F.col("x"), F.col("user_id")], range_parts(sf_dir, "events")
+    )
+    exact = "decimal(38,0)"
+    s = ranked.agg(
+        F.count("*").alias("n"),
+        F.coalesce(F.sum(F.col("x").cast(exact)), F.lit(0).cast(exact)).alias("tot"),
+        F.sum(F.col("rank").cast(exact) * F.col("x")).alias("wsum"),
+    )
+    num = 2 * F.col("wsum") - (F.col("n") + 1) * F.col("tot")
+    den = F.col("n") * F.col("tot")
+    return s.select(
+        F.col("n").alias("n_users"),
+        F.col("tot").cast("long").alias("total_events"),
+        F.when(den > 0, num.cast("double") / den.cast("double")).alias("gini"),
     )
 
 
@@ -2669,80 +2625,36 @@ def agg_quantiles_exact_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut-off needs the exact element) and what a naive
     `Window.orderBy` cannot survive (one-reducer global sort).
 
-    Third user of the two-phase partition-prefix device
-    (`ext_lm_perplexity_buckets`, `agg_user_gini`): range-exchange on
-    (value, event_id), per-partition counts collect as P scalars,
-    the driver prefix-sums offsets and maps each target rank
-    ceil(q·n) to (partition, local index); one more pass over the
-    SAME pinned partitioning (localCheckpoint) emits exactly the
-    rows whose running local index is a target — 5 rows out, each
-    row moved exactly once. Ranks use double q·n on BOTH engines
-    (the oracle casts q to DOUBLE before multiplying) so the ceil
-    lands identically; the picked VALUE is tie-order-invariant.
+    The rank is `catalog.global_rank` on (value, event_id): one range
+    exchange, P per-partition counts, offsets added back natively.
+    The ranked rows join a VALUES list of (q, ceil(q·n)) target
+    ranks, so 5 rows come out, two quantiles may share one element,
+    and no Python runs. Ranks use double q·n on BOTH engines (the
+    oracle casts q to DOUBLE before multiplying) so the ceil lands
+    identically; the picked VALUE is tie-order-invariant. No rows in,
+    no rows out.
 
-    NULL pin (r8 sweep): order statistics are defined over the
-    NON-NULL value domain on both engines — Spark's range sort is
-    NULLS FIRST where SQL ORDER BY here is NULLS LAST, so an
-    unpinned NULL row shifts every rank in opposite directions."""
+    NULL pin: order statistics are defined over the NON-NULL value
+    domain on both engines — Spark's range sort is NULLS FIRST where
+    SQL ORDER BY here is NULLS LAST, so an unpinned NULL row shifts
+    every rank in opposite directions."""
     import math
-
-    import pandas as pd
 
     e = (
         load(spark, sf_dir, "events")
         .select("value", "event_id")
-        .where(FINITE_MEASURE_SQL)  # r9 nonfinite-gate pin
+        .where(FINITE_MEASURE_SQL)
     )
-    # scale-adaptive range-partition count (r13, guide §2)
-    n_parts = range_parts(sf_dir, "events")
-    ranged = (
-        e.repartitionByRange(n_parts, F.col("value"), F.col("event_id"))
-        .sortWithinPartitions("value", "event_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    ranked, n = global_rank(
+        e, [F.col("value"), F.col("event_id")], range_parts(sf_dir, "events")
     )
-    counts = ranged.groupBy("pid").agg(F.count("*").alias("c")).collect()
-    sums = {r.pid: r.c for r in counts}
-    n = sum(sums.values())
-    offsets, acc = {}, 0
-    for pid in sorted(sums):
-        offsets[pid] = acc
-        acc += sums[pid]
-    # pid -> {local 1-based rank: [(q, global rank), ...]} — a LIST:
-    # on tiny inputs two quantiles can land on the same element
-    targets: dict[int, dict[int, list[tuple[float, int]]]] = {}
-    for q in QUANTILE_QS:
-        t = max(1, math.ceil(q * n))
-        for pid in sorted(sums):
-            if offsets[pid] < t <= offsets[pid] + sums[pid]:
-                targets.setdefault(pid, {}).setdefault(t - offsets[pid], []).append(
-                    (q, t)
-                )
-                break
-
-    def _pick(batches):
-        seen = 0
-        want: dict[int, list[tuple[float, int]]] | None = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if want is None:
-                want = targets.get(int(pdf["pid"].iloc[0]), {})
-                if not want:
-                    return
-            hits = [
-                (q, t, float(pdf["value"].iloc[lr - seen - 1]))
-                for lr, qts in want.items()
-                if seen < lr <= seen + len(pdf)
-                for (q, t) in qts
-            ]
-            if hits:
-                yield pd.DataFrame(
-                    hits, columns=["q", "target_rank", "value"]
-                )
-            seen += len(pdf)
-
-    return ranged.mapInPandas(_pick, "q double, target_rank long, value double")
+    targets = spark.sql(
+        "VALUES "
+        + ", ".join(f"({q!r}D, {max(1, math.ceil(q * n))}L)" for q in QUANTILE_QS)
+        + " AS t(q, target_rank)"
+    )
+    hit = F.col("rank") == F.col("target_rank")
+    return ranked.join(F.broadcast(targets), hit).select("q", "target_rank", "value")
 
 
 # --------------------------------------- null-key skew bypass join

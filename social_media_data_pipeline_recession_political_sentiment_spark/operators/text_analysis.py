@@ -23,7 +23,14 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import types as T
 
-from ..catalog import compute_once, literal_frame, load, range_parts, session_pin
+from ..catalog import (
+    compute_once,
+    global_rank,
+    literal_frame,
+    load,
+    range_parts,
+    session_pin,
+)
 from ..functions.hashing import (
     WS_CLASS,
     content_fp,
@@ -1206,74 +1213,29 @@ def ext_lm_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     knob CCNet-style pipelines expose (train mostly on head, sample
     middle, drop or down-weight tail).
 
-    The global rank is the `ext_shard_manifest` DISTRIBUTED TWO-PHASE
-    device, not a single-partition `Window.orderBy` (the one-reducer
-    funnel that cannot run at 100 TB): phase 1 range-partitions on
-    (avg DESC, doc_id), sorts within partitions, and assigns
-    partition-local ranks in one `mapInPandas` pass; phase 2 collects
-    P per-partition COUNTS (P scalars), prefix-sums them driver-side,
-    and adds the starting offset back map-side. Bucket ids are then
-    pure integer arithmetic `((rank-1)*3) div N` — no percentile
-    estimation, no float thresholds, exact and engine-agnostic. At
-    production scale the ranking input would be the bounded-vocab LM
-    score (see `ext_lm_unigram_score`); the two-phase rank itself
-    moves each row exactly once through the range exchange.
+    The global rank is `catalog.global_rank` on (avg DESC, doc_id):
+    one range exchange, P per-partition counts, offsets added back
+    natively — not a single-partition `Window.orderBy` (the
+    one-reducer funnel that cannot run at 100 TB), and no Python
+    stage. Bucket ids are then pure integer arithmetic
+    `((rank-1)*3) div N` — no percentile estimation, no float
+    thresholds, exact and engine-agnostic; an empty corpus returns no
+    rows. At production scale the ranking input would be the
+    bounded-vocab LM score (see `ext_lm_unigram_score`).
 
     Scores ride the same integer micro-nats contract as
     `ext_lm_unigram_score`; the avg is one exact-int/exact-int IEEE
     division, so ordering (and therefore every rank and bucket) is
     bit-reproducible against the oracle."""
-    import pandas as pd
-
     scores = _lm_doc_scores(spark, sf_dir).select(
         "doc_id", "n_tokens", "avg_logprob_micro"
     )
-    # scale-adaptive range-partition count (r13, guide §2)
-    n_parts = range_parts(sf_dir, "documents")
-    ranged = scores.repartitionByRange(
-        n_parts, F.col("avg_logprob_micro").desc(), F.col("doc_id")
-    ).sortWithinPartitions(F.col("avg_logprob_micro").desc(), F.col("doc_id"))
-
-    def _local_rank(batches):
-        rows = []
-        for pdf in batches:
-            rows.append(pdf)
-        pdf = (
-            pd.concat(rows)
-            if rows
-            else pd.DataFrame(
-                columns=["doc_id", "n_tokens", "avg_logprob_micro"]
-            )
-        )
-        pdf = pdf.reset_index(drop=True)
-        pdf["local_rank"] = pdf.index.astype("int64")
-        yield pdf[["doc_id", "n_tokens", "avg_logprob_micro", "local_rank"]]
-
-    local = ranged.mapInPandas(
-        _local_rank,
-        "doc_id long, n_tokens long, avg_logprob_micro double, local_rank long",
-    ).withColumn("pid", F.spark_partition_id())
-    # same materialization rule as ext_shard_manifest: the counts
-    # collect and the final projection must observe ONE partitioning
-    # (lazy, r9: the collect materializes it — one pass)
-    local = local.localCheckpoint(eager=False)
-
-    counts = local.groupBy("pid").agg(F.count("*").alias("c")).collect()
-    sums = {r.pid: r.c for r in counts}
-    n_docs = sum(sums.values())
-    offsets, acc = {}, 0
-    for pid in sorted(sums):
-        offsets[pid] = acc
-        acc += sums[pid]
-    off_expr = F.element_at(
-        F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv]),
-        F.col("pid"),
+    ranked, n_docs = global_rank(
+        scores,
+        [F.col("avg_logprob_micro").desc(), F.col("doc_id")],
+        range_parts(sf_dir, "documents"),
     )
-    rank = (F.col("local_rank") + off_expr + F.lit(1)).cast("long")
-    ranked = local.select(
-        "doc_id", "n_tokens", "avg_logprob_micro", rank.alias("rank")
-    )
-    bucket_ix = F.expr(f"((rank - 1) * {PPL_BUCKETS}) div {n_docs}")
+    bucket_ix = F.expr(f"((rank - 1) * {PPL_BUCKETS}) div {max(n_docs, 1)}")
     return ranked.select(
         "doc_id",
         "n_tokens",

@@ -60,6 +60,10 @@ def register(name: str, oracle: Optional[str] = None):
 # last round, (2) the queries whose last hard check is oldest;
 # tests/test_registry.py locks the list against typos.
 _WINDOW_PRIORITY = (
+    # -- rewritten: global ranks on the native catalog.global_rank --
+    "agg_quantiles_exact_dist",
+    "agg_user_gini",
+    "ext_lm_perplexity_buckets",
     # -- rewritten: default enrichment scorers became Column
     #    expressions; the an_* gold table is built by one function --
     "udf_vader_sentiment",
@@ -93,7 +97,6 @@ _WINDOW_PRIORITY = (
     "ext_token_entropy_rate",
     # -- the r7 evidence tier, registration order, filling 50 --
     "join_scd2_dim",
-    "agg_quantiles_exact_dist",
     "join_null_skew_split",
     "agg_decayed_score",
     "join_attribution_first_touch",
@@ -116,8 +119,6 @@ _WINDOW_PRIORITY = (
     "ext_emb_outlier_int8",
     "ext_hard_negative_mine",
     "ext_label_knn_noise",
-    "ext_tokenize_ids",
-    "ext_text_langmix",
 )
 
 

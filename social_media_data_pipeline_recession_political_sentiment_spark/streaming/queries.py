@@ -140,7 +140,10 @@ def _run_available_now(writer: DataStreamWriter, spark: SparkSession) -> Streami
 def drain_to_table(stream_df: DataFrame, output_mode: str) -> DataFrame:
     """Run the streaming query to completion into a memory sink and
     return the sink table. An empty source drains to an empty table
-    with the stream's schema."""
+    with the stream's schema. The sink's temp view is dropped once
+    drained: the returned frame holds the analyzed sink plan, so it
+    still reads the rows, and they are freed with the frame instead of
+    living in the session catalog."""
     spark = stream_df.sparkSession
     name = f"sink_{uuid.uuid4().hex[:8]}"
     _run_available_now(
@@ -149,7 +152,9 @@ def drain_to_table(stream_df: DataFrame, output_mode: str) -> DataFrame:
         .outputMode(output_mode),
         spark,
     )
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def land_parquet(stream_df: DataFrame) -> tuple[DataFrame, list]:

@@ -825,6 +825,46 @@ def test_exact_quantiles_collapse_and_match_sorted_positions(spark, tmp_path):
     assert {(r.target_rank, r.value) for r in out} == {(1, 3.25)}
 
 
+def test_global_rank_equals_single_partition_row_number(spark):
+    """catalog.global_rank over more range partitions than distinct
+    keys, so some partitions are empty and keys tie: every row's rank
+    equals row_number() over a single-partition window, ascending and
+    descending, NULL keys included; no rows rank to nothing."""
+    from pyspark.sql import Window as W
+
+    from social_media_data_pipeline_recession_political_sentiment_spark.catalog import (
+        global_rank,
+    )
+
+    rows = [(k % 3, (k % 3) * 10) for k in range(40)] + [(None, None)] * 2
+    df = spark.createDataFrame(rows, "k long, v long").repartition(4)
+    for order in ([F.col("k")], [F.col("k").desc()]):
+        ranked, n = global_rank(df, order, 8)
+        want = df.select("k", "v", F.row_number().over(W.orderBy(*order)))
+        got = [tuple(r) for r in ranked.collect()]
+        assert n == len(got) == len(rows)
+        assert set(got) == {tuple(r) for r in want.collect()}
+    empty, n = global_rank(df.limit(0), [F.col("k")], 8)
+    assert n == 0 and empty.collect() == []
+
+
+def test_rank_operators_run_no_python(spark, monkeypatch):
+    """The three global-rank operators build and run without a
+    mapInPandas stage."""
+
+    def _no_python(*args, **kwargs):
+        raise AssertionError("mapInPandas called")
+
+    monkeypatch.setattr(type(spark.range(0)), "mapInPandas", _no_python)
+    qs = registry.queries()
+    for name in (
+        "agg_quantiles_exact_dist",
+        "agg_user_gini",
+        "ext_lm_perplexity_buckets",
+    ):
+        assert qs[name](spark, SF_SMOKE).collect(), name
+
+
 def test_scd2_versions_partition_the_timeline(spark):
     """join_scd2_dim: the 3 validity intervals per customer tile
     [1992-01-01, 9999-12-31) with no gap or overlap, so every order

@@ -806,3 +806,27 @@ def test_stateful_count_sees_events_rewritten_in_place(spark):
     assert counts() == {1: 2, 2: 1}
     write_events([1, 3, 3, 3])
     assert counts() == {1: 1, 3: 3}
+
+
+def test_drain_to_table_leaves_no_sink_view(spark):
+    """Each drain drops its memory-sink temp view once drained, and the
+    returned frames still read their rows afterwards."""
+    from social_media_data_pipeline_recession_political_sentiment_spark.streaming.queries import (
+        drain_to_table,
+    )
+
+    work = tempfile.mkdtemp(prefix="smdp_drain_")
+    try:
+        schema = "k long, v string"
+        spark.createDataFrame(
+            [(1, "a"), (2, "b"), (1, "c")], schema
+        ).coalesce(1).write.parquet(os.path.join(work, "src"))
+        src = spark.readStream.schema(schema).parquet(os.path.join(work, "src"))
+        counts = drain_to_table(src.groupBy("k").count(), "complete")
+        rows = drain_to_table(src, "append")
+        tables = [t.name for t in spark.catalog.listTables()]
+        assert [t for t in tables if t.startswith("sink_")] == []
+        assert sorted(counts.collect()) == [(1, 2), (2, 1)]
+        assert sorted(rows.collect()) == [(1, "a"), (1, "c"), (2, "b")]
+    finally:
+        shutil.rmtree(work, ignore_errors=True)

@@ -13,7 +13,7 @@ Multi-scans are not automatically wrong (unions of genuinely
 different projections/filters of one table can beat one wide scan;
 iterative ops re-scan checkpoints, not parquet) — every flagged row
 needs a human verdict: fixed, or justified in the operator's
-docstring/PLANS.md.
+docstring.
 """
 
 from __future__ import annotations

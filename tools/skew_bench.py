@@ -1,6 +1,6 @@
 """Skew evidence for the salted-join pattern (`join_salted_skew`).
 
-PLANS.md shows the salted plan SHAPE at sf0.01; this tool shows the
+`.explain()` shows the salted plan SHAPE at sf0.01; this tool shows the
 salted WIN on data where it matters: a zipf-like fact table (one key
 owns ~80% of rows) joined to a per-key dim with AQE's skew-join
 split and broadcast DISABLED — isolating what explicit salting buys
