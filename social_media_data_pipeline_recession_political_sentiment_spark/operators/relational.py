@@ -26,7 +26,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import compute_once, global_rank, literal_frame, load, range_parts
+from ..catalog import (
+    compute_once,
+    global_rank,
+    literal_frame,
+    load,
+    range_parts,
+    staged,
+)
 from ..functions.json_contract import (
     json_int_field,
     json_int_field_sql,
@@ -571,20 +578,20 @@ def sink_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     then reads back one day: the scan's file listing touches only the
     `day=2024-01-15` directory — at 100 TB the difference between
     scanning one day and scanning three years. Pruning is visible in
-    `.explain` as PartitionFilters on the scan node."""
-    import hashlib
-    import os
-
-    gold = os.path.join(
-        "/tmp/smdp_gold", hashlib.sha1(sf_dir.encode()).hexdigest()[:10], "events_by_day"
-    )
+    `.explain` as PartitionFilters on the scan node. The gold copy is
+    kept by `catalog.staged`, so events rewritten at the same path are
+    written again."""
     e = load(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
-    if not os.path.exists(os.path.join(gold, "_SUCCESS")):
-        e.write.mode("overwrite").partitionBy("day").parquet(gold)
+    gold = staged(
+        sf_dir,
+        "events.parquet",
+        "events_by_day",
+        lambda path: e.write.mode("overwrite").partitionBy("day").parquet(path),
+    )
     # explicit read-back schema: an EMPTY source writes no data files
-    # and no partition dirs — schema inference over the bare _SUCCESS
-    # marker is UNABLE_TO_INFER_SCHEMA (r7 empty-corpus sweep); the
-    # write-side frame knows the schema, partition column included
+    # and no partition dirs, and schema inference over the bare
+    # _SUCCESS marker fails with UNABLE_TO_INFER_SCHEMA; the write-side
+    # frame knows the schema, partition column included
     g = spark.read.schema(e.schema).parquet(gold)
     return (
         g.filter(F.col("day") == F.lit("2024-01-15").cast("date"))

@@ -28,7 +28,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import compute_once, literal_frame, load, session_pin
+from ..catalog import SourceMemo, compute_once, literal_frame, load, memo, session_pin
 from ..functions.hashing import doc_bucket, doc_bucket_sql
 from ..registry import register
 from .dedup import INCR_BASE_BUCKETS
@@ -397,23 +397,11 @@ def _ivf_scored(spark: SparkSession, sf_dir: str, probe_all: bool) -> DataFrame:
     )
 
 
-# Session memo for the trained IVF model (r14): the quantizer
-# training — bounded sample toPandas + IVF_ITERS Lloyd loops + the
-# query-side probe ordering — is IDENTICAL for both probe modes (the
-# exhaustive mode only slices more columns of the same stable probe
-# order), so the two driver collect jobs and the Lloyd loop now run
-# once per (app, embeddings-fingerprint) instead of once per
-# `_ivf_scored_build`. Two real consumers: the pinned `ivf_cand`
-# build and every per-invocation exhaustive build (that pin was
-# dropped — verdict r13 item 2 — so the exhaustive CANDIDATE SET is
-# honestly rebuilt per invocation; only the deterministic O(cap×dim)
-# MODEL is shared, the established bounded-driver-sample device).
-# Same key discipline as catalog.session_pin: applicationId +
-# realpath + recursive source fingerprint; unstatable sources are
-# never memoized. No results are cached — assignment, probing and
-# scoring still execute from parquet on every action.
-_IVF_MODEL_MEMO: dict = {}
-_IVF_MODEL_MEMO_CAP = 16
+# The trained IVF quantizer, shared by both probe modes: the exhaustive
+# mode only slices more columns of the same stable probe order. Only
+# the O(cap x dim) model is memoized; assignment, probing and scoring
+# still execute from parquet on every action.
+_IVF_MODEL_MEMO = SourceMemo(16)
 
 
 def _ivf_model(spark: SparkSession, sf_dir: str, e: DataFrame):
@@ -421,22 +409,22 @@ def _ivf_model(spark: SparkSession, sf_dir: str, e: DataFrame):
     (cent, q_ids, order, nlist) where `order` is each query's FULL
     stable (d2, cid) probe ordering, or None when the corpus or the
     query set is empty. `e` is the finite-vector universe the caller
-    scores (the training reads it; the memo key ignores it since it
-    is a pure function of the source)."""
-    import os as _os
-
-    import numpy as np
-
-    from ..catalog import source_fingerprint
-
-    fp = source_fingerprint(_os.path.join(sf_dir, "embeddings.parquet"))
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.realpath(sf_dir),
-        fp,
+    scores; the training reads it, and the model is memoized under
+    `catalog.memo`'s key for `embeddings.parquet`, since it is a pure
+    function of that source."""
+    return memo(
+        _IVF_MODEL_MEMO,
+        spark,
+        sf_dir,
+        "embeddings.parquet",
+        "ivf_model",
+        lambda: _ivf_train(e),
     )
-    if fp is not None and key in _IVF_MODEL_MEMO:
-        return _IVF_MODEL_MEMO[key]
+
+
+def _ivf_train(e: DataFrame):
+    """The quantizer training behind `_ivf_model` (docstring there)."""
+    import numpy as np
 
     model = None
     sample = _ivf_train_sample(e).toPandas()
@@ -447,7 +435,7 @@ def _ivf_model(spark: SparkSession, sf_dir: str, e: DataFrame):
             [np.asarray(v, dtype=np.float64) for v in sample["embedding"]]
         )
         dim = mat.shape[1]
-        # dim guard (r11 ADVICE): the static oracle unrolls EMB_DIM dims
+        # the static oracle unrolls EMB_DIM dims
         assert dim == EMB_DIM, (
             f"IVF miner: embedding dim {dim} != {EMB_DIM} — the DuckDB "
             "oracle's dims CTE is generated for EMB_DIM (similarity.py)"
@@ -482,10 +470,6 @@ def _ivf_model(spark: SparkSession, sf_dir: str, e: DataFrame):
             order = np.argsort(qd2, axis=1, kind="stable")
             model = (cent, q_ids, order, nlist)
 
-    if fp is not None:
-        while len(_IVF_MODEL_MEMO) >= _IVF_MODEL_MEMO_CAP:
-            _IVF_MODEL_MEMO.pop(next(iter(_IVF_MODEL_MEMO)))
-        _IVF_MODEL_MEMO[key] = model
     return model
 
 

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from ..catalog import literal_frame, load
 from ..enrich.hatespeech import an_table, enrich_table
 from ..registry import register
-from ..session import prune_stale_workdirs
+from ..session import fresh_workdir
 
 
 @register(
@@ -78,10 +78,7 @@ def maintenance_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     copy of events to /tmp, compacts it to size-targeted files, and
     reports before/after file counts + row conservation. On a lake
     deployment this is the job that keeps scan task counts sane."""
-    import uuid
-
-    prune_stale_workdirs("/tmp/smdp_compact")
-    work = f"/tmp/smdp_compact/{uuid.uuid4().hex[:8]}"
+    work = fresh_workdir("/tmp/smdp_compact")
     frag_dir, compact_dir = os.path.join(work, "frag"), os.path.join(work, "compact")
     e = load(spark, sf_dir, "events")
     e.repartition(16).write.parquet(frag_dir)  # simulate small-file buildup
@@ -216,13 +213,11 @@ def stream_medallion_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     nightly `availableNow` catch-up run over whatever the fetchers
     landed."""
     import shutil
-    import uuid
 
     from ..sources.rest_json import REDDIT_LISTING_FIXTURE
     from ..streaming.ingest import ingest_to_silver
 
-    prune_stale_workdirs("/tmp/smdp_medallion")
-    work = f"/tmp/smdp_medallion/{uuid.uuid4().hex[:8]}"
+    work = fresh_workdir("/tmp/smdp_medallion")
     bronze, silver, ckpt = (
         os.path.join(work, d) for d in ("bronze", "silver", "ckpt")
     )

@@ -145,29 +145,27 @@ def get_session(
     return apply_engine_confs(spark)
 
 
-def prune_stale_workdirs(parent: str, max_age_s: int = 24 * 3600) -> None:
-    """Remove leftover per-invocation work dirs under ``parent`` older
-    than ``max_age_s``. The fixture-driven streaming operators create
-    a fresh uuid-named dir per call (checkpoint state cannot be
-    reused across runs); without pruning, repeated verify/bench
-    rounds leak disk unboundedly. The 24 h default is deliberately
-    far beyond any verify/bench session so a dir another invocation
-    might still lazily read (e.g. a returned DataFrame over its
-    silver parquet, collected later) is never deleted from under it —
-    a directory's top-level mtime freezes at creation, so a tight
-    cutoff WOULD race long-lived sessions."""
+def fresh_workdir(parent: str) -> str:
+    """Create and return a new uuid-named work dir under ``parent`` for
+    one call of an operator that writes files (streaming checkpoints
+    cannot be reused across runs, sinks write whole table copies).
+    Siblings older than a day are removed first, so repeated sessions
+    do not leak disk. The day is far beyond any verify or bench
+    session, because a frame returned by another call may still lazily
+    read its dir, and a dir's top-level mtime freezes at creation."""
     import shutil
     import time
+    import uuid
 
-    try:
-        entries = os.listdir(parent)
-    except FileNotFoundError:
-        return
-    cutoff = time.time() - max_age_s
-    for name in entries:
+    os.makedirs(parent, exist_ok=True)
+    cutoff = time.time() - 24 * 3600
+    for name in os.listdir(parent):
         path = os.path.join(parent, name)
         try:
             if os.path.getmtime(path) < cutoff:
                 shutil.rmtree(path, ignore_errors=True)
         except OSError:
             continue
+    work = os.path.join(parent, uuid.uuid4().hex[:8])
+    os.makedirs(work)
+    return work

@@ -26,7 +26,6 @@ just that a write happened.
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,18 +33,12 @@ from pyspark.sql import functions as F
 from ..catalog import literal_frame, load
 from ..operators.relational import FINITE_CENTS_SQL
 from ..registry import register
-from ..session import prune_stale_workdirs
+from ..session import fresh_workdir
 
 
-def _workdir(prefix: str) -> str:
-    # every sink query fills its uuid dir with full events/orders
-    # parquet copies; prune >24h-old siblings so repeated
-    # verify/bench rounds don't leak disk unboundedly (same policy
-    # as the streaming workdirs in streaming/ingest.py)
-    prune_stale_workdirs("/tmp/smdp_sinks")
-    d = f"/tmp/smdp_sinks/{prefix}_{uuid.uuid4().hex[:8]}"
-    os.makedirs(d, exist_ok=True)
-    return d
+# Parent of every sink query's per-call work dir; each fills its dir
+# with full events/orders parquet copies.
+_SINK_ROOT = "/tmp/smdp_sinks"
 
 
 @register(
@@ -62,7 +55,7 @@ def sink_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-modify-write), then the sink is read back. At scale each
     micro-batch/job appends its partitions independently — writers
     never coordinate row-by-row with the sink."""
-    sink = os.path.join(_workdir("insert"), "orders_sink")
+    sink = os.path.join(fresh_workdir(_SINK_ROOT), "orders_sink")
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -81,7 +74,7 @@ def sink_create_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     `Youtube_Analysis.py:65-82`). Issued twice to prove idempotence,
     then populated with INSERT OVERWRITE (deterministic on re-run,
     unlike append) and read back through the catalog."""
-    loc = os.path.join(_workdir("ddl"), "region_tbl")
+    loc = os.path.join(fresh_workdir(_SINK_ROOT), "region_tbl")
     name = "smdp_region_ddl"
     ddl = (
         f"CREATE TABLE IF NOT EXISTS {name} "
@@ -115,7 +108,7 @@ def sink_batched_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ceil(rows/5000) files landed, and no file exceeding the commit
     unit (per-file row counts read back via the `_metadata.file_path`
     scan column, itself a distributed aggregation)."""
-    sink = os.path.join(_workdir("batched"), "events_sink")
+    sink = os.path.join(fresh_workdir(_SINK_ROOT), "events_sink")
     e = load(spark, sf_dir, "events")
     e.write.option("maxRecordsPerFile", 5000).parquet(sink)
     per_file = (
@@ -153,7 +146,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     observable (n_valued counts only evolved rows). Merge cost is
     footer-only at planning; the data path still reads each file with
     its own schema, so evolution costs nothing per row."""
-    sink = os.path.join(_workdir("evolve"), "events_evolving")
+    sink = os.path.join(fresh_workdir(_SINK_ROOT), "events_evolving")
     e = load(spark, sf_dir, "events")
     # v1 files: the column doesn't exist yet
     e.filter(F.col("event_id") % 2 == 1).select("event_id", "ts", "event_type").write.mode(
@@ -199,7 +192,7 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     per partition directory (each date/source dir compacts
     independently, `maintenance_vacuum`'s unit), never as one global
     job — this operator is that per-directory unit."""
-    work = _workdir("compact")
+    work = fresh_workdir(_SINK_ROOT)
     small = os.path.join(work, "events_small")
     comp = os.path.join(work, "events_compacted")
     e = load(spark, sf_dir, "events")
@@ -247,7 +240,7 @@ def sink_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     embarrassingly parallel; the checksum is an algebraic sum with
     map-side combine. Codec verification reads file PATHS from scan
     metadata — no footer parsing, no driver filesystem walk."""
-    work = _workdir("codec")
+    work = fresh_workdir(_SINK_ROOT)
     e = load(spark, sf_dir, "events")
     outs = {}
     for codec in ("zstd", "snappy"):
@@ -346,7 +339,7 @@ def sink_scd1_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("keep"))
         .alias("action"),
     )
-    out = os.path.join(_workdir("scd1"), "customer_merged")
+    out = os.path.join(fresh_workdir(_SINK_ROOT), "customer_merged")
     merged.write.parquet(out)
     return spark.read.parquet(out)
 
@@ -422,8 +415,7 @@ def sink_sorted_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost one extra pass and make the layout an auditable CONTRACT
     (the oracle recomputes it bit-for-bit through the SAME `_pq_sql`
     interpolation tree over the sorted key array — native
-    `percentile` vs `quantile_cont` differ in ulps, the r6
-    rank-band-sketch finding); at 100 TB swap in `percentile_approx`
+    `percentile` vs `quantile_cont` differ in ulps); at 100 TB swap in `percentile_approx`
     boundaries and keep the same audit with rank-error bounds
     (`agg_quantile_sketch_audit`).
 
@@ -455,7 +447,7 @@ def sink_sorted_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = o.crossJoin(F.broadcast(b)).select(
         "o_totalprice", run_expr.cast("long").alias("run")
     )
-    sink = os.path.join(_workdir("sorted_runs"), "runs")
+    sink = os.path.join(fresh_workdir(_SINK_ROOT), "runs")
     (
         assigned.repartition("run")
         .sortWithinPartitions("run", "o_totalprice")
@@ -465,9 +457,8 @@ def sink_sorted_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # explicit read-back schema: an EMPTY orders table writes no data
     # files and no partition dirs — schema inference over the bare
-    # _SUCCESS marker is UNABLE_TO_INFER_SCHEMA (r7 empty-corpus
-    # sweep class); the write-side frame knows the schema, partition
-    # column included
+    # _SUCCESS marker is UNABLE_TO_INFER_SCHEMA; the write-side frame
+    # knows the schema, partition column included
     back = spark.read.schema(assigned.schema).parquet(sink)
     return back.groupBy(F.col("run").cast("long").alias("run")).agg(
         F.count("*").alias("n_rows"),
@@ -515,7 +506,7 @@ def sink_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     atomic manifest append, never a rewrite of data files. This is
     the table-format pattern `sink_batched_commit` (task-level
     atomicity) composes into at the multi-commit level."""
-    wd = _workdir("snapshot")
+    wd = fresh_workdir(_SINK_ROOT)
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     base_path = os.path.join(wd, "base")
     delta_path = os.path.join(wd, "delta")
@@ -580,12 +571,12 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: writes are partition-granular (the correction
     touches one directory); the audit is one day-keyed agg over the
     read-back."""
-    wd = _workdir("dyn_overwrite")
+    wd = fresh_workdir(_SINK_ROOT)
     sink = os.path.join(wd, "events_by_day")
     e = load(spark, sf_dir, "events").select(
         "event_id",
         F.expr("CAST(ts AS LONG) div 86400").alias("day_num"),
-        # finite-value pin (r7 non-finite sweep; shared device)
+        # finite-value pin (shared device)
         F.expr(FINITE_CENTS_SQL).alias("cents"),
     )
     e.write.partitionBy("day_num").mode("overwrite").parquet(sink)
@@ -603,8 +594,8 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
     # explicit read-back schema: an EMPTY source writes no data files
     # and no partition dirs, and schema inference over a bare
-    # _SUCCESS marker is UNABLE_TO_INFER_SCHEMA (r7 empty-corpus
-    # sweep) — the write-side frame already knows the schema
+    # _SUCCESS marker is UNABLE_TO_INFER_SCHEMA — the write-side frame
+    # already knows the schema
     back = spark.read.schema(e.schema).parquet(sink)
     return back.groupBy(F.col("day_num").cast("long").alias("day_num")).agg(
         F.count("*").alias("n_rows"), F.sum("cents").alias("total_cents")
@@ -668,14 +659,14 @@ def scan_schema_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     `scan_schema_evolution` note). Read-back robustness: the count
     scan passes an EXPLICIT unified schema, so a zero-row cohort —
     or a fully empty events table, where parquet leaves
-    _SUCCESS-only dirs — still reads (the r7 UNABLE_TO_INFER_SCHEMA
-    sink lesson), while presence still comes from real footers."""
+    _SUCCESS-only dirs — still reads (no UNABLE_TO_INFER_SCHEMA),
+    while presence still comes from real footers."""
     import glob as _glob
 
     import pyarrow.parquet as _pq
     from pyspark.sql import types as T
 
-    sink = os.path.join(_workdir("drift"), "events_drift")
+    sink = os.path.join(fresh_workdir(_SINK_ROOT), "events_drift")
     e = load(spark, sf_dir, "events")
     parity = F.coalesce(F.col("event_id") % 2, F.lit(0))
     e.filter(parity == 1).select("event_id", "ts", "event_type").write.mode(
@@ -818,7 +809,7 @@ def sink_minmax_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                "AS BIGINT)").alias("run"),
         "us",
     )
-    sink = os.path.join(_workdir("minmax_prune"), "runs")
+    sink = os.path.join(fresh_workdir(_SINK_ROOT), "runs")
     (
         assigned.repartition("run")
         .sortWithinPartitions("run", "us")

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import prune_stale_workdirs
+from ..session import fresh_workdir
 from ..sources.rest_json import (
     REDDIT_LISTING_FIXTURE,
     REDDIT_LISTING_SCHEMA,
@@ -137,10 +137,8 @@ def stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     HTTP-level backoff itself stays in the fetcher, outside engine
     semantics."""
     import shutil
-    import uuid
 
-    prune_stale_workdirs("/tmp/smdp_ratelimit")
-    work = f"/tmp/smdp_ratelimit/{uuid.uuid4().hex[:8]}"
+    work = fresh_workdir("/tmp/smdp_ratelimit")
     bronze = os.path.join(work, "bronze")
     os.makedirs(bronze)
     for i in range(3):
@@ -183,10 +181,8 @@ def stream_microbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     Re-runs are idempotent: the anti-join keeps the silver table
     stable (asserted in tests/test_streaming.py)."""
     import shutil
-    import uuid
 
-    prune_stale_workdirs("/tmp/smdp_ingest")
-    work = f"/tmp/smdp_ingest/{uuid.uuid4().hex[:8]}"
+    work = fresh_workdir("/tmp/smdp_ingest")
     bronze, silver, ckpt = (os.path.join(work, d) for d in ("bronze", "silver", "ckpt"))
     os.makedirs(bronze)
     shutil.copy(REDDIT_LISTING_FIXTURE, os.path.join(bronze, "page_0.json"))

@@ -37,11 +37,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from ..catalog import load, ntz_as_utc_instant, source_fingerprint
+from ..catalog import load, ntz_as_utc_instant, staged
 from ..functions.hashing import doc_bucket_sql
 from ..operators.dedup import INCR_BASE_BUCKETS
 from ..registry import register
-from ..session import prune_stale_workdirs, scoped_shuffle_partitions
+from ..session import fresh_workdir, scoped_shuffle_partitions
 
 EVENTS_STREAM_SCHEMA = T.StructType(
     [
@@ -117,15 +117,8 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 STATE_PARTITIONS = 2
 
 # Parent of the per-call work dirs (landed rows, checkpoints, written
-# fixtures); each call gets a fresh uuid dir, pruned after a day.
+# fixtures).
 _WORK_ROOT = "/tmp/smdp_landing"
-
-
-def _fresh_workdir() -> str:
-    prune_stale_workdirs(_WORK_ROOT)
-    work = os.path.join(_WORK_ROOT, uuid.uuid4().hex[:8])
-    os.makedirs(work)
-    return work
 
 
 def _run_available_now(writer: DataStreamWriter, spark: SparkSession) -> StreamingQuery:
@@ -165,7 +158,7 @@ def land_parquet(stream_df: DataFrame) -> tuple[DataFrame, list]:
     files with its offsets, so the landed rows are exactly the
     stream's rows, once each; an empty source lands an empty frame."""
     spark = stream_df.sparkSession
-    work = _fresh_workdir()
+    work = fresh_workdir(_WORK_ROOT)
     out = os.path.join(work, "out")
     q = _run_available_now(
         stream_df.writeStream.format("parquet")
@@ -260,31 +253,20 @@ def stream_lookback_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _staged_split_events(spark: SparkSession, sf_dir: str, n_splits: int = 2) -> str:
-    """Stage events as n_splits parquet files so a maxFilesPerTrigger=1
-    file source replays them as n_splits distinct micro-batches. The
-    split is rebuilt whenever the fingerprint of `events.parquet`
-    stored beside it differs, so a table rewritten at the same path
-    is never served from a stale split."""
-    stage = os.path.join(
-        "/tmp/smdp_stream",
-        hashlib.sha1(sf_dir.encode()).hexdigest()[:10],
+    """Events staged as n_splits parquet files, so a
+    maxFilesPerTrigger=1 file source replays them as n_splits distinct
+    micro-batches. Kept by `catalog.staged`: a table rewritten at the
+    same path is restaged, never served from a stale split."""
+    return staged(
+        sf_dir,
+        "events.parquet",
         f"events_split{n_splits}",
+        lambda path: load(spark, sf_dir, "events")
+        .select("event_id", "user_id")
+        .repartition(n_splits, "event_id")
+        .write.mode("overwrite")
+        .parquet(path),
     )
-    # `_`-prefixed: the file source skips it when listing the split
-    stamp = os.path.join(stage, "_SOURCE_FINGERPRINT")
-    fp = repr(source_fingerprint(os.path.join(sf_dir, "events.parquet")))
-    try:
-        with open(stamp) as f:
-            fresh = f.read() == fp
-    except FileNotFoundError:
-        fresh = False
-    if not fresh:
-        load(spark, sf_dir, "events").select("event_id", "user_id").repartition(
-            n_splits, "event_id"
-        ).write.mode("overwrite").parquet(stage)
-        with open(stamp, "w") as f:
-            f.write(fp)
-    return stage
 
 
 @register(
@@ -539,7 +521,7 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tracks."""
     import json as _json
 
-    bronze = os.path.join(_fresh_workdir(), "bronze")
+    bronze = os.path.join(fresh_workdir(_WORK_ROOT), "bronze")
     os.makedirs(bronze)
     eid = 0
     for i, (fn, tss) in enumerate(_LATE_FILES):

@@ -1949,9 +1949,9 @@ def test_pq_codebook_argmin_tiebreak_matches_reference(spark, vecs):
 
 
 # --------------------------------------------------------------------------
-# session_pin / source_fingerprint invalidation (r10 verdict item 8 +
-# ADVICE: the memo seam is correctness-critical cache logic — prove
-# that file-layout mutations recompute and identical layouts reuse)
+# source-keyed memo invalidation: the memo seam is correctness-critical
+# cache logic — prove that file-layout mutations recompute and identical
+# layouts reuse
 
 _pin_ops = st.lists(
     st.sampled_from(["noop", "append", "append_nested", "delete", "rewrite"]),
@@ -1963,48 +1963,77 @@ _pin_ops = st.lists(
 @given(_pin_ops)
 @settings(**_SETTINGS)
 def test_session_pin_recompute_vs_reuse(spark, tmp_path_factory, ops):
-    """`session_pin` is keyed by the recursive source fingerprint:
-    it rebuilds exactly when the current file layout differs from the
-    LIVE pin's layout, and reuses the pin when the layout is
-    unchanged. Since r12, pinning a NEW layout evicts the same-tag
-    pin built under the old one (r11 ADVICE) — so a delete that
-    RESTORES an earlier layout rebuilds rather than reusing: the old
-    frame's partitions could have been lineage-recomputed under the
-    interim layout (executor block loss re-reads the source), and
-    serving it after a restore would silently mix interim data into
-    an exactness-contract frame. Mutations exercised: append
-    (top-level AND nested — the r10-ADVICE non-recursive-fingerprint
-    gap), delete, and an mtime-preserving rewrite that changes the
-    file size."""
+    """`session_pin`, `load` and the IVF model are keyed by the
+    recursive source fingerprint: each rebuilds exactly when the
+    current file layout differs from the LIVE entry's layout, and
+    reuses the entry when the layout is unchanged. Building under a
+    NEW layout drops the entry built under the old one, so each store
+    holds one key per tag, under the current fingerprint, and a
+    delete that RESTORES an earlier layout rebuilds rather than
+    reusing: the old frame's partitions could have been
+    lineage-recomputed under the interim layout (executor block loss
+    re-reads the source), and serving it after a restore would
+    silently mix interim data into an exactness-contract frame.
+    Mutations exercised: append (top-level AND nested — a
+    non-recursive fingerprint misses the nested one), delete, and an
+    mtime-preserving rewrite that changes the file size. The load and
+    IVF builds are stubbed: the key rule, not the scan or the
+    training, is under test."""
     import os
     import shutil
+    from unittest import mock
 
     from social_media_data_pipeline_recession_political_sentiment_spark import catalog
+    from social_media_data_pipeline_recession_political_sentiment_spark.operators import (
+        similarity,
+    )
 
     sf_dir = str(tmp_path_factory.mktemp("pin_sf"))
+    real = os.path.realpath(sf_dir)
     src = os.path.join(sf_dir, "documents.parquet")
     os.makedirs(src)
+    os.symlink(src, os.path.join(sf_dir, "embeddings.parquet"))  # the IVF source
     with open(os.path.join(src, "part-0"), "wb") as f:
         f.write(b"x" * 8)
 
-    builds = []
+    builds = {"pin": 0, "load": 0, "ivf": 0}
 
     def build():
-        builds.append(1)
+        builds["pin"] += 1
         return spark.range(3)
 
-    saved = dict(catalog._SESSION_PINS)
+    def load_build(*_):
+        builds["load"] += 1
+        return spark.range(1)
+
+    def ivf_train(_e):
+        builds["ivf"] += 1
+        return object()
+
+    tag = f"pin_prop_{id(ops)}"
+    stores = (
+        (catalog._SESSION_PINS, tag),
+        (catalog._LOAD_MEMO, "documents"),
+        (similarity._IVF_MODEL_MEMO, "ivf_model"),
+    )
+
+    def call_all():
+        catalog.session_pin(spark, sf_dir, tag, build)
+        catalog.load(spark, sf_dir, "documents")
+        similarity._ivf_model(spark, sf_dir, None)
+
     catalog.clear_session_pins()
+    mock.patch.object(catalog, "_load_build", load_build).start()
+    mock.patch.object(similarity, "_ivf_train", ivf_train).start()
     try:
-        tag = f"pin_prop_{id(ops)}"
-        catalog.session_pin(spark, sf_dir, tag, build)
-        assert len(builds) == 1  # cold build
-        catalog.session_pin(spark, sf_dir, tag, build)
-        assert len(builds) == 1  # warm reuse, nothing changed
-        live = catalog.source_fingerprint(src)  # the LIVE pin's layout
+        call_all()
+        assert builds == {"pin": 1, "load": 1, "ivf": 1}  # cold build
+        call_all()
+        assert builds == {"pin": 1, "load": 1, "ivf": 1}  # warm reuse
+        live = catalog.source_fingerprint(src)  # the LIVE entries' layout
         n_extra = 0  # files added beyond part-0 (delete candidates)
         for i, op in enumerate(ops):
-            before = len(builds)
+            before = builds["pin"]
             if op == "append":
                 with open(os.path.join(src, f"part-a{i}"), "wb") as f:
                     f.write(b"y" * (i + 1))
@@ -2031,79 +2060,21 @@ def test_session_pin_recompute_vs_reuse(spark, tmp_path_factory, ops):
             fp = catalog.source_fingerprint(src)
             fresh = fp != live
             live = fp
-            catalog.session_pin(spark, sf_dir, tag, build)
+            call_all()
             want = before + 1 if fresh else before
-            assert len(builds) == want, (
-                f"{op}: rebuild iff the layout differs from the live pin's"
+            assert builds == {"pin": want, "load": want, "ivf": want}, (
+                f"{op}: rebuild iff the layout differs from the live entry's"
             )
-            # the superseded pin is gone — exactly one live key per tag
-            assert (
-                len([k for k in catalog._SESSION_PINS if k[1] == tag]) == 1
-            )
+            # the superseded entries are gone — one live key per tag
+            for store, t in stores:
+                assert [k[3] for k in store if k[1:3] == (t, real)] == [fp]
             # invariant: a second immediate call never rebuilds
-            catalog.session_pin(spark, sf_dir, tag, build)
-            assert len(builds) == want
+            call_all()
+            assert builds == {"pin": want, "load": want, "ivf": want}
     finally:
+        mock.patch.stopall()
         catalog.clear_session_pins()
-        catalog._SESSION_PINS.update(saved)
         shutil.rmtree(sf_dir, ignore_errors=True)
-
-
-def test_session_pin_self_heals_released_storage(spark, tmp_path):
-    """r13: a pin whose storage was released behind the seam's back
-    (an external unpersist, the clear-and-restore some harnesses do)
-    must re-persist on next access — ALL same-app entries, inner
-    build-time pins included — instead of silently serving an
-    unpersisted frame that re-executes its mine per consumer branch.
-    No rebuild happens: the same frame objects are re-registered."""
-    import os
-
-    from pyspark import StorageLevel
-
-    from social_media_data_pipeline_recession_political_sentiment_spark import (
-        catalog,
-    )
-
-    sf_dir = str(tmp_path)
-    with open(os.path.join(sf_dir, "documents.parquet"), "wb") as f:
-        f.write(b"h" * 8)
-
-    builds = []
-
-    def inner():
-        builds.append("inner")
-        return spark.range(3)
-
-    def outer():
-        builds.append("outer")
-        return catalog.session_pin(spark, sf_dir, "heal_inner", inner).select(
-            "id"
-        )
-
-    saved = dict(catalog._SESSION_PINS)
-    catalog.clear_session_pins()
-    try:
-        df = catalog.session_pin(spark, sf_dir, "heal_outer", outer)
-        df.count()
-        assert builds == ["outer", "inner"]
-        # release storage behind the seam's back, keep the entries
-        stale = dict(catalog._SESSION_PINS)
-        catalog.clear_session_pins()
-        catalog._SESSION_PINS.update(stale)
-        assert all(
-            v.storageLevel == StorageLevel.NONE
-            for v in catalog._SESSION_PINS.values()
-        )
-        healed = catalog.session_pin(spark, sf_dir, "heal_outer", outer)
-        assert builds == ["outer", "inner"]  # re-persisted, NOT rebuilt
-        assert all(
-            v.storageLevel != StorageLevel.NONE
-            for v in catalog._SESSION_PINS.values()
-        ), "self-heal must re-persist every same-app entry"
-        assert healed.count() == 3
-    finally:
-        catalog.clear_session_pins()
-        catalog._SESSION_PINS.update(saved)
 
 
 def test_session_pin_failure_stores_nothing_and_clear_releases(spark, tmp_path):
@@ -2128,7 +2099,6 @@ def test_session_pin_failure_stores_nothing_and_clear_releases(spark, tmp_path):
             raise RuntimeError("executor lost")
         return spark.range(2)
 
-    saved = dict(catalog._SESSION_PINS)
     catalog.clear_session_pins()
     try:
         import pytest as _pytest
@@ -2145,7 +2115,6 @@ def test_session_pin_failure_stores_nothing_and_clear_releases(spark, tmp_path):
         assert len(calls) == 3 and df2.count() == 2  # rebuilt cleanly
     finally:
         catalog.clear_session_pins()
-        catalog._SESSION_PINS.update(saved)
 
 
 def test_source_fingerprint_recursive_and_unstatable(tmp_path):
@@ -2198,7 +2167,6 @@ def test_session_pin_no_eviction_full_single_sf_sweep(spark):
     )
 
     registry.load_all()
-    saved = dict(catalog._SESSION_PINS)
     catalog.clear_session_pins()
     catalog._EVICTIONS.clear()
     try:
@@ -2272,4 +2240,3 @@ def test_session_pin_no_eviction_full_single_sf_sweep(spark):
         assert 3 * len(tags) <= catalog._SESSION_PIN_CAP
     finally:
         catalog.clear_session_pins()
-        catalog._SESSION_PINS.update(saved)

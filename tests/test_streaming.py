@@ -4,11 +4,14 @@ FIXTURES.md §B.6)."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 import shutil
 import tempfile
+from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from social_media_data_pipeline_recession_political_sentiment_spark.sources.rest_json import (
@@ -777,12 +780,19 @@ def test_datacard_fold_resumes_from_checkpoint(spark):
     ]
 
 
-def test_stateful_count_sees_events_rewritten_in_place(spark):
-    """`stream_stateful_count` replays a staged split of events; when
+@pytest.mark.parametrize(
+    "query, expect",
+    [
+        ("stream_stateful_count", lambda users: Counter(users).items()),
+        ("sink_partitioned_prune", lambda users: [(dt.date(2024, 1, 15), len(users))]),
+    ],
+    ids=["stream_stateful_count", "sink_partitioned_prune"],
+)
+def test_stateful_count_sees_events_rewritten_in_place(spark, query, expect):
+    """`stream_stateful_count` replays a staged split of events and
+    `sink_partitioned_prune` reads a staged partitioned gold copy; when
     `events.parquet` is rewritten at the same path, the next run must
-    count the new rows, not the split staged from the old ones."""
-    import datetime as dt
-
+    count the new rows, not the copy staged from the old ones."""
     from social_media_data_pipeline_recession_political_sentiment_spark.registry import queries
 
     sf_dir = tempfile.mkdtemp(prefix="smdp_sf_")
@@ -790,7 +800,7 @@ def test_stateful_count_sees_events_rewritten_in_place(spark):
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string"
     )
-    ts = dt.datetime(2024, 1, 1)
+    ts = dt.datetime(2024, 1, 15, 12)
 
     def write_events(users):
         rows = [(i, ts, u, "view", 1.0, "{}") for i, u in enumerate(users)]
@@ -799,13 +809,14 @@ def test_stateful_count_sees_events_rewritten_in_place(spark):
         )
 
     def counts():
-        out = queries()["stream_stateful_count"](spark, sf_dir).collect()
-        return {r.user_id: r.n_events for r in out}
+        return set(map(tuple, queries()[query](spark, sf_dir).collect()))
 
-    write_events([1, 1, 2])
-    assert counts() == {1: 2, 2: 1}
-    write_events([1, 3, 3, 3])
-    assert counts() == {1: 1, 3: 3}
+    try:
+        for users in ([1, 1, 2], [1, 3, 3, 3]):
+            write_events(users)
+            assert counts() == set(expect(users))
+    finally:
+        shutil.rmtree(sf_dir, ignore_errors=True)
 
 
 def test_drain_to_table_leaves_no_sink_view(spark):

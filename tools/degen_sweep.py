@@ -337,17 +337,8 @@ def build_fixture(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    import hashlib
-
     shutil.rmtree(FIXTURE, ignore_errors=True)
     os.makedirs(FIXTURE)
-    # the partitioned-gold query memoizes derived parquet under
-    # sha1(sf_dir) — valid for immutable testdata dirs, but THIS dir's
-    # contents change per sweep mode, so a stale cache would desync
-    # Spark (reads the memo) from DuckDB (reads the table): wipe the
-    # fixture-derived cache key on every rebuild
-    fixture_key = hashlib.sha1(FIXTURE.encode()).hexdigest()[:10]
-    shutil.rmtree(os.path.join("/tmp/smdp_gold", fixture_key), ignore_errors=True)
     for f in glob.glob(f"{SRC_SF}/*.parquet"):
         name = os.path.basename(f)
         if name.split(".")[0] in ("documents", "events", "embeddings"):
