@@ -788,6 +788,35 @@ def union_platforms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _subtotals(df: DataFrame, group, keys: tuple, aggs) -> DataFrame:
+    """`group(frame, *keys)` — `DataFrame.cube`, `DataFrame.rollup` or a
+    `groupingSets` call — aggregated by `aggs(real)`, with SQL's grand
+    total on empty input: over zero rows Spark's grouping-sets
+    aggregate returns no row, where DuckDB and PostgreSQL return the
+    one grand-total row. One sentinel row (every column NULL, `real`
+    NULL) is unioned in — a one-row relation, not a second scan — and
+    survives only in the grand total: a group whose rows are all
+    sentinel is dropped unless it sits at the full grouping id.
+    `aggs` must not count the sentinel: count `real` instead of `*`;
+    sums and other NULL-skipping aggregates of its NULL columns skip
+    it. Non-empty input gives exactly the rows it gave without the
+    sentinel."""
+    sentinel = df.sparkSession.range(0, 1, 1, 1).select(
+        *[F.lit(None).cast(t).alias(c) for c, t in df.dtypes],
+        F.lit(None).cast("boolean").alias("_real"),
+    )
+    src = df.withColumn("_real", F.lit(True)).unionByName(sentinel)
+    out = group(src, *keys).agg(
+        *aggs(F.col("_real")),
+        F.max("_real").alias("_has_real"),
+        F.grouping_id().alias("_gid"),
+    )
+    grand = F.col("_gid") == (1 << len(keys)) - 1
+    return out.filter(F.col("_has_real").isNotNull() | grand).drop(
+        "_has_real", "_gid"
+    )
+
+
 @register(
     "agg_cube",
     oracle=(
@@ -800,12 +829,16 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the cross-platform sentiment matrix (SURVEY §2.4
     `agg_multi_dim`, `README.md:20-24`): every subtotal combination in
     one pass. Spark plans cube as a single expand + hash agg, so the
-    input is scanned once no matter how many grouping sets."""
-    e = load(spark, sf_dir, "events")
-    return (
-        e.select("event_type", (F.col("value") >= 100).alias("high_value"))
-        .cube("event_type", "high_value")
-        .agg(F.count("*").alias("cnt"))
+    input is scanned once no matter how many grouping sets; empty
+    input reads the one grand-total row (`_subtotals`)."""
+    e = load(spark, sf_dir, "events").select(
+        "event_type", (F.col("value") >= 100).alias("high_value")
+    )
+    return _subtotals(
+        e,
+        DataFrame.cube,
+        ("event_type", "high_value"),
+        lambda real: [F.count(real).alias("cnt")],
     )
 
 
@@ -1025,11 +1058,17 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hierarchy-prefix sibling of `agg_cube` (SURVEY §2.4): Catalyst
     plans rollup as one Expand + partial hash-agg, so the 100 TB scan
     happens once and the subtotal rows ride the same single shuffle
-    with map-side combine."""
+    with map-side combine. Empty input reads the one grand-total row,
+    with NULL total_chars (`_subtotals`)."""
     d = load(spark, sf_dir, "documents")
-    return d.rollup("source", "lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
+    return _subtotals(
+        d,
+        DataFrame.rollup,
+        ("source", "lang"),
+        lambda real: [
+            F.count(real).alias("n_docs"),
+            F.sum("n_chars").alias("total_chars"),
+        ],
     )
 
 
@@ -1583,12 +1622,15 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     set) above one hash aggregate — the input is scanned once, and
     skipping the cross cells cuts the expand factor from 4 to 3
     (at real dimensionality: from 2^n to |sets|, the whole point of
-    naming sets at 100 TB)."""
+    naming sets at 100 TB). Empty input reads the one grand-total row
+    (`_subtotals`)."""
     e = load(spark, sf_dir, "events")
     d = e.select("event_type", F.to_date("ts").alias("day"))
-    return (
-        d.groupingSets([["event_type"], ["day"], []], "event_type", "day")
-        .agg(F.count("*").alias("cnt"))
+    return _subtotals(
+        d,
+        lambda f, *k: f.groupingSets([["event_type"], ["day"], []], *k),
+        ("event_type", "day"),
+        lambda real: [F.count(real).alias("cnt")],
     )
 
 

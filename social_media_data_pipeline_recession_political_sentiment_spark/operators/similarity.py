@@ -7,18 +7,19 @@ Scale design:
   — O(Q*N) work, zero shuffle of the corpus, embarrassingly parallel.
   This is exactly how a 1000-executor batch scorer should run when Q
   is small.
-- Two scale paths, both approximate AND (since r11) hard-oracle-
-  checked — the seeded planes / trained quantizer replay in DuckDB
-  via fold-exact arithmetic — plus recall-vs-brute-force assertions
-  in tests/test_similarity.py:
-  `ext_sim_lsh` (bucketed random projections; candidate pairs from a
-  bucket equi-join) and `ext_sim_ivf` (k-means coarse quantizer;
-  queries probe only their nearest inverted lists). LSH suits
-  pairwise near-dup mining; IVF suits query-serving top-k.
-- Vector math on the oracle-checked paths is `zip_with`/`aggregate`
-  higher-order expressions on array<double> — JVM-side and bit-exact
-  against the DuckDB oracle's list_dot_product. Hot loops that have
-  no oracle obligation use NumPy over Arrow batches instead.
+- Two scale paths, both approximate AND hard-oracle-checked — the
+  seeded planes / trained quantizer replay in DuckDB via fold-exact
+  arithmetic — plus recall-vs-brute-force assertions in
+  tests/test_similarity.py: `ext_sim_lsh` (bucketed random
+  projections; candidate pairs scored bucket-locally) and
+  `ext_sim_ivf` (k-means coarse quantizer; queries probe only their
+  nearest inverted lists). LSH suits pairwise near-dup mining; IVF
+  suits query-serving top-k.
+- Vector math is one index-order fold everywhere, bit-exact against
+  the DuckDB oracle's list_dot_product: JVM-side as the `_DOT`
+  `zip_with`/`aggregate` expression on array<double>, and in NumPy
+  as the one pair kernel (`_fold_dots`) that every blocked scorer
+  reaches through `_block_triangle` or `_block_probe`.
 """
 
 from __future__ import annotations
@@ -65,6 +66,179 @@ def _cosine(a: str, b: str):
 
 def _with_double_vec(df: DataFrame, out: str) -> DataFrame:
     return df.withColumn(out, F.col("embedding").cast("array<double>"))
+
+
+# ---------------------------------------------------------------------------
+# The one NumPy pair kernel. Every NumPy scorer below stacks its vectors
+# with `_stack`, folds them with `_fold_dots` and reaches its rows
+# through one of two block layouts: `_block_triangle` (all unordered
+# pairs of one set) or `_block_probe` (all big × small pairs).
+
+
+def _stack(vectors):
+    """The (n, dim) float64 matrix of a column of vectors; float32
+    widens exactly, as Spark's cast to array<double> does."""
+    import numpy as np
+
+    return np.stack([np.asarray(v, dtype=np.float64) for v in vectors])
+
+
+def _fold_dots(a, b):
+    """(a·a, b·b, a·bᵀ) over the rows of two float64 matrices. Every dot
+    is a left-to-right fold over dimensions from 0.0 (``acc += a_i*b_i``,
+    never BLAS), so each value is bit-equal to `_DOT` on the JVM and to
+    DuckDB's `list_dot_product`."""
+    import numpy as np
+
+    aa = np.zeros(a.shape[0])
+    bb = np.zeros(b.shape[0])
+    ab = np.zeros((a.shape[0], b.shape[0]))
+    for i in range(a.shape[1]):
+        aa += a[:, i] * a[:, i]
+        bb += b[:, i] * b[:, i]
+        ab += np.outer(a[:, i], b[:, i])
+    return aa, bb, ab
+
+
+def _fold_cos(a, b):
+    """(cos, denom): dot / (‖a‖·‖b‖) over `_fold_dots`, the `_cosine`
+    arithmetic. Where `denom` is 0 the JVM reads NULL (`nullif`) and
+    NumPy reads NaN or ±inf; consumers that must skip NULL mask on
+    `denom != 0`."""
+    import numpy as np
+
+    aa, bb, ab = _fold_dots(a, b)
+    denom = np.sqrt(aa)[:, None] * np.sqrt(bb)[None, :]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return ab / denom, denom
+
+
+def _fold_d2(a, b):
+    """Squared distances (a·a + b·b) − 2·(a·b) over `_fold_dots`, in
+    that association order: bit-equal to `_ivf_d2_sql` and to the LSH
+    and recall oracles' list_dot_product trees."""
+    aa, bb, ab = _fold_dots(a, b)
+    return (aa[:, None] + bb[None, :]) - 2.0 * ab
+
+
+def _tri_mask(ids_a, ids_b, same_block: bool):
+    """Pairs a scorer may emit: within one block only the upper
+    triangle (id_a < id_b), so each unordered pair counts once; across
+    blocks every pair."""
+    import numpy as np
+
+    if same_block:
+        return ids_a[:, None] < ids_b[None, :]
+    return np.ones((len(ids_a), len(ids_b)), dtype=bool)
+
+
+def _pair_rows(ids_a, ids_b, keep, **values) -> dict:
+    """Output columns (vec_a < vec_b, then each value matrix) of the
+    pairs `keep` selects."""
+    import numpy as np
+
+    ai, bi = np.nonzero(keep)
+    return {
+        "vec_a": np.minimum(ids_a[ai], ids_b[bi]),
+        "vec_b": np.maximum(ids_a[ai], ids_b[bi]),
+        **{k: v[ai, bi] for k, v in values.items()},
+    }
+
+
+def _score_sides(a, b, same_block, vec, score, schema, extra=()):
+    """Score one group's two sides: stack each side's `vec` column
+    (once when both sides are the same rows) and frame the column dict
+    of `score(ids_a, mat_a, ids_b, mat_b, same_block, *extra_a,
+    *extra_b)`; when a side is empty or the scorer returns None, an
+    empty frame typed by the output DDL `schema`."""
+    import numpy as np
+    import pandas as pd
+
+    out = None
+    if len(a) and len(b):
+        mat_a = _stack(a[vec])
+        out = score(
+            a["vec_id"].to_numpy(dtype=np.int64),
+            mat_a,
+            b["vec_id"].to_numpy(dtype=np.int64),
+            mat_a if a is b else _stack(b[vec]),
+            same_block,
+            *[a[c].to_numpy() for c in extra],
+            *[b[c].to_numpy() for c in extra],
+        )
+    if out is not None:
+        return pd.DataFrame(out)
+    pd_type = {"bigint": "int64", "double": "float64", "string": "object"}
+    types = {c: pd_type[t] for c, t in (f.split() for f in schema.split(","))}
+    return pd.DataFrame({c: [] for c in types}).astype(types)
+
+
+def _block_triangle(e, n_blocks, score, schema: str, keys=()) -> DataFrame:
+    """Block-triangle layout over (vec_id, embedding, *keys) rows:
+    each row hashes to block vec_id mod n (`n_blocks`, an int or a
+    per-row int Column such as a bucket's salt count) and replicates
+    to the n groups (*keys, min(blk, o), max(blk, o)), so every
+    unordered pair of rows with equal `keys` meets in exactly one
+    group, and no group holds more than two blocks. Per group,
+    `score(ids_a, mat_a, ids_b, mat_b, same_block)` scores block bi
+    against block bj (one block against itself when `same_block`;
+    `_tri_mask` keeps each pair once) and returns a dict of output
+    columns or None; `schema` is the output DDL."""
+    n = F.lit(n_blocks) if isinstance(n_blocks, int) else n_blocks
+    rep = (
+        e.withColumn("blk", F.pmod(F.col("vec_id"), n).cast("int"))
+        .withColumn("o", F.explode(F.sequence(F.lit(0), n - 1)))
+        .select(
+            *keys,
+            F.least("blk", "o").alias("bi"),
+            F.greatest("blk", "o").alias("bj"),
+            "blk",
+            "vec_id",
+            "embedding",
+        )
+    )
+
+    def group(pdf):
+        bi, bj = int(pdf["bi"].iloc[0]), int(pdf["bj"].iloc[0])
+        if bi != bj:
+            a, b = pdf[pdf["blk"] == bi], pdf[pdf["blk"] == bj]
+            return _score_sides(a, b, False, "embedding", score, schema)
+        # one block against itself; a lone row has no pair to fold
+        b = pdf if len(pdf) > 1 else pdf.iloc[:0]
+        return _score_sides(pdf, b, True, "embedding", score, schema)
+
+    return rep.groupBy(*keys, "bi", "bj").applyInPandas(group, schema)
+
+
+def _block_probe(
+    big: DataFrame, small: DataFrame, score, schema: str,
+    lt_only: bool = False, extra=(),
+) -> DataFrame:
+    """Block-probe layout over (vec_id, dv, *extra) rows: big-side
+    rows hash to block vec_id mod EMBCOS_BLOCKS and small-side rows
+    replicate to every block, so every (big, small) row pair meets in
+    exactly one group while the big side is never copied. Per group,
+    `score(ids_big, mat_big, ids_small, mat_small, same_block,
+    *extra_big, *extra_small)` returns a dict of output columns or
+    None. `same_block` is `lt_only`: both sides are one set and
+    `_tri_mask` keeps only big id < small id."""
+    cols = ("vec_id", "dv", *extra)
+    big_t = big.select(
+        F.pmod(F.col("vec_id"), F.lit(EMBCOS_BLOCKS)).cast("int").alias("blk"),
+        F.lit(0).alias("side"),
+        *cols,
+    )
+    small_t = small.select(
+        F.explode(F.sequence(F.lit(0), F.lit(EMBCOS_BLOCKS - 1))).alias("blk"),
+        F.lit(1).alias("side"),
+        *cols,
+    )
+
+    def group(pdf):
+        a, b = pdf[pdf["side"] == 0], pdf[pdf["side"] == 1]
+        return _score_sides(a, b, lt_only, "dv", score, schema, extra)
+
+    return big_t.unionByName(small_t).groupBy("blk").applyInPandas(group, schema)
 
 
 _COS_SQL = (
@@ -188,8 +362,8 @@ _IVF_HASH_SQL = (
 
 
 def _ivf_d2_sql(x: str, c: str) -> str:
-    """Engine-shared squared-distance tree (twin of the NumPy
-    per-dimension fold in `_ivf_scored`): (x·x + c·c) − 2·(x·c)."""
+    """Engine-shared squared-distance tree (twin of `_fold_d2`):
+    (x·x + c·c) − 2·(x·c)."""
     return (
         f"list_dot_product({x}, {x}) + list_dot_product({c}, {c}) "
         f"- 2.0 * list_dot_product({x}, {c})"
@@ -338,54 +512,24 @@ def _ivf_train_sample(e: DataFrame) -> DataFrame:
     return e.orderBy(h.asc(), F.col("vec_id").asc()).limit(IVF_TRAIN_CAP)
 
 
-def _ivf_fold_d2(x, c):
-    """(len(x), len(c)) squared distances via LEFT-TO-RIGHT folds over
-    dimensions (never BLAS): (x·x + c·c) − 2·(x·c) with every dot a
-    sequential accumulation — bit-equal to `_ivf_d2_sql`'s
-    list_dot_product tree, which is what lets the oracle replay
-    assignment and probe selection exactly."""
-    import numpy as np
-
-    sx = np.zeros(x.shape[0])
-    sc = np.zeros(c.shape[0])
-    dots = np.zeros((x.shape[0], c.shape[0]))
-    for i in range(x.shape[1]):
-        sx += x[:, i] * x[:, i]
-        sc += c[:, i] * c[:, i]
-        dots += np.outer(x[:, i], c[:, i])
-    return (sx[:, None] + sc[None, :]) - 2.0 * dots
-
-
 def _ivf_scored(spark: SparkSession, sf_dir: str, probe_all: bool) -> DataFrame:
-    """IVF candidate generation, SESSION-PINNED per probe mode (r13
-    optimization pass): the driver-side quantizer training (bounded
-    toPandas + IVF_ITERS Lloyd loops) plus the corpus
-    assignment/probe map ran once PER CONSUMER before —
-    `ext_sim_ivf`, `ext_sim_ivf_recall` and `ext_retrieval_eval` each
-    retrained the identical deterministic quantizer. The candidate id
-    set is the standing IVF index probe result: slim (query_id,
-    neighbor_id) rows, built once per (app, embeddings-fingerprint,
-    probe mode) and read by every consumer.
-
-    `probe_all=True` probes every list (nprobe = nlist), making the
-    candidate set provably exhaustive — the seam
-    `ext_sim_ivf_exhaustive`'s exactness contract exercises. That
-    mode is NOT pinned (r14, verdict r13 item 2 — pin economics): the
-    exhaustive candidate set has exactly one consumer, so its r13
-    `ivf_cand_all` pin only memoized the bench's second pass; it now
-    builds per invocation. The `ivf_cand` probe mode keeps its pin —
+    """IVF candidate generation: slim (query_id, neighbor_id) rows,
+    the standing index's probe result. The default probe mode is
+    session-pinned per (app, embeddings fingerprint), since
     `ext_sim_ivf`, `ext_sim_ivf_recall` and `ext_retrieval_eval` all
-    read it.
-    Scoring/ranking happens JVM-side in `_ivf_rescore_topk` (shared by
-    the approximate and exhaustive paths), so candidate generation
-    here ships ids only.
+    read it. `probe_all=True` probes every list (nprobe = nlist),
+    making the candidate set provably exhaustive — the seam
+    `ext_sim_ivf_exhaustive`'s exactness contract exercises; it has
+    one consumer, so it builds per invocation. Scoring/ranking
+    happens JVM-side in `_ivf_rescore_topk`, so candidate generation
+    ships ids only.
 
-    Engine-replay contract (r11): the sample is collected in portable
+    Engine-replay contract: the sample is collected in portable
     md5-hash order and re-sorted by vec_id, centroid seeds are the
     sample's lowest vec_ids, Lloyd means accumulate members
-    SEQUENTIALLY in vec_id order, and all distances use
-    `_ivf_fold_d2` with first-min (lowest cid) tiebreaks — every step
-    mirrored, op for op, in `_ivf_oracle`'s SQL."""
+    SEQUENTIALLY in vec_id order, and all distances use `_fold_d2`
+    with first-min (lowest cid) tiebreaks — every step mirrored, op
+    for op, in `_ivf_oracle`'s SQL."""
     if probe_all:
         return _ivf_scored_build(spark, sf_dir, True)
     return session_pin(
@@ -431,9 +575,7 @@ def _ivf_train(e: DataFrame):
     if len(sample) > 0:
         sample = sample.sort_values("vec_id")  # member order for Lloyd means
         ids = sample["vec_id"].to_numpy(dtype=np.int64)
-        mat = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in sample["embedding"]]
-        )
+        mat = _stack(sample["embedding"])
         dim = mat.shape[1]
         # the static oracle unrolls EMB_DIM dims
         assert dim == EMB_DIM, (
@@ -446,7 +588,7 @@ def _ivf_train(e: DataFrame):
         cent = mat[:nlist].copy()
         for _ in range(IVF_ITERS):
             # ties -> first (lowest) cid, matching the oracle's (d2, cid)
-            assign = _ivf_fold_d2(mat, cent).argmin(axis=1)
+            assign = _fold_d2(mat, cent).argmin(axis=1)
             for k in range(len(cent)):
                 members = mat[assign == k]
                 if len(members):
@@ -461,10 +603,8 @@ def _ivf_train(e: DataFrame):
         qpdf = e.filter(F.col("vec_id") < N_QUERY_VECS).toPandas()
         if len(qpdf) > 0:
             q_ids = qpdf["vec_id"].to_numpy(dtype=np.int64)
-            q_mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in qpdf["embedding"]]
-            )
-            qd2 = _ivf_fold_d2(q_mat, cent)
+            q_mat = _stack(qpdf["embedding"])
+            qd2 = _fold_d2(q_mat, cent)
             # stable sort: equal distances keep ascending-cid order (= the
             # oracle's (d2, cid) ranking; default quicksort would not)
             order = np.argsort(qd2, axis=1, kind="stable")
@@ -485,7 +625,7 @@ def _ivf_scored_build(
     e = (
         load(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
-        .filter(F.expr(_fin_emb_spark()))  # finite-vector pin (r9 nonfinite gate; upgrades the r7 NULL pin)
+        .filter(F.expr(_fin_emb_spark()))  # finite-vector pin
     )
     model = _ivf_model(spark, sf_dir, e)
     if model is None:  # empty corpus or no query vectors => no neighbors
@@ -501,10 +641,8 @@ def _ivf_scored_build(
             if len(pdf) == 0:
                 continue
             c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            c_mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            c_assign = _ivf_fold_d2(c_mat, cent_b).argmin(axis=1)
+            c_mat = _stack(pdf["embedding"])
+            c_assign = _fold_d2(c_mat, cent_b).argmin(axis=1)
             out_q, out_n = [], []
             for qi in range(len(q_ids_b)):
                 cand = np.isin(c_assign, probes_b[qi]) & (c_ids != q_ids_b[qi])
@@ -599,7 +737,7 @@ EMBCOS_BLOCKS = 8  # triangle-join block count; tasks hold ≤ 2N/B vectors
         f"SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {_COS_SQL} AS cos "
         "FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id "
         f"WHERE {_COS_SQL} >= {COS_DUP_THRESHOLD} "
-        # finite-vector pin (r9 nonfinite gate)
+        # finite-vector pin
         f"AND {_fin_emb_duck('a.embedding')} AND {_fin_emb_duck('b.embedding')}"
     ),
 )
@@ -607,36 +745,28 @@ def ext_dedup_embcos(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cos >= threshold) — the
     semantic-dedup primitive for training corpora.
 
-    Physical strategy: a distributed *block triangle join*. The corpus
-    is hashed into B blocks (blk = vec_id mod B); each vector is
-    replicated to the B unordered block-pair groups it participates in
-    (shuffle volume N×B rows — vectors, never pairs), and one
-    `applyInPandas` task per group (i ≤ j) scores block i against
-    block j with NumPy. Every unordered vector pair lands in exactly
-    one group, so the result is EXACT — identical to the all-pairs SQL
-    oracle — while no task ever holds more than 2N/B vectors and the
-    driver never collects the corpus (the previous implementation's
-    `e.toPandas()` build side was the one non-distributed step; at
-    100 TB, B scales with corpus size to keep 2N/B in executor
+    Physical strategy: the distributed block triangle join
+    (`_block_triangle`). The corpus is hashed into B blocks
+    (blk = vec_id mod B); each vector is replicated to the B unordered
+    block-pair groups it participates in (shuffle volume N×B rows —
+    vectors, never pairs), and one `applyInPandas` task per group
+    (i ≤ j) scores block i against block j with NumPy. Every unordered
+    vector pair lands in exactly one group, so the result is EXACT —
+    identical to the all-pairs SQL oracle — while no task ever holds
+    more than 2N/B vectors and the driver never collects the corpus
+    (at 100 TB, B scales with corpus size to keep 2N/B in executor
     memory). For *approximate* mining at a much lower O(N²/B) cost,
     compose `ext_sim_lsh` buckets with this same scorer instead.
 
-    Numeric contract: the dot product accumulates column-by-column in
-    index order (``acc += a_i*b_i`` starting from 0.0), which is
-    bit-identical to the sequential fold Spark's `aggregate` HOF and
-    DuckDB's `list_dot_product` perform — so results hash-match the
-    SQL oracle exactly, not just approximately.
+    Numeric contract: `_fold_cos` over `_fold_dots`, bit-identical to
+    the sequential fold Spark's `aggregate` HOF and DuckDB's
+    `list_dot_product` perform — so results hash-match the SQL oracle
+    exactly, not just approximately.
 
-    Session-pinned (r11 verdict item 2 — the embcos twin of the
-    text-miner pin family): `ext_dedup_semantic` and
-    `ext_dedup_embcos_pipeline_recall`'s exact arm consume this SAME
-    pair graph; without the pin each consumer re-ran the triangle
-    join (up to 3× per bench pass, ~12 s of the sf0.1 total in the
-    single most expensive query). One persisted (vec_a, vec_b, cos)
-    frame per (app, embeddings-fingerprint) converts K consumers ×
-    O(mine) into O(mine) + K reads — the pair frame is SLIM (ids +
-    one double; candidates ≪ corpus²), exactly what session_pin is
-    for."""
+    Session-pinned per (app, embeddings fingerprint):
+    `ext_dedup_semantic` and `ext_dedup_embcos_pipeline_recall`'s
+    exact arm consume this SAME slim (vec_a, vec_b, cos) pair graph,
+    so K consumers cost one mine plus K reads."""
     return session_pin(
         spark,
         sf_dir,
@@ -647,79 +777,21 @@ def ext_dedup_embcos(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _embcos_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The actual block-triangle-join plan for `ext_dedup_embcos`
-    (built once per session by the pin seam above)."""
-    import numpy as np
-    import pandas as pd
-
-    B = EMBCOS_BLOCKS
+    """The block-triangle plan for `ext_dedup_embcos` (built once per
+    session by the pin seam above): the cosine cut per block pair."""
     e = (
         load(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
-        .filter(F.expr(_fin_emb_spark()))  # finite-vector pin (r9 nonfinite gate; upgrades the r7 NULL pin)
-    )
-    # replicate: a vector in block g joins group (min(g,o), max(g,o))
-    # for every o — B copies per vector, each group seeing each of its
-    # two blocks exactly once
-    rep = (
-        e.withColumn("blk", F.pmod(F.col("vec_id"), F.lit(B)).cast("int"))
-        .withColumn("o", F.explode(F.array(*[F.lit(i) for i in range(B)])))
-        .select(
-            F.least("blk", "o").alias("bi"),
-            F.greatest("blk", "o").alias("bj"),
-            "blk",
-            "vec_id",
-            "embedding",
-        )
+        .filter(F.expr(_fin_emb_spark()))  # finite-vector pin
     )
 
-    def _seq_self_dot(m: "np.ndarray") -> "np.ndarray":
-        # left-to-right fold over dimensions: bit-equal to the SQL
-        # engines' sequential accumulation
-        acc = np.zeros(m.shape[0])
-        for i in range(m.shape[1]):
-            acc += m[:, i] * m[:, i]
-        return acc
+    def score(ids_a, mat_a, ids_b, mat_b, same_block):
+        cos, _ = _fold_cos(mat_a, mat_b)
+        keep = _tri_mask(ids_a, ids_b, same_block) & (cos >= COS_DUP_THRESHOLD)
+        return _pair_rows(ids_a, ids_b, keep, cos=cos)
 
-    _EMPTY = {"vec_a": "int64", "vec_b": "int64", "cos": "float64"}
-
-    def score_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        bi, bj = int(pdf["bi"].iloc[0]), int(pdf["bj"].iloc[0])
-        if bi == bj:
-            a = b = pdf
-        else:  # cross group: block i rows vs block j rows only
-            a = pdf[pdf["blk"] == bi]
-            b = pdf[pdf["blk"] == bj]
-        if len(a) == 0 or len(b) == 0:
-            return pd.DataFrame({c: [] for c in _EMPTY}).astype(_EMPTY)
-        ids_a = a["vec_id"].to_numpy(dtype=np.int64)
-        ids_b = b["vec_id"].to_numpy(dtype=np.int64)
-        mat_a = np.stack([np.asarray(v, dtype=np.float64) for v in a["embedding"]])
-        mat_b = np.stack([np.asarray(v, dtype=np.float64) for v in b["embedding"]])
-        dots = np.zeros((len(ids_a), len(ids_b)))
-        for i in range(mat_a.shape[1]):
-            dots += np.outer(mat_a[:, i], mat_b[:, i])
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = dots / (
-                np.sqrt(_seq_self_dot(mat_a))[:, None]
-                * np.sqrt(_seq_self_dot(mat_b))[None, :]
-            )
-        if bi == bj:  # upper triangle within the block
-            keep = ids_a[:, None] < ids_b[None, :]
-        else:  # cross blocks: every pair counts, either id may be smaller
-            keep = np.ones((len(ids_a), len(ids_b)), dtype=bool)
-        keep &= cos >= COS_DUP_THRESHOLD
-        ai, bix = np.nonzero(keep)
-        return pd.DataFrame(
-            {
-                "vec_a": np.minimum(ids_a[ai], ids_b[bix]),
-                "vec_b": np.maximum(ids_a[ai], ids_b[bix]),
-                "cos": cos[ai, bix],
-            }
-        )
-
-    return rep.groupBy("bi", "bj").applyInPandas(
-        score_group, "vec_a bigint, vec_b bigint, cos double"
+    return _block_triangle(
+        e, EMBCOS_BLOCKS, score, "vec_a bigint, vec_b bigint, cos double"
     )
 
 
@@ -876,14 +948,16 @@ def lsh_candidate_pairs(
     where cos ≥ t ⟺ dist ≤ sqrt(2−2t)).
 
     Bucketing runs entirely JVM-side (`_lsh_bucket_expr`); the only
-    Python stage left is the bucket-local pair scorer, whose input is
-    candidate-bounded by construction."""
+    Python stage is the bucket-local pair scorer (`_block_triangle`
+    keyed by (tbl, bucket)), whose input is candidate-bounded by
+    construction. Distances are sqrt(max(0, `_fold_d2`)), bit-equal to
+    the oracle's sqrt(greatest(0, a·a + b·b − 2·a·b)), so the emitted
+    dist and the strict < cut hash-match DuckDB."""
     import numpy as np
-    import pandas as pd
 
-    # dim guard (r11 ADVICE): the plane literals (and the oracle) are
-    # EMB_DIM-dim; a corpus with any other dimensionality must fail
-    # loudly here, not hash-mismatch confusingly downstream.
+    # dim guard: the plane literals (and the oracle) are EMB_DIM-dim; a
+    # corpus with any other dimensionality must fail loudly here, not
+    # hash-mismatch confusingly downstream.
     guarded_dv = (
         f"CASE WHEN size(embedding) = {EMB_DIM} "
         "THEN cast(embedding as array<double>) "
@@ -892,14 +966,13 @@ def lsh_candidate_pairs(
         "projection planes and the DuckDB oracle are generated for "
         f"{EMB_DIM} dims (similarity.EMB_DIM)')) END"
     )
-    # compute-once pin (r12 ADVICE): `hashed` feeds BOTH the
-    # oversized-bucket aggregation and the salt join; unpinned, the
-    # L×m inlined-plane fold dot products over the full corpus run
-    # twice per mine. The pinned frame is N·L rows of (id, one
-    # embedding copy per table arm, bucket string) — fine at bench
-    # scale; at the 100 TB extreme the one-line swap is dropping the
-    # pin and letting the agg branch recompute the fold (scan-local
-    # CPU, no L× materialization) — stated, not hidden.
+    # compute-once pin: `hashed` feeds BOTH the oversized-bucket
+    # aggregation and the salt join; unpinned, the L×m inlined-plane
+    # fold dot products over the full corpus run twice per mine. The
+    # pinned frame is N·L rows of (id, one embedding copy per table
+    # arm, bucket string) — fine at bench scale; at the 100 TB extreme
+    # the one-line swap is dropping the pin and letting the agg branch
+    # recompute the fold (scan-local CPU, no L× materialization).
     hashed = compute_once(
         e.withColumn("dv", F.expr(guarded_dv)).select(
             "vec_id", "embedding", F.expr(_lsh_bucket_expr(bucket_len))
@@ -909,92 +982,41 @@ def lsh_candidate_pairs(
     # Skew guard: a degenerate bucket (e.g. an all-identical-vector
     # corpus collapses into ONE bucket per table) would hand a single
     # task O(N²) work. Buckets above LSH_BUCKET_CAP are salted into
-    # S = ceil(size/cap) sub-blocks and scored as the triangle of
-    # block pairs — every unordered pair still lands in exactly one
-    # (sub_a, sub_b) group, so recall is untouched while per-task work
-    # is bounded by (2·cap)². Bucket sizes come from a pre-aggregated
-    # OVERSIZED-bucket map (count > cap, so ≤ N·L/cap rows) joined
-    # back WITHOUT a forced broadcast hint (r12 ADVICE): N·L/cap is
-    # still linear in corpus size, so at the 100 TB target a forced
-    # driver collect could blow the broadcast limit — AQE broadcasts
-    # it at runtime whenever it is actually small (the common case:
-    # empty or a handful of degenerate buckets) and falls back to a
-    # shuffle join when it is not. Normal buckets take nsalt = 1 via
-    # the coalesce. This replaces the r5–r11 window count over
-    # (tbl, bucket), which buffered full embedding rows through a
-    # shuffle just to size the salt (r11 verdict nit).
+    # S = ceil(size/cap) blocks of the bucket's own block triangle —
+    # every unordered pair still lands in exactly one group, so recall
+    # is untouched while per-task work is bounded by (2·cap)². Bucket
+    # sizes come from a pre-aggregated OVERSIZED-bucket map (count >
+    # cap, so ≤ N·L/cap rows) joined back WITHOUT a forced broadcast
+    # hint: N·L/cap is still linear in corpus size, so at the 100 TB
+    # target a forced driver collect could blow the broadcast limit —
+    # AQE broadcasts it at runtime whenever it is actually small (the
+    # common case: empty or a handful of degenerate buckets) and falls
+    # back to a shuffle join when it is not. Normal buckets take
+    # nsalt = 1 via the coalesce.
     oversized = (
         hashed.groupBy("tbl", "bucket")
         .agg(F.count("*").alias("bsz"))
         .filter(F.col("bsz") > LSH_BUCKET_CAP)
     )
-    salted = (
-        hashed.join(oversized, ["tbl", "bucket"], "left")
-        .withColumn(
-            "nsalt",
-            F.coalesce(
-                F.ceil(F.col("bsz") / F.lit(LSH_BUCKET_CAP)).cast("int"),
-                F.lit(1),
-            ),
-        )
-        .withColumn("g", F.pmod(F.col("vec_id"), F.col("nsalt")).cast("int"))
-        .withColumn("o", F.explode(F.sequence(F.lit(0), F.col("nsalt") - 1)))
-        .select(
-            "tbl",
-            "bucket",
-            F.least("g", "o").alias("sub_a"),
-            F.greatest("g", "o").alias("sub_b"),
-            "g",
-            "vec_id",
-            "embedding",
-        )
+    salted = hashed.join(oversized, ["tbl", "bucket"], "left").withColumn(
+        "nsalt",
+        F.coalesce(
+            F.ceil(F.col("bsz") / F.lit(LSH_BUCKET_CAP)).cast("int"),
+            F.lit(1),
+        ),
     )
 
-    _EMPTY = {"vec_a": "int64", "vec_b": "int64", "dist": "float64"}
+    def score(ids_a, mat_a, ids_b, mat_b, same_block):
+        d = np.sqrt(np.maximum(_fold_d2(mat_a, mat_b), 0.0))
+        keep = _tri_mask(ids_a, ids_b, same_block) & (d < dist_threshold)
+        return _pair_rows(ids_a, ids_b, keep, dist=d)
 
-    def bucket_pairs(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        sa, sb = int(pdf["sub_a"].iloc[0]), int(pdf["sub_b"].iloc[0])
-        if sa == sb:
-            a = b = pdf
-        else:  # cross sub-blocks of a salted bucket
-            a = pdf[pdf["g"] == sa]
-            b = pdf[pdf["g"] == sb]
-        if len(a) == 0 or len(b) == 0 or len(pdf) < 2:
-            return pd.DataFrame({c: [] for c in _EMPTY}).astype(_EMPTY)
-        ids_a = a["vec_id"].to_numpy(dtype=np.int64)
-        ids_b = b["vec_id"].to_numpy(dtype=np.int64)
-        mat_a = np.stack([np.asarray(v, dtype=np.float64) for v in a["embedding"]])
-        mat_b = np.stack([np.asarray(v, dtype=np.float64) for v in b["embedding"]])
-        # left-to-right folds over dimensions (NOT BLAS): bit-equal to
-        # the oracle's sqrt(greatest(0, dot(a,a) + dot(b,b) -
-        # 2*dot(a,b))) sequential-fold arithmetic, so the emitted
-        # dist — and the strict < threshold cut — hash-match DuckDB
-        da = np.zeros(len(ids_a))
-        db = np.zeros(len(ids_b))
-        dots = np.zeros((len(ids_a), len(ids_b)))
-        for i in range(mat_a.shape[1]):
-            da += mat_a[:, i] * mat_a[:, i]
-            db += mat_b[:, i] * mat_b[:, i]
-            dots += np.outer(mat_a[:, i], mat_b[:, i])
-        d2 = (da[:, None] + db[None, :]) - 2.0 * dots
-        np.maximum(d2, 0.0, out=d2)
-        d = np.sqrt(d2)
-        if sa == sb:  # upper triangle within the sub-block
-            keep = ids_a[:, None] < ids_b[None, :]
-        else:  # cross: every pair counts, either id may be smaller
-            keep = np.ones((len(ids_a), len(ids_b)), dtype=bool)
-        keep &= d < dist_threshold
-        ai, bi = np.nonzero(keep)
-        return pd.DataFrame(
-            {
-                "vec_a": np.minimum(ids_a[ai], ids_b[bi]),
-                "vec_b": np.maximum(ids_a[ai], ids_b[bi]),
-                "dist": d[ai, bi],
-            }
-        )
-
-    pairs = salted.groupBy("tbl", "bucket", "sub_a", "sub_b").applyInPandas(
-        bucket_pairs, "vec_a bigint, vec_b bigint, dist double"
+    pairs = _block_triangle(
+        salted,
+        F.col("nsalt"),
+        score,
+        "vec_a bigint, vec_b bigint, dist double",
+        keys=("tbl", "bucket"),
     )
     return pairs.dropDuplicates(["vec_a", "vec_b"])
 
@@ -1274,70 +1296,18 @@ _D2_THRESHOLD = LSH_DIST_THRESHOLD * LSH_DIST_THRESHOLD
 
 def _exact_dist2_pairs(spark: SparkSession, e: DataFrame, d2_threshold: float) -> DataFrame:
     """Brute-force (vec_a, vec_b) pairs with squared euclidean distance
-    under ``d2_threshold`` — the distributed block triangle join of
-    `ext_dedup_embcos`, specialized to distance. d² is computed as
-    aa + bb − 2·ab with each dot accumulated IN INDEX ORDER (the
-    sequential fold DuckDB's `list_dot_product` performs), so the
+    under ``d2_threshold``: the block triangle join of
+    `ext_dedup_embcos` with the d² cut. d² is `_fold_d2`, so the
     threshold comparison is bit-identical to the SQL oracle — no
     BLAS-reordering flakiness at the boundary. Exact and quadratic by
     contract: this is the verification denominator, never a serving
     path; per-task memory stays ≤ 2N/B vectors."""
-    import numpy as np
-    import pandas as pd
 
-    B = EMBCOS_BLOCKS
-    rep = (
-        e.withColumn("blk", F.pmod(F.col("vec_id"), F.lit(B)).cast("int"))
-        .withColumn("o", F.explode(F.array(*[F.lit(i) for i in range(B)])))
-        .select(
-            F.least("blk", "o").alias("bi"),
-            F.greatest("blk", "o").alias("bj"),
-            "blk",
-            "vec_id",
-            "embedding",
-        )
-    )
+    def score(ids_a, mat_a, ids_b, mat_b, same_block):
+        keep = _tri_mask(ids_a, ids_b, same_block)
+        return _pair_rows(ids_a, ids_b, keep & (_fold_d2(mat_a, mat_b) < d2_threshold))
 
-    _EMPTY = {"vec_a": "int64", "vec_b": "int64"}
-
-    def score_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        bi, bj = int(pdf["bi"].iloc[0]), int(pdf["bj"].iloc[0])
-        if bi == bj:
-            a = b = pdf
-        else:
-            a = pdf[pdf["blk"] == bi]
-            b = pdf[pdf["blk"] == bj]
-        if len(a) == 0 or len(b) == 0:
-            return pd.DataFrame({c: [] for c in _EMPTY}).astype(_EMPTY)
-        ids_a = a["vec_id"].to_numpy(dtype=np.int64)
-        ids_b = b["vec_id"].to_numpy(dtype=np.int64)
-        mat_a = np.stack([np.asarray(v, dtype=np.float64) for v in a["embedding"]])
-        mat_b = np.stack([np.asarray(v, dtype=np.float64) for v in b["embedding"]])
-        # index-order folds (≙ DuckDB list_dot_product accumulation)
-        aa = np.zeros(len(ids_a))
-        bb = np.zeros(len(ids_b))
-        ab = np.zeros((len(ids_a), len(ids_b)))
-        for i in range(mat_a.shape[1]):
-            aa += mat_a[:, i] * mat_a[:, i]
-            bb += mat_b[:, i] * mat_b[:, i]
-            ab += np.outer(mat_a[:, i], mat_b[:, i])
-        d2 = aa[:, None] + bb[None, :] - 2.0 * ab
-        if bi == bj:
-            keep = ids_a[:, None] < ids_b[None, :]
-        else:
-            keep = np.ones((len(ids_a), len(ids_b)), dtype=bool)
-        keep &= d2 < d2_threshold
-        ai, bix = np.nonzero(keep)
-        return pd.DataFrame(
-            {
-                "vec_a": np.minimum(ids_a[ai], ids_b[bix]),
-                "vec_b": np.maximum(ids_a[ai], ids_b[bix]),
-            }
-        )
-
-    return rep.groupBy("bi", "bj").applyInPandas(
-        score_group, "vec_a bigint, vec_b bigint"
-    )
+    return _block_triangle(e, EMBCOS_BLOCKS, score, "vec_a bigint, vec_b bigint")
 
 
 @register(
@@ -1644,7 +1614,7 @@ KNN_K = 3
         f"WITH c AS (SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id, "
         f"{_COS_SQL} AS cos FROM embeddings a JOIN embeddings b "
         "ON b.vec_id != a.vec_id "
-        # finite-vector pin (r9 nonfinite gate; upgrades the r7 NULL pin)
+        # finite-vector pin
         f"WHERE {_fin_emb_duck('a.embedding')} "
         f"AND {_fin_emb_duck('b.embedding')}), "
         "r AS (SELECT vec_id, neighbor_id, cos, row_number() OVER ("
@@ -1659,7 +1629,7 @@ def ext_sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     few-queries serving shape.
 
     Physical strategy: the block triangle join of `ext_dedup_embcos`
-    plus a PER-BLOCK PARTIAL TOP-K — the map-side-combine idea
+    (`_block_triangle`) plus a PER-BLOCK PARTIAL TOP-K — the map-side-combine idea
     applied to kNN. Each of the B(B+1)/2 block-pair tasks scores its
     two blocks with NumPy and emits only each vector's k best
     neighbors WITHIN THAT PAIR (both directions), so the shuffle into
@@ -1667,107 +1637,45 @@ def ext_sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     never the N² pair space. Exactness: under the total order
     (cos DESC, neighbor_id ASC) the global top-k is always a subset
     of the union of per-block top-ks, so the window rank over
-    candidates equals the rank over all pairs. Cosines accumulate
-    IN INDEX ORDER (the `list_dot_product` sequential fold), so
-    values, ordering, and therefore ranks are bit-identical to the
-    SQL oracle. Quadratic compute by contract (it is the EXACT
+    candidates equals the rank over all pairs. Cosines are
+    `_fold_cos` (the `list_dot_product` sequential fold), so values,
+    ordering, and therefore ranks are bit-identical to the SQL
+    oracle. Quadratic compute by contract (it is the EXACT
     graph); at 100 TB the same per-block partial top-k rides the
     LSH/IVF candidate generators instead of the full triangle."""
     import numpy as np
-    import pandas as pd
 
-    B = EMBCOS_BLOCKS
     e = (
         load(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
-        .filter(F.expr(_fin_emb_spark()))  # finite-vector pin (r9 nonfinite gate; upgrades the r7 NULL pin)
-    )
-    rep = (
-        e.withColumn("blk", F.pmod(F.col("vec_id"), F.lit(B)).cast("int"))
-        .withColumn("o", F.explode(F.array(*[F.lit(i) for i in range(B)])))
-        .select(
-            F.least("blk", "o").alias("bi"),
-            F.greatest("blk", "o").alias("bj"),
-            "blk",
-            "vec_id",
-            "embedding",
-        )
+        .filter(F.expr(_fin_emb_spark()))  # finite-vector pin
     )
 
-    _EMPTY = {"vec_id": "int64", "neighbor_id": "int64", "cos": "float64"}
-
-    def _fold_dots(mat_a, mat_b):
-        # index-order accumulation ≙ the SQL engines' sequential fold
-        aa = np.zeros(mat_a.shape[0])
-        bb = np.zeros(mat_b.shape[0])
-        ab = np.zeros((mat_a.shape[0], mat_b.shape[0]))
-        for i in range(mat_a.shape[1]):
-            aa += mat_a[:, i] * mat_a[:, i]
-            bb += mat_b[:, i] * mat_b[:, i]
-            ab += np.outer(mat_a[:, i], mat_b[:, i])
-        return aa, bb, ab
-
-    def _partial_topk(ids_q, ids_n, cos, self_mask=None):
+    def partial_topk(ids_q, ids_n, cos, not_self):
         # per row of cos: k best columns under (cos DESC, neighbor ASC)
-        out_q, out_n, out_c = [], [], []
+        out = []
         for r in range(cos.shape[0]):
-            row = cos[r]
-            valid = np.ones(len(ids_n), dtype=bool)
-            if self_mask is not None:
-                valid &= ids_n != ids_q[r]
-            idx = np.nonzero(valid)[0]
+            idx = np.arange(len(ids_n))
+            if not_self:
+                idx = idx[ids_n != ids_q[r]]
             if len(idx) == 0:
                 continue
-            order = np.lexsort((ids_n[idx], -row[idx]))[:KNN_K]
-            pick = idx[order]
-            out_q.append(np.full(len(pick), ids_q[r]))
-            out_n.append(ids_n[pick])
-            out_c.append(row[pick])
-        if not out_q:
-            return None
-        return (
-            np.concatenate(out_q),
-            np.concatenate(out_n),
-            np.concatenate(out_c),
-        )
+            pick = idx[np.lexsort((ids_n[idx], -cos[r, idx]))[:KNN_K]]
+            out.append((np.full(len(pick), ids_q[r]), ids_n[pick], cos[r, pick]))
+        return out
 
-    def score_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        bi, bj = int(pdf["bi"].iloc[0]), int(pdf["bj"].iloc[0])
-        if bi == bj:
-            a = b = pdf
-        else:
-            a = pdf[pdf["blk"] == bi]
-            b = pdf[pdf["blk"] == bj]
-        if len(a) == 0 or len(b) == 0:
-            return pd.DataFrame({c: [] for c in _EMPTY}).astype(_EMPTY)
-        ids_a = a["vec_id"].to_numpy(dtype=np.int64)
-        ids_b = b["vec_id"].to_numpy(dtype=np.int64)
-        mat_a = np.stack([np.asarray(v, dtype=np.float64) for v in a["embedding"]])
-        mat_b = np.stack([np.asarray(v, dtype=np.float64) for v in b["embedding"]])
-        aa, bb, ab = _fold_dots(mat_a, mat_b)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = ab / (np.sqrt(aa)[:, None] * np.sqrt(bb)[None, :])
-        parts = []
-        same = bi == bj
-        p = _partial_topk(ids_a, ids_b, cos, self_mask=same or None)
-        if p is not None:
-            parts.append(p)
-        if not same:  # reverse direction: block j's vectors vs block i
-            p = _partial_topk(ids_b, ids_a, cos.T)
-            if p is not None:
-                parts.append(p)
+    def score(ids_a, mat_a, ids_b, mat_b, same_block):
+        cos, _ = _fold_cos(mat_a, mat_b)
+        parts = partial_topk(ids_a, ids_b, cos, same_block)
+        if not same_block:  # reverse direction: block j's vectors vs block i
+            parts += partial_topk(ids_b, ids_a, cos.T, False)
         if not parts:
-            return pd.DataFrame({c: [] for c in _EMPTY}).astype(_EMPTY)
-        return pd.DataFrame(
-            {
-                "vec_id": np.concatenate([x[0] for x in parts]),
-                "neighbor_id": np.concatenate([x[1] for x in parts]),
-                "cos": np.concatenate([x[2] for x in parts]),
-            }
-        )
+            return None
+        q, n, c = (np.concatenate(x) for x in zip(*parts))
+        return {"vec_id": q, "neighbor_id": n, "cos": c}
 
-    cand = rep.groupBy("bi", "bj").applyInPandas(
-        score_group, "vec_id bigint, neighbor_id bigint, cos double"
+    cand = _block_triangle(
+        e, EMBCOS_BLOCKS, score, "vec_id bigint, neighbor_id bigint, cos double"
     )
     w = W.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
@@ -2991,72 +2899,33 @@ def ext_triplet_margin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles on both engines.
 
     Scale shape: stride-sampled anchors (n/{TRIPLET_STRIDE}, never
-    all) against the corpus via the blocked NumPy fold kernel (r13
-    optimization pass, guide §4.2 — the previous broadcast
-    nested-loop join evaluated the interpreted `aggregate()` fold
-    cosine per (corpus row × anchor) pair): the corpus blocks on
-    vec_id mod EMBCOS_BLOCKS, anchors replicate to every block, and
-    each task emits per-(anchor, kind) BLOCK-PARTIAL maxima that one
-    final max-agg combines — max-of-maxes is order-free, and the
-    partial replays Spark's max semantics exactly (NULL cosines —
-    zero norm product / NULL vector — are excluded before the max;
-    a NaN cosine poisons its partial to NaN, Spark's
-    NaN-greatest ordering). Every cosine compares the same IEEE
-    doubles the JVM fold compared (index-order accumulation,
-    dot/(na·nb)), so pos/neg maxima are bit-identical. At scale the
-    scoring stage is whatever ANN serves production; the audit shape
-    (conditional max per anchor) is unchanged."""
+    all) against the corpus through the block-probe layout
+    (`_block_probe`): the corpus blocks on vec_id mod EMBCOS_BLOCKS,
+    anchors replicate to every block, and each task emits
+    per-(anchor, kind) BLOCK-PARTIAL maxima that one final max-agg
+    combines — max-of-maxes is order-free, and the partial replays
+    Spark's max semantics exactly (NULL cosines — zero norm product /
+    NULL vector — are excluded before the max; a NaN cosine poisons
+    its partial to NaN, Spark's NaN-greatest ordering). Every cosine
+    is `_fold_cos`, the same IEEE doubles the JVM fold compares, so
+    pos/neg maxima are bit-identical. At scale the scoring stage is
+    whatever ANN serves production; the audit shape (conditional max
+    per anchor) is unchanged."""
     import numpy as np
-    import pandas as pd
 
-    e = load(spark, sf_dir, "embeddings")
-    B = EMBCOS_BLOCKS
-    c_t = e.select(
-        F.pmod(F.col("vec_id"), F.lit(B)).cast("int").alias("blk"),
-        F.lit(0).alias("side"),
+    # a NULL vector scores NULL against everything: excluded from every
+    # max on the JVM, so it never enters the probe
+    e = load(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
+    side = (
         "vec_id",
         F.col("label").cast("long").alias("label"),
         F.col("embedding").cast("array<double>").alias("dv"),
     )
-    a_t = e.filter(F.col("vec_id") % TRIPLET_STRIDE == 0).select(
-        F.explode(F.array(*[F.lit(i) for i in range(B)])).alias("blk"),
-        F.lit(1).alias("side"),
-        "vec_id",
-        F.col("label").cast("long").alias("label"),
-        F.col("embedding").cast("array<double>").alias("dv"),
-    )
-    _OUT = "anchor_id bigint, label bigint, kind string, val double"
 
-    def partial_max(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        cg = pdf[pdf["side"] == 0]
-        ag = pdf[pdf["side"] == 1]
-        # NULL-vector rows score NULL against everything (excluded
-        # from max / filtered as anchors) — drop them up front
-        cg = cg[cg["dv"].notna()]
-        ag = ag[ag["dv"].notna()]
-        if len(cg) == 0 or len(ag) == 0:
-            return pd.DataFrame(
-                {"anchor_id": [], "label": [], "kind": [], "val": []}
-            ).astype(
-                {"anchor_id": "int64", "label": "int64", "kind": "object", "val": "float64"}
-            )
-        c_ids = cg["vec_id"].to_numpy(dtype=np.int64)
-        c_lab = cg["label"].to_numpy(dtype=np.int64)
-        a_ids = ag["vec_id"].to_numpy(dtype=np.int64)
-        a_lab = ag["label"].to_numpy(dtype=np.int64)
-        mat_c = np.stack([np.asarray(v, dtype=np.float64) for v in cg["dv"]])
-        mat_a = np.stack([np.asarray(v, dtype=np.float64) for v in ag["dv"]])
-        # index-order folds ≙ the _cosine kernel's _DOT accumulation
-        sc_ = np.zeros(len(c_ids))
-        sa_ = np.zeros(len(a_ids))
-        dots = np.zeros((len(c_ids), len(a_ids)))
-        for i in range(mat_c.shape[1]):
-            sc_ += mat_c[:, i] * mat_c[:, i]
-            sa_ += mat_a[:, i] * mat_a[:, i]
-            dots += np.outer(mat_c[:, i], mat_a[:, i])
-        denom = np.sqrt(sc_)[:, None] * np.sqrt(sa_)[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = dots / denom
+    def score(c_ids, mat_c, a_ids, mat_a, same_block, c_lab, a_lab):
+        # a label column holding NULLs arrives as float; compare int64 codes
+        c_lab, a_lab = c_lab.astype(np.int64), a_lab.astype(np.int64)
+        cos, denom = _fold_cos(mat_c, mat_a)
         # nullif(denom, 0) → NULL on the JVM: excluded from max
         valid = (denom != 0.0) & (c_ids[:, None] != a_ids[None, :])
         rows = {"anchor_id": [], "label": [], "kind": [], "val": []}
@@ -3074,12 +2943,14 @@ def ext_triplet_margin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows["val"].append(
                     float("nan") if np.isnan(v).any() else float(v.max())
                 )
-        return pd.DataFrame(rows).astype(
-            {"anchor_id": "int64", "label": "int64", "kind": "object", "val": "float64"}
-        )
+        return rows if rows["anchor_id"] else None
 
-    partials = (
-        c_t.unionByName(a_t).groupBy("blk").applyInPandas(partial_max, _OUT)
+    partials = _block_probe(
+        e.select(*side),
+        e.filter(F.col("vec_id") % TRIPLET_STRIDE == 0).select(*side),
+        score,
+        "anchor_id bigint, label bigint, kind string, val double",
+        extra=("label",),
     )
     g = partials.groupBy(
         F.col("anchor_id"), F.col("label")
@@ -4040,77 +3911,33 @@ def embcos_flagged_ids(
     big: DataFrame, small: DataFrame, lt_only: bool
 ) -> DataFrame:
     """Distinct small-side vec_ids having fold-cosine ≥
-    COS_DUP_THRESHOLD against ANY big-side row — the bipartite probe
-    kernel of the incremental embcos family, shared by
+    COS_DUP_THRESHOLD against ANY big-side row — the probe kernel of
+    the incremental embcos family, shared by
     `ext_dedup_embcos_incremental` (batch) and
     `drain_embcos_incremental` (streaming). With `lt_only=True` only
     big rows with smaller vec_id count (the first-copy-wins triangle:
     pass the increment as BOTH sides).
 
-    r13 optimization pass (guide §4.2): the previous shape was a
-    broadcast nested-loop join evaluating the `aggregate()` fold
-    cosine per pair — interpreted HOF lambdas, |big|·|small|·dim
-    evaluations. This blocks the big side (blk = vec_id mod
-    EMBCOS_BLOCKS, the `ext_dedup_embcos` triangle device), replicates
-    the SMALL side to every block, and scores each block with
-    per-dimension NumPy folds — the identical left-to-right
-    accumulation (`acc += a_i*b_i` from 0.0), norms as sqrt of the
-    self-dot fold, cosine as dot/(n_big·n_small) — so every emitted
-    flag compares the SAME IEEE doubles the JVM fold compared and the
-    id set is bit-identical. A pair with zero norm product reads NULL
-    cosine on the JVM (`nullif`) and is masked here (excluded before
-    the ≥ cut); 0/0 NaN fails the cut on both paths. Inputs are
-    (vec_id, dv, nrm) with dv finite by the callers' `_fin_emb_spark`
-    filter.
+    Inputs are (vec_id, dv) rows, dv finite by the callers'
+    `_fin_emb_spark` filter. The big side is blocked and the small
+    side replicated (`_block_probe`); each block's cosines are
+    `_fold_cos`, so every flag compares the SAME IEEE doubles the
+    JVM fold compares and the id set is bit-identical. A pair with
+    zero norm product reads NULL cosine on the JVM (`nullif`) and is
+    masked here (excluded before the ≥ cut).
 
-    Scale shape unchanged: the small side is the increment (small by
-    the incremental premise), the big side streams through one
-    map-side-blocked pass — zero big-side shuffle beyond the block
-    exchange, per-task work bounded by |big|/B · |small|."""
+    Scale shape: the small side is the increment (small by the
+    incremental premise), the big side streams through one blocked
+    pass — per-task work bounded by |big|/B · |small|."""
     import numpy as np
-    import pandas as pd
 
-    B = EMBCOS_BLOCKS
-    big_t = big.select(
-        F.pmod(F.col("vec_id"), F.lit(B)).cast("int").alias("blk"),
-        F.lit(0).alias("side"),
-        "vec_id",
-        "dv",
-        "nrm",
-    )
-    small_t = small.select(
-        F.explode(F.array(*[F.lit(i) for i in range(B)])).alias("blk"),
-        F.lit(1).alias("side"),
-        "vec_id",
-        "dv",
-        "nrm",
-    )
-    rep = big_t.unionByName(small_t)
+    def score(ids_a, mat_a, ids_b, mat_b, same_block):
+        cos, denom = _fold_cos(mat_a, mat_b)
+        keep = _tri_mask(ids_a, ids_b, same_block) & (denom != 0.0)
+        keep &= cos >= COS_DUP_THRESHOLD
+        return {"vec_id": np.unique(ids_b[keep.any(axis=0)])}
 
-    def flag(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        a = pdf[pdf["side"] == 0]  # big
-        b = pdf[pdf["side"] == 1]  # small
-        if len(a) == 0 or len(b) == 0:
-            return pd.DataFrame({"vec_id": np.array([], dtype=np.int64)})
-        ids_a = a["vec_id"].to_numpy(dtype=np.int64)
-        ids_b = b["vec_id"].to_numpy(dtype=np.int64)
-        mat_a = np.stack([np.asarray(v, dtype=np.float64) for v in a["dv"]])
-        mat_b = np.stack([np.asarray(v, dtype=np.float64) for v in b["dv"]])
-        n_a = a["nrm"].to_numpy(dtype=np.float64)
-        n_b = b["nrm"].to_numpy(dtype=np.float64)
-        dots = np.zeros((len(ids_a), len(ids_b)))
-        for i in range(mat_a.shape[1]):  # index-order fold ≙ _DOT
-            dots += np.outer(mat_a[:, i], mat_b[:, i])
-        denom = n_a[:, None] * n_b[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = dots / denom
-        keep = (denom != 0.0) & (cos >= COS_DUP_THRESHOLD)
-        if lt_only:
-            keep &= ids_a[:, None] < ids_b[None, :]
-        flagged = np.unique(ids_b[keep.any(axis=0)])
-        return pd.DataFrame({"vec_id": flagged})
-
-    return rep.groupBy("blk").applyInPandas(flag, "vec_id bigint").distinct()
+    return _block_probe(big, small, score, "vec_id bigint", lt_only).distinct()
 
 
 _EMBCOS_INCR_ORACLE = f"""
@@ -4151,19 +3978,17 @@ def ext_dedup_embcos_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     base is never rescored — nightly cost is |inc| × base + |inc|²,
     not corpus².
 
-    Exactness: cosine is the engine-shared sequential fold with
-    per-side norms precomputed once per row (sqrt of the self-dot
-    fold — the multiply/divide order matches the oracle's
-    expression character for character, so values are bit-equal);
-    zero-norm vectors read NULL cosine on both engines (nullif vs
-    DuckDB's NULL on double division by zero) and fail every ≥ t
-    cut, so a padding/failed-encode vector can flag nothing and
-    nothing flags against it — it lands is_new, on both engines.
+    Exactness: cosine is `_fold_cos` (`embcos_flagged_ids`), whose
+    multiply/divide order matches the oracle's expression, so values
+    are bit-equal; zero-norm vectors read NULL cosine on both engines
+    (masked here vs DuckDB's NULL on double division by zero) and
+    fail every ≥ t cut, so a padding/failed-encode vector can flag
+    nothing and nothing flags against it — it lands is_new, on both
+    engines.
 
     Scale shape: the increment is SMALL by construction (that is the
-    premise of running incrementally), so it broadcasts and the base
-    streams through a map-only broadcast nested-loop probe — zero
-    base shuffle per night, the
+    premise of running incrementally), so it replicates to every
+    block while the base is blocked once (`_block_probe`) — the
     `ext_dedup_incremental_bucketed` economics on the vector tier;
     the in-increment triangle is |inc|²-bounded. At 100 TB the probe
     composes with the LSH-bucketed base index
@@ -4179,23 +4004,14 @@ def ext_dedup_embcos_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").cast("array<double>").alias("dv"),
             doc_bucket("vec_id").alias("bkt"),
         )
-        .withColumn(
-            "nrm", F.sqrt(F.expr(_DOT.format(a="dv", b="dv")))
-        )
     )
-    base = emb.filter(F.col("bkt") < INCR_BASE_BUCKETS).select(
-        "vec_id", "dv", "nrm"
-    )
+    base = emb.filter(F.col("bkt") < INCR_BASE_BUCKETS).select("vec_id", "dv")
     # the increment feeds the probe, the triangle (both sides), and
     # the output spine — pin it or four branches re-scan embeddings
     inc = compute_once(
-        emb.filter(F.col("bkt") >= INCR_BASE_BUCKETS).select(
-            "vec_id", "dv", "nrm"
-        )
+        emb.filter(F.col("bkt") >= INCR_BASE_BUCKETS).select("vec_id", "dv")
     )
-    # blocked NumPy fold kernel (r13 — guide §4.2; bit-identical flag
-    # sets, see embcos_flagged_ids): base × inc bipartite probe, then
-    # the first-copy-wins inc triangle
+    # base × inc probe, then the first-copy-wins inc triangle
     dob = embcos_flagged_ids(base, inc, lt_only=False).withColumn(
         "f_base", F.lit(True)
     )

@@ -939,18 +939,18 @@ def stream_embcos_incremental_chain(
 
     Emits the exact-arm contract (vec_id, dup_of_base,
     dup_in_increment, is_new) and shares `ext_dedup_embcos_incremental`'s
-    oracle verbatim — the sequential-fold cosine with precomputed
-    norms is character-identical, so the streamed chain is
-    hash-checked against the same SQL replay.
+    oracle verbatim — the probe's fold cosine is bit-identical to
+    it, so the streamed chain is hash-checked against the same SQL
+    replay.
 
-    Scale shape: each micro-batch lands its (vec_id, dv, nrm) rows
-    once, with no per-batch probe or re-read. At drain the increment
-    broadcasts and the base STREAMS through the probe (zero base
-    shuffle per night; at 100 TB the probe composes with the
-    standing LSH bucket index exactly as the batch arm's docstring
-    lays out); the triangle is |inc|²-bounded."""
+    Scale shape: each micro-batch lands its (vec_id, dv) rows once,
+    with no per-batch probe or re-read. At drain the increment
+    replicates to every block of the blocked base (at 100 TB the
+    probe composes with the standing LSH bucket index exactly as the
+    batch arm's docstring lays out); the triangle is
+    |inc|²-bounded."""
     from ..functions.hashing import doc_bucket
-    from ..operators.similarity import _DOT, _fin_emb_spark
+    from ..operators.similarity import _fin_emb_spark
 
     prep = (
         stream_embeddings(spark, sf_dir)
@@ -959,7 +959,6 @@ def stream_embcos_incremental_chain(
         .select(
             "vec_id", F.col("embedding").cast("array<double>").alias("dv")
         )
-        .withColumn("nrm", F.sqrt(F.expr(_DOT.format(a="dv", b="dv"))))
     )
     base = (
         load(spark, sf_dir, "embeddings")
@@ -969,7 +968,6 @@ def stream_embcos_incremental_chain(
             F.col("vec_id").alias("b_id"),
             F.col("embedding").cast("array<double>").alias("bdv"),
         )
-        .withColumn("bn", F.sqrt(F.expr(_DOT.format(a="bdv", b="bdv"))))
     )
     return drain_embcos_incremental(spark, prep, base)
 
@@ -978,22 +976,17 @@ def drain_embcos_incremental(
     spark: SparkSession, incr_stream: DataFrame, base: DataFrame
 ) -> DataFrame:
     """Core of `stream_embcos_incremental_chain`, parameterized over
-    the (vec_id, dv, nrm) increment stream and the (b_id, bdv, bn)
-    base frame so tests can drive it with a multi-file
-    `maxFilesPerTrigger=1` source and prove batch-order
-    independence. The stream lands once as parquet; both probes run
-    the blocked NumPy fold kernel (`similarity.embcos_flagged_ids`)
-    over the landed rows at drain time: base × increment, then the
-    increment triangle."""
+    the (vec_id, dv) increment stream and the (b_id, bdv) base frame
+    so tests can drive it with a multi-file `maxFilesPerTrigger=1`
+    source and prove batch-order independence. The stream lands once
+    as parquet; both probes run the NumPy block-probe kernel
+    (`similarity.embcos_flagged_ids`) over the landed rows at drain
+    time: base × increment, then the increment triangle."""
     from ..operators.similarity import embcos_flagged_ids
 
-    base_k = base.select(
-        F.col("b_id").alias("vec_id"),
-        F.col("bdv").alias("dv"),
-        F.col("bn").alias("nrm"),
-    )
+    base_k = base.select(F.col("b_id").alias("vec_id"), F.col("bdv").alias("dv"))
     rows, _ = land_parquet(incr_stream)
-    inc_k = rows.select("vec_id", "dv", "nrm")
+    inc_k = rows.select("vec_id", "dv")
     dob = embcos_flagged_ids(base_k, inc_k, lt_only=False).withColumn(
         "f_base", F.lit(True)
     )

@@ -25,19 +25,20 @@ PYTHON_NODES = (
 )
 
 ALLOW = {
-    # NumPy vector kernels (block-pair, bucket or partition scorers)
-    "ext_dedup_embcos": "NumPy block-pair cosine scorer (applyInPandas)",
-    "ext_dedup_embcos_lsh": "NumPy re-score of each salted LSH bucket group",
-    "ext_dedup_embcos_lsh_verify": "reads LSH candidates scored per bucket in NumPy",
-    "ext_dedup_embcos_incremental": "NumPy bipartite cosine probe per block",
-    "ext_dedup_embcos_incremental_lsh": "NumPy bipartite cosine probe per block",
-    "stream_embcos_incremental_chain": "NumPy bipartite cosine probe at drain",
-    "ext_sim_lsh": "NumPy exact distance within each salted LSH bucket group",
-    "ext_sim_lsh_verify": "reads LSH candidates scored per bucket in NumPy",
-    "ext_sim_lsh_recall": "NumPy block-triangle distance kernel (recall denominator)",
-    "ext_sim_knn_graph": "NumPy block-pair scorer with a per-block partial top-k",
-    "ext_label_knn_noise": "reads ext_sim_knn_graph's NumPy block-pair scorer",
-    "ext_triplet_margin_audit": "NumPy per-block partial max cosine",
+    # NumPy vector kernels: the one pair kernel of similarity.py through
+    # its block-triangle or block-probe layout, or IVF's `_fold_d2`
+    "ext_dedup_embcos": "pair kernel, block triangle: cosine cut",
+    "ext_dedup_embcos_lsh": "pair kernel, block triangle per salted LSH bucket",
+    "ext_dedup_embcos_lsh_verify": "reads the LSH mine scored per bucket in NumPy",
+    "ext_dedup_embcos_incremental": "pair kernel, block probe: cosine flag",
+    "ext_dedup_embcos_incremental_lsh": "reads the LSH mine scored per bucket in NumPy",
+    "stream_embcos_incremental_chain": "pair kernel, block probe: cosine flag at drain",
+    "ext_sim_lsh": "pair kernel, block triangle per salted LSH bucket",
+    "ext_sim_lsh_verify": "reads the LSH mine scored per bucket in NumPy",
+    "ext_sim_lsh_recall": "pair kernel, block triangle: d² cut (recall denominator)",
+    "ext_sim_knn_graph": "pair kernel, block triangle: per-block partial top-k",
+    "ext_label_knn_noise": "reads ext_sim_knn_graph's block-triangle scorer",
+    "ext_triplet_margin_audit": "pair kernel, block probe: per-block partial max cosine",
     "ext_emb_gram_int8": "partition-local NumPy int8 Gram partials",
     "ext_sim_ivf": "IVF list assignment and probe scoring in NumPy",
     "ext_sim_ivf_exhaustive": "IVF list assignment and probe scoring in NumPy",

@@ -207,6 +207,37 @@ def test_empty_corpus_tables_do_not_crash_fixed_class(spark):
         qs[name](spark, fixture).collect()  # must not raise
 
 
+def test_empty_input_grand_total_oracle_parity(spark):
+    """Grouping sets over ZERO-row events/documents read SQL's one
+    grand-total row (count 0, rollup's total_chars NULL), as DuckDB
+    and PostgreSQL do; Spark alone would return no row. The exact
+    driver-replica comparison (rowcount + schema + value hash) on the
+    --empty fixture."""
+    import sys
+
+    sys.path.insert(0, TOOLS)
+    import duckdb
+    from degen_sweep import build_fixture
+    from verify_local import compare_query
+
+    from social_media_data_pipeline_recession_political_sentiment_spark.catalog import TABLES
+
+    fixture = build_fixture(empty=True)
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{fixture}/{t}.parquet'")
+    qs, os_ = registry.queries(), registry.oracles()
+    bad = {}
+    for name in ("agg_cube", "agg_rollup", "agg_grouping_sets"):
+        assert qs[name](spark, fixture).count() == 1, name
+        problems = compare_query(spark, con, qs[name], os_[name], fixture)
+        if problems:
+            bad[name] = problems
+    assert not bad, bad
+    row = qs["agg_rollup"](spark, fixture).collect()[0]
+    assert (row.source, row.lang, row.n_docs, row.total_chars) == (None, None, 0, None)
+
+
 def test_null_riddled_tables_do_not_crash_fixed_class(spark):
     """NULL-riddled regression pin (r7 sweep, --nulls mode): the
     queries whose numpy/driver seams crashed on NULL embeddings /

@@ -1104,3 +1104,112 @@ def test_embcos_incremental_lsh_equals_exact_arm(spark):
         ).collect()
     }
     assert lsh == exact
+
+
+def test_fold_dots_equal_the_engine_fold(spark):
+    """`_fold_dots` is the engine's `_DOT` fold and `_fold_cos` its
+    `_cosine`, bit for bit (==, not approximately): seeded float32
+    vectors at EMB_DIM with mixed signs and magnitudes, plus one
+    all-zero vector whose pairs read NULL on the JVM and fall outside
+    the kernel's `denom != 0` mask."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    import social_media_data_pipeline_recession_political_sentiment_spark.operators.similarity as sim
+
+    rng = np.random.default_rng(13)
+    n = 9
+    vecs = rng.standard_normal((n, sim.EMB_DIM)) * rng.choice([1e-3, 1.0, 1e3], (n, 1))
+    vecs = vecs.astype(np.float32)
+    vecs[4] = 0.0
+    e = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>",
+    ).select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    a = e.select(F.col("vec_id").alias("a"), F.col("v").alias("va"))
+    b = e.select(F.col("vec_id").alias("b"), F.col("v").alias("vb"))
+    rows = a.crossJoin(b).select(
+        "a",
+        "b",
+        F.expr(sim._DOT.format(a="va", b="vb")).alias("dot"),
+        F.sqrt(F.expr(sim._DOT.format(a="va", b="va"))).alias("norm_a"),
+        sim._cosine("va", "vb").alias("cos"),
+    ).collect()
+    assert len(rows) == n * n
+
+    mat = sim._stack(list(vecs))
+    aa, bb, ab = sim._fold_dots(mat, mat)
+    cos, denom = sim._fold_cos(mat, mat)
+    assert (aa == bb).all()
+    n_null = 0
+    for r in rows:
+        assert r.dot == ab[r.a, r.b], (r.a, r.b)
+        assert r.norm_a == np.sqrt(aa[r.a]), r.a
+        if r.cos is None:
+            n_null += 1
+            assert 4 in (r.a, r.b)
+            assert not denom[r.a, r.b] != 0.0  # masked out by the kernel
+        else:
+            assert denom[r.a, r.b] != 0.0
+            assert r.cos == cos[r.a, r.b], (r.a, r.b)
+    assert n_null == 2 * n - 1
+
+
+def test_block_layouts_put_every_pair_in_exactly_one_group(spark):
+    """Partition property of the two block layouts. Triangle: for N in
+    0..12 rows and B in {1, 3, 8} blocks (B > N and empty blocks
+    included), and for per-bucket salt counts of 1 and 3 given as a
+    Column, every unordered pair of rows sharing the group keys is
+    scored exactly once. Probe: every (big, small) pair exactly once,
+    and with lt_only only big id < small id."""
+    from collections import Counter
+
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    import social_media_data_pipeline_recession_political_sentiment_spark.operators.similarity as sim
+
+    def all_pairs(ids_a, mat_a, ids_b, mat_b, same_block):
+        return sim._pair_rows(ids_a, ids_b, sim._tri_mask(ids_a, ids_b, same_block))
+
+    def emitted(df):
+        return Counter((r.vec_a, r.vec_b) for r in df.collect())
+
+    schema = "vec_a bigint, vec_b bigint"
+    sizes = range(13)
+    # triangle, int block count: the set size N is the group key
+    rows = spark.createDataFrame(
+        [(n, n * 100 + i, [float(i)]) for n in sizes for i in range(n)],
+        "n long, vec_id long, embedding array<float>",
+    )
+    want = Counter(
+        (n * 100 + i, n * 100 + j) for n in sizes for i in range(n) for j in range(i + 1, n)
+    )
+    for blocks in (1, 3, 8):
+        got = emitted(sim._block_triangle(rows, blocks, all_pairs, schema, keys=("n",)))
+        assert got == want, blocks
+
+    # triangle, per-bucket salt count as a Column
+    salted = rows.withColumn("nsalt", F.when(F.col("n") % 2 == 0, 3).otherwise(1))
+    got = emitted(
+        sim._block_triangle(salted, F.col("nsalt"), all_pairs, schema, keys=("n",))
+    )
+    assert got == want
+
+    # probe: big side blocked, small side replicated to every block
+    def probe_pairs(ids_a, mat_a, ids_b, mat_b, same_block):
+        ai, bi = np.nonzero(sim._tri_mask(ids_a, ids_b, same_block))
+        return {"vec_a": ids_a[ai], "vec_b": ids_b[bi]}
+
+    def vecs(ids):
+        return spark.createDataFrame(
+            [(i, [float(i)]) for i in ids], "vec_id long, dv array<double>"
+        )
+
+    big, small = vecs(range(12)), vecs([3, 5, 40, 41, 11])
+    got = emitted(sim._block_probe(big, small, probe_pairs, schema))
+    assert got == Counter((a, b) for a in range(12) for b in [3, 5, 40, 41, 11])
+    inc = vecs(range(2, 11))
+    got = emitted(sim._block_probe(inc, inc, probe_pairs, schema, lt_only=True))
+    assert got == Counter((a, b) for a in range(2, 11) for b in range(2, 11) if a < b)
+    assert emitted(sim._block_probe(vecs([]), small, probe_pairs, schema)) == Counter()

@@ -630,7 +630,7 @@ def test_embcos_incremental_chain_merges_across_batches(spark):
     )
 
     work = tempfile.mkdtemp(prefix="smdp_embchain_")
-    schema = "vec_id long, dv array<double>, nrm double"
+    schema = "vec_id long, dv array<double>"
     B = [1.0, 0.0, 0.0]
     A = [0.0, 1.0, 0.0]
     C = [0.0, 0.0, 1.0]
@@ -639,9 +639,9 @@ def test_embcos_incremental_chain_merges_across_batches(spark):
     # carries vec 10 (the EARLIEST copy of B) — arrival order is the
     # reverse of vec_id order — plus the zero vector 11. Batch 2
     # repeats B (30), duplicates base content A (40), and adds C (50).
-    b0 = [(20, B, 1.0)]
-    b1 = [(10, B, 1.0), (11, Z, 0.0)]
-    b2 = [(30, B, 1.0), (40, A, 1.0), (50, C, 1.0)]
+    b0 = [(20, B)]
+    b1 = [(10, B), (11, Z)]
+    b2 = [(30, B), (40, A), (50, C)]
     for i, rows in enumerate([b0, b1, b2]):
         spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
             os.path.join(work, f"b{i}")
@@ -652,7 +652,7 @@ def test_embcos_incremental_chain_merges_across_batches(spark):
         .parquet(os.path.join(work, "b*"))
     )
     base = spark.createDataFrame(
-        [(100, A, 1.0)], "b_id long, bdv array<double>, bn double"
+        [(100, A)], "b_id long, bdv array<double>"
     )
     out = {
         r.vec_id: r
