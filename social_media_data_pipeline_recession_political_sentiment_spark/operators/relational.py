@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import (
@@ -106,7 +106,7 @@ def project_flatten_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads and non-integral field tokens read NULL on BOTH engines
     — matching the reference's try/except-skip (`Reddit.py:103-107`)
     while staying portable (DuckDB otherwise hard-errors on malformed
-    JSON and ROUNDS '1.5' to 2 — r7 json-edge sweep)."""
+    JSON and ROUNDS '1.5' to 2)."""
     e = load(spark, sf_dir, "events")
     return e.select("event_id", json_int_field("props").alias("k_val"))
 
@@ -920,24 +920,97 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ------------------------------------------------ the as-of device
+
+# ev + snap + b, the DuckDB text of every as-of join: the 6-hourly
+# snapshot max per event_type and each event's backward ASOF match.
+# As-of needs a non-NULL (key, time): DuckDB's inner ASOF JOIN drops
+# NULL ts/event_type rows through its NULL comparisons, while Spark's
+# union-and-window carry would keep them, so `ev` excludes them
+# explicitly on both engines (real data has no such rows).
+_ASOF_CTE = """
+ev AS (SELECT * FROM events
+       WHERE ts IS NOT NULL AND event_type IS NOT NULL),
+snap AS (SELECT event_type,
+        to_timestamp(CAST(floor(epoch(ts) / 21600) * 21600 AS BIGINT))
+          AT TIME ZONE 'UTC' AS snap_ts,
+        max(value) AS snap_max
+      FROM ev GROUP BY 1, 2),
+b AS (SELECT e.event_id, e.event_type, e.ts,
+        s.snap_ts AS b_ts, s.snap_max AS b_max
+      FROM ev e ASOF JOIN snap s
+      ON e.event_type = s.event_type AND e.ts >= s.snap_ts)
+"""
+
+
+def _asof_carry(*order) -> Column:
+    """The running as-of carry over `_asof`'s tagged union: the last
+    snapshot struct (snap_ts, snap_max) at or before each row in
+    `order`, per event_type.
+
+    The snapshot rides as ONE struct: snap_ts and snap_max carried
+    separately desync when the latest snapshot's max is NULL (an
+    all-NULL-value bucket) — ignorenulls skips the NULL max but not
+    the ts, stitching a row that matches neither engine's as-of
+    semantics. The struct is non-NULL exactly on snapshot rows, so one
+    carry reproduces DuckDB's ASOF row semantics even with NULL
+    snap_max."""
+    sn = F.when(F.col("tag") == 0, F.struct("snap_ts", "snap_max"))
+    w = (
+        W.partitionBy("event_type")
+        .orderBy(*order)
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    return F.last(sn, ignorenulls=True).over(w)
+
+
+def _asof(spark: SparkSession, sf_dir: str, *carries: Column) -> DataFrame:
+    """Spark twin of _ASOF_CTE: one row per event with event_id,
+    event_type, its event time in exact microseconds (t_us) and b, the
+    latest snapshot struct (b.snap_ts, b.snap_max) at or before it
+    (NULL when none), plus any further `carries` over the same union.
+
+    Union the tagged snapshot and event streams, then one window pass
+    per key ordered by (t, tag) carries the snapshot forward onto each
+    event row. Snapshots sort before events at equal t, so an event
+    exactly on a snapshot matches it (>= semantics). ONE shuffle on
+    the key, O(1) state per row — versus a broadcast-nested-loop range
+    join's O(events x snapshots) per key."""
+    e = load(spark, sf_dir, "events").filter(
+        F.col("ts").isNotNull() & F.col("event_type").isNotNull()
+    )
+    snap_ts = F.timestamp_seconds((F.col("ts").cast("long") / 21600).cast("long") * 21600)
+    snap = e.groupBy("event_type", snap_ts.alias("snap_ts")).agg(
+        F.max("value").alias("snap_max")
+    )
+    u = snap.select(
+        "event_type",
+        F.col("snap_ts").alias("t"),
+        "snap_ts",
+        "snap_max",
+        F.lit(0).alias("tag"),
+    ).unionByName(
+        e.select(
+            "event_type", F.col("ts").alias("t"), "event_id", F.lit(1).alias("tag")
+        ),
+        allowMissingColumns=True,
+    )
+    return u.select(
+        "event_id",
+        "event_type",
+        "tag",
+        F.unix_micros(F.col("t")).alias("t_us"),
+        _asof_carry("t", "tag").alias("b"),
+        *carries,
+    ).filter(F.col("tag") == 1)
+
+
 @register(
     "join_asof",
-    # ev CTE: the as-of contract needs a non-NULL (key, time) on both
-    # engines — a NULL ts/event_type row cannot be matched by DuckDB's
-    # inner ASOF JOIN (NULL comparisons) but rides Spark's
-    # union-and-window carry; pinned out EXPLICITLY on both (r8 NULL
-    # sweep; real data has no such rows — value-neutral)
-    oracle=(
-        "WITH ev AS (SELECT * FROM events "
-        "WHERE ts IS NOT NULL AND event_type IS NOT NULL), "
-        "snap AS (SELECT event_type, "
-        "to_timestamp(CAST(floor(epoch(ts) / 21600) * 21600 AS BIGINT)) "
-        "AT TIME ZONE 'UTC' AS snap_ts, "
-        "max(value) AS snap_max FROM ev GROUP BY 1, 2) "
-        "SELECT e.event_id, e.event_type, s.snap_ts, s.snap_max "
-        "FROM ev e ASOF JOIN snap s "
-        "ON e.event_type = s.event_type AND e.ts >= s.snap_ts"
-    ),
+    oracle=f"""
+WITH {_ASOF_CTE}
+SELECT event_id, event_type, b_ts AS snap_ts, b_max AS snap_max FROM b
+""",
 )
 def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join — an operator Spark's DataFrame API lacks natively:
@@ -947,69 +1020,11 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     with its native ASOF JOIN.)
 
     Scale design — composition of existing ops, not a range join:
-    union the (tagged) snapshot and event streams, then one window
-    pass per key ordered by (t, tag) carries the last non-null
-    snapshot forward onto each event row (`last(ignorenulls)` over an
-    unbounded-preceding frame). ONE shuffle on the key, state O(1) per
-    row — versus a broadcast-nested-loop range join's O(events x
-    snapshots) per key. Snapshots sort before events at equal t so an
-    event exactly on a snapshot matches it (>= semantics).
-
-    NULL pin (r8 sweep): as-of needs a non-NULL (key, time) — NULL
-    ts/event_type rows are excluded EXPLICITLY on both engines
-    (DuckDB's inner ASOF JOIN drops them via NULL comparisons while
-    the union-and-window carry would keep them)."""
-    e = load(spark, sf_dir, "events").filter(
-        F.col("ts").isNotNull() & F.col("event_type").isNotNull()
-    )
-    snap_ts = F.timestamp_seconds((F.col("ts").cast("long") / 21600).cast("long") * 21600)
-    snap = (
-        e.groupBy("event_type", snap_ts.alias("snap_ts"))
-        .agg(F.max("value").alias("snap_max"))
-    )
-    tagged_snap = snap.select(
-        "event_type",
-        F.col("snap_ts").alias("t"),
-        F.lit(None).cast("long").alias("event_id"),
-        "snap_ts",
-        "snap_max",
-        F.lit(0).alias("tag"),
-    )
-    tagged_ev = e.select(
-        "event_type",
-        F.col("ts").alias("t"),
-        "event_id",
-        F.lit(None).cast("timestamp").alias("snap_ts"),
-        F.lit(None).cast("double").alias("snap_max"),
-        F.lit(1).alias("tag"),
-    )
-    w = (
-        W.partitionBy("event_type")
-        .orderBy("t", "tag")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    u = tagged_snap.unionByName(tagged_ev)
-    # Carry the snapshot as ONE struct (r9 property-test find):
-    # snap_ts and snap_max carried separately desync when the latest
-    # snapshot's max is NULL (an all-NULL-value bucket) — ignorenulls
-    # skips the NULL max but not the ts, stitching a row that matches
-    # NEITHER engine's as-of semantics. The struct is non-NULL exactly
-    # for snapshot rows (snap_ts is never NULL there), so one carry
-    # reproduces DuckDB's ASOF row semantics even with NULL snap_max.
-    sn = F.when(
-        F.col("tag") == 0, F.struct(F.col("snap_ts"), F.col("snap_max"))
-    )
-    filled = u.select(
-        "event_id",
-        "event_type",
-        "tag",
-        F.last(sn, ignorenulls=True).over(w).alias("sn"),
-    )
-    return filled.filter(F.col("tag") == 1).select(
-        "event_id",
-        "event_type",
-        F.col("sn.snap_ts").alias("snap_ts"),
-        F.col("sn.snap_max").alias("snap_max"),
+    the `_asof` union-and-window carry, ONE shuffle on the key, state
+    O(1) per row. NULL ts/event_type rows are excluded on both engines
+    (`_ASOF_CTE`)."""
+    return _asof(spark, sf_dir).select(
+        "event_id", "event_type", "b.snap_ts", "b.snap_max"
     )
 
 
@@ -1019,7 +1034,7 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT event_type, quantile_cont(value, 0.5) AS p50, "
         "quantile_cont(value, 0.95) AS p95, "
         "CAST(approx_quantile(value, 0.5) IS NOT NULL AS BOOLEAN) AS sketch_ok "
-        # finite-measure pin (r9 nonfinite gate)
+        # finite-measure pin: NaN/±inf values are excluded on both engines
         "FROM events WHERE value IS NOT NULL AND NOT isnan(value) "
         "AND abs(value) < CAST('Infinity' AS DOUBLE) GROUP BY event_type"
     ),
@@ -1103,8 +1118,8 @@ def window_lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity gap
 
-# Finite-value domain pin (r7 non-finite sweep): the cents/fixed-point
-# devices cast round(value * scale) to BIGINT — under ANSI a hard
+# Finite-value domain pin: the cents/fixed-point devices cast
+# round(value * scale) to BIGINT — under ANSI a hard
 # CAST_OVERFLOW on NaN/±inf and on magnitudes beyond the exact
 # fixed-point domain (DuckDB's CAST errors identically, so BOTH
 # engines crash without the pin). The shared fragment parses in BOTH
@@ -1114,12 +1129,12 @@ SESSION_GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity gap
 # double-exact and far inside BIGINT.
 FINITE_VALUE_SQL = "value IS NOT NULL AND NOT isnan(value) AND abs(value) < 1.0e12"
 
-# r9 nonfinite ORACLE-gate pins (running the full DuckDB gate on the
-# --nonfinite fixture, previously crash-only, forked the value-stats
-# family): NaN rides aggregation/comparison semantics differently per
-# engine (numpy max -> NaN, SQL NaN-greatest; Spark double->BIGINT
-# cast SATURATES at Long.MAX where DuckDB CAST hard-errors). The
-# value-measure domain is therefore FINITE on both engines:
+# Finite-measure pins (the DuckDB gate on the --nonfinite fixture
+# forks the value-stats family without them): NaN rides
+# aggregation/comparison semantics differently per engine (numpy max
+# -> NaN, SQL NaN-greatest; Spark double->BIGINT cast SATURATES at
+# Long.MAX where DuckDB CAST hard-errors). The value-measure domain
+# is therefore FINITE on both engines:
 FINITE_MEASURE_SQL = (
     "value IS NOT NULL AND NOT isnan(value) "
     "AND abs(value) < CAST('Infinity' AS DOUBLE)"
@@ -1129,7 +1144,7 @@ FINITE_FLOOR_SQL = (
     "value IS NOT NULL AND NOT isnan(value) AND abs(value) < 9.0e18"
 )
 
-# Sane event-time domain (r9: a 2260-09-xx glitch stamp fast-forwards
+# Sane event-time domain (a 2260-09-xx glitch stamp fast-forwards
 # a stream watermark and silently drops every honest row, and a
 # 1900..2260 span explodes a dense time spine to ~9.5M cells): ops
 # that RESAMPLE time or carry WATERMARKS gate stamps to the
@@ -1144,55 +1159,69 @@ FINITE_CENTS_SQL = (
     f"CASE WHEN {FINITE_VALUE_SQL} THEN CAST(round(value * 100) AS BIGINT) END"
 )
 
-_SESSIONIZE_ORACLE = f"""
-WITH s AS (SELECT event_id, user_id, epoch_us(ts) AS us,
-                  {FINITE_CENTS_SQL} AS cents FROM events),
+# g + t, the DuckDB text of the batch sessionizer over a CTE
+# s(event_id, user_id, us, ...): a session breaks after a 30-minute
+# inactivity gap, as a LAG gap flag plus a running sum of the flags
+_SESSION_SEQ_CTE = f"""
 g AS (SELECT *, CASE WHEN us - lag(us) OVER w > {SESSION_GAP_US}
                      OR lag(us) OVER w IS NULL THEN 1 ELSE 0 END AS new_s
       FROM s WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
 t AS (SELECT *, CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
       FROM g)
-SELECT user_id, session_seq, min(us) AS start_us, max(us) AS end_us,
-       CAST(count(*) AS BIGINT) AS n_events, CAST(sum(cents) AS BIGINT) AS cents_sum
-FROM t GROUP BY user_id, session_seq
 """
 
 
-@register("agg_sessionize_batch", oracle=_SESSIONIZE_ORACLE)
+def _session_seq(e: DataFrame) -> DataFrame:
+    """Spark twin of _SESSION_SEQ_CTE: `e` (event_id, user_id, us, ...)
+    plus session_seq, the running count of session starts per user in
+    (us, event_id) order. The lag window and the running sum share
+    one partition and order, so Catalyst chains the two Window nodes
+    over a single user_id shuffle and sort."""
+    w = W.partitionBy("user_id").orderBy("us", "event_id")
+    prev = F.lag("us").over(w)
+    new_s = (F.col("us") - prev > SESSION_GAP_US) | prev.isNull()
+    return (
+        e.withColumn("new_s", new_s.cast("long"))
+        .withColumn(
+            "session_seq",
+            F.sum("new_s").over(w.rowsBetween(W.unboundedPreceding, W.currentRow)),
+        )
+        .drop("new_s")
+    )
+
+
+@register(
+    "agg_sessionize_batch",
+    oracle=f"""
+WITH s AS (SELECT event_id, user_id, epoch_us(ts) AS us,
+                  {FINITE_CENTS_SQL} AS cents FROM events),
+{_SESSION_SEQ_CTE}
+SELECT user_id, session_seq, min(us) AS start_us, max(us) AS end_us,
+       CAST(count(*) AS BIGINT) AS n_events, CAST(sum(cents) AS BIGINT) AS cents_sum
+FROM t GROUP BY user_id, session_seq
+""",
+)
 def agg_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization — the gaps-and-islands twin of
-    `stream_sessionize` (SURVEY §2.9): a session breaks after a
-    30-minute inactivity gap, computed as LAG + a running sum of
-    session-start flags. All arithmetic is exact integer microseconds
-    and cents (the `window_lag_delta` device), so the oracle hash
-    cannot drift on float truncation, and pytest pins this batch form
-    ≡ the streaming state-timeout form on a shared fixture.
+    `stream_sessionize` (SURVEY §2.9): sessions from `_session_seq`'s
+    30-minute-gap contract. All arithmetic is exact integer
+    microseconds and cents (the `window_lag_delta` device), so the
+    oracle hash cannot drift on float truncation, and pytest pins this
+    batch form ≡ the streaming state-timeout form on a shared fixture.
 
     Plan: ONE shuffle on user_id serves the lag window, the running
-    sum (same partition + order, so Catalyst chains the Window nodes
-    over a single sort), and the final per-session hash agg. At
-    100 TB user_id distributes evenly and the per-user sort is
-    bounded by per-user event counts; no global sort, no driver
-    state."""
+    sum and the final per-session hash agg. At 100 TB user_id
+    distributes evenly and the per-user sort is bounded by per-user
+    event counts; no global sort, no driver state."""
     e = load(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         F.unix_micros("ts").alias("us"),
         F.expr(FINITE_CENTS_SQL).alias("cents"),
     )
-    w = W.partitionBy("user_id").orderBy("us", "event_id")
-    new_s = (F.col("us") - F.lag("us").over(w) > SESSION_GAP_US) | F.lag("us").over(
-        w
-    ).isNull()
     return (
-        e.withColumn("new_s", new_s.cast("long"))
-        .withColumn(
-            "session_seq",
-            F.sum("new_s").over(
-                w.rowsBetween(W.unboundedPreceding, W.currentRow)
-            ),
-        )
+        _session_seq(e)
         .groupBy("user_id", "session_seq")
         .agg(
             F.min("us").alias("start_us"),
@@ -1676,9 +1705,8 @@ def agg_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row broadcast cross join, then explodes to the three report
     rows driver-free. Each per-user step table is pinned with
     `compute_once` — step k and the step-k count otherwise each
-    replay every earlier stage (r6 scan audit: 6 events scans
-    before, 3 after — one pushed-filter scan per step is the
-    intended shape)."""
+    replay every earlier stage (3 events scans instead of 6 — one
+    pushed-filter scan per step is the intended shape)."""
     e = load(spark, sf_dir, "events").select(
         "user_id", "event_type", F.unix_micros("ts").alias("us")
     )
@@ -1730,7 +1758,7 @@ def agg_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s.n_users").alias("n_users"),
             # empty funnel entry (n1 = 0): conversion is undefined —
             # DuckDB's division by zero reads NULL, Spark's is an
-            # ANSI crash (r7 empty-corpus sweep); nullif converges
+            # ANSI crash on an empty corpus; nullif converges
             (
                 F.col("s.n_users").cast("double")
                 / F.nullif(F.col("n1").cast("double"), F.lit(0.0))
@@ -1770,7 +1798,7 @@ def agg_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     motion is the initial per-user shuffle the sessionize/funnel
     family already pays. The (user, day) activity set and the cohort
     table are pinned with `compute_once` — each feeds two branches
-    that otherwise replay the scan-distinct chain (r6 scan audit)."""
+    that otherwise replay the scan-distinct chain."""
     a = compute_once(
         load(spark, sf_dir, "events")
         .select("user_id", F.to_date(F.date_trunc("day", F.col("ts"))).alias("d"))
@@ -1831,7 +1859,7 @@ def agg_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     (day, user) → day expand. No per-user state, no window over the
     full corpus. The (user, day) set is pinned with `compute_once` —
     the day dimension, the range join, and the DAU agg otherwise
-    each replay the scan-distinct chain (r6 scan audit)."""
+    each replay the scan-distinct chain."""
     a = compute_once(
         load(spark, sf_dir, "events")
         .select("user_id", F.to_date(F.date_trunc("day", F.col("ts"))).alias("d"))
@@ -1983,7 +2011,7 @@ def agg_ewma_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     recurrence itself is the contract — state in integer micro-units,
     s₁ = n₁·10⁶, sₜ = (30·nₜ·10⁶ + 70·sₜ₋₁) div 100 — and the oracle
     runs the IDENTICAL recurrence as a recursive CTE. All positive
-    BIGINTs, so Spark/pandas/DuckDB division semantics coincide and
+    BIGINTs, so Spark/DuckDB division semantics coincide and
     the result hash-matches bit-for-bit.
 
     Scale shape: identical to `agg_ingest_anomaly` — the only
@@ -1991,18 +2019,15 @@ def agg_ewma_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials. The recurrence is honestly sequential per type, but it
     runs over the AGGREGATED daily series whose length is bounded by
     the calendar (≤ days × types rows forever, regardless of corpus
-    size), so the per-group applyInPandas task is a
-    few-thousand-row problem at any scale — the same
+    size), so `_ewma_fold`'s one native fold per type is a
+    few-thousand-element array at any scale — the same
     calendar-bounded argument, not the `ext_pack_sequences`
     single-task-per-corpus-slice trap.
 
-    NULL pin (r8 sweep): a smoothed SERIES needs an orderable day and
-    a joinable key — NULL ts/event_type rows are excluded EXPLICITLY
-    on both engines (the oracle's recursive chain cannot extend a
-    NULL-key partition past its seed: NULL = NULL join; and pandas
-    NaT-last vs SQL NULLS-LAST day ordering would be engine-local)."""
-    import pandas as pd
-
+    NULL pin: a smoothed SERIES needs an orderable day and a joinable
+    key — NULL ts/event_type rows are excluded EXPLICITLY on both
+    engines (the oracle's recursive chain cannot extend a NULL-key
+    partition past its seed: NULL = NULL join)."""
     d = (
         load(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull() & F.col("event_type").isNotNull())
@@ -2012,42 +2037,44 @@ def agg_ewma_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").alias("n"))
     )
+    return _ewma_fold(d)
 
-    def ewma(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("day").reset_index(drop=True)
-        s = 0
-        out = []
-        for i, n in enumerate(int(x) for x in pdf["n"]):
-            if i == 0:
-                s = n * EWMA_MICRO
-            else:
-                s = (
-                    EWMA_ALPHA_PCT * n * EWMA_MICRO
-                    + (100 - EWMA_ALPHA_PCT) * s
-                ) // 100
-            out.append(s)
-        pdf["ewma_micros"] = pd.Series(out, dtype="int64")
-        return pdf
 
-    return d.groupBy("event_type").applyInPandas(
-        ewma, schema="event_type string, day date, n long, ewma_micros long"
+def _ewma_fold(d: DataFrame) -> DataFrame:
+    """The EWMA recurrence over daily counts d(event_type, day, n), one
+    native fold per event_type: the day-sorted series is folded into
+    the array of states s₁..sₜ (s₁ = n₁·10⁶, then
+    sₜ = (30·nₜ·10⁶ + 70·sₜ₋₁) div 100), and zipped back onto its
+    days as (event_type, day, n, ewma_micros) rows."""
+    step = (
+        f"CASE WHEN size(acc) = 0 THEN x.n * {EWMA_MICRO} "
+        f"ELSE ({EWMA_ALPHA_PCT} * x.n * {EWMA_MICRO} "
+        f"+ {100 - EWMA_ALPHA_PCT} * element_at(acc, -1)) div 100 END"
+    )
+    fold = (
+        "aggregate(s, CAST(array() AS ARRAY<BIGINT>), "
+        f"(acc, x) -> concat(acc, array({step})))"
+    )
+    return (
+        d.groupBy("event_type")
+        .agg(F.array_sort(F.collect_list(F.struct("day", "n"))).alias("s"))
+        .select(
+            "event_type",
+            F.expr(
+                f"inline(zip_with(s, {fold}, "
+                "(x, y) -> struct(x.day AS day, x.n AS n, y AS ewma_micros)))"
+            ),
+        )
     )
 
 
 # --------------------------------------------- nearest as-of join
 
-_ASOF_NEAREST_ORACLE = """
-WITH ev AS (SELECT * FROM events
-            WHERE ts IS NOT NULL AND event_type IS NOT NULL),
-snap AS (SELECT event_type,
-        to_timestamp(CAST(floor(epoch(ts) / 21600) * 21600 AS BIGINT))
-          AT TIME ZONE 'UTC' AS snap_ts,
-        max(value) AS snap_max
-      FROM ev GROUP BY 1, 2),
-b AS (SELECT e.event_id, e.event_type, e.ts,
-        s.snap_ts AS b_ts, s.snap_max AS b_max
-      FROM ev e ASOF JOIN snap s
-      ON e.event_type = s.event_type AND e.ts >= s.snap_ts),
+
+@register(
+    "join_asof_nearest",
+    oracle=f"""
+WITH {_ASOF_CTE},
 f AS (SELECT e.event_id, s.snap_ts AS f_ts, s.snap_max AS f_max
       FROM ev e ASOF LEFT JOIN snap s
       ON e.event_type = s.event_type AND e.ts < s.snap_ts)
@@ -2061,10 +2088,8 @@ SELECT b.event_id, b.event_type,
                  <= epoch_us(f.f_ts) - epoch_us(b.ts)
             THEN b.b_max ELSE f.f_max END AS snap_max
 FROM b JOIN f ON b.event_id = f.event_id
-"""
-
-
-@register("join_asof_nearest", oracle=_ASOF_NEAREST_ORACLE)
+""",
+)
 def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-neighbor as-of join: each event picks the CLOSEST
     6-hourly snapshot in time, looking both directions (ties and
@@ -2074,76 +2099,22 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     neither side is authoritative. DuckDB checks it as one backward
     ASOF JOIN + one forward ASOF LEFT JOIN + a CASE on the gaps.
 
-    Scale shape: the same union-and-window device as `join_asof`,
-    run in BOTH directions over ONE exchange. Both carries are
-    RUNNING (unbounded-preceding) frames — backward as
-    `last(ignorenulls)` over the ascending sort, forward as
+    Scale shape: the `_asof` device run in BOTH directions over ONE
+    exchange. Both carries are RUNNING (unbounded-preceding) frames —
+    backward over the ascending sort, forward as the same
     `last(ignorenulls)` over the DESCENDING sort — because a
     (currentRow, unboundedFollowing) frame makes Spark rescan the
     frame suffix per row: O(n²) per key, measured 53 s vs ~3 s at
     sf0.1. Same hash partitioning for both windows ⇒ one shuffle,
-    two in-partition sorts. Gap comparison is exact integer
-    MICROseconds. O(1) state per row; never a per-key nested-loop
-    range join.
-
-    NULL pin (r8 sweep): as-of needs a non-NULL (key, time) — NULL
-    ts/event_type rows are excluded EXPLICITLY on both engines."""
-    e = load(spark, sf_dir, "events").filter(
-        F.col("ts").isNotNull() & F.col("event_type").isNotNull()
-    )
-    snap_ts = F.timestamp_seconds(
-        (F.col("ts").cast("long") / 21600).cast("long") * 21600
-    )
-    snap = e.groupBy("event_type", snap_ts.alias("snap_ts")).agg(
-        F.max("value").alias("snap_max")
-    )
-    tagged_snap = snap.select(
-        "event_type",
-        F.col("snap_ts").alias("t"),
-        F.lit(None).cast("long").alias("event_id"),
-        "snap_ts",
-        "snap_max",
-        F.lit(0).alias("tag"),
-    )
-    tagged_ev = e.select(
-        "event_type",
-        F.col("ts").alias("t"),
-        "event_id",
-        F.lit(None).cast("timestamp").alias("snap_ts"),
-        F.lit(None).cast("double").alias("snap_max"),
-        F.lit(1).alias("tag"),
-    )
-    back = (
-        W.partitionBy("event_type")
-        .orderBy("t", "tag")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
+    two in-partition sorts, two Window operators. Gap comparison is
+    exact integer MICROseconds. O(1) state per row; never a per-key
+    nested-loop range join. NULL ts/event_type rows are excluded on
+    both engines (`_ASOF_CTE`)."""
     # descending running frame == "nearest strictly-later snapshot":
     # at equal t the event (tag 1) sorts BEFORE the snapshot (tag 0)
-    # in this order, so the same-t snapshot stays out of the frame —
-    # identical semantics to the ascending forward-looking frame
-    fwd = (
-        W.partitionBy("event_type")
-        .orderBy(F.desc("t"), F.desc("tag"))
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    u = tagged_snap.unionByName(tagged_ev)
-    # one struct per snapshot row (the join_asof r9 carry note: split
-    # ts/max carries desync on an all-NULL-value bucket)
-    sn = F.when(
-        F.col("tag") == 0, F.struct(F.col("snap_ts"), F.col("snap_max"))
-    )
-    filled = u.select(
-        "event_id",
-        "event_type",
-        "tag",
-        F.unix_micros(F.col("t")).alias("t_us"),
-        F.last(sn, ignorenulls=True).over(back).alias("b"),
-        F.last(sn, ignorenulls=True).over(fwd).alias("f"),
-    ).filter(F.col("tag") == 1)
-    # forward sees the CURRENT row too, but event rows carry a NULL
-    # snap struct, and an equal-t snapshot sorts before the event — so
-    # f is genuinely the strictly-later snapshot
+    # in this order, and event rows carry a NULL snap struct, so the
+    # same-t snapshot stays out of the frame
+    a = _asof(spark, sf_dir, _asof_carry(F.desc("t"), F.desc("tag")).alias("f"))
     # gap compare in exact integer MICROSECONDS: a whole-second cast
     # would flip ties for events sitting at the precise midpoint with
     # a fractional-second offset (observed in the sf0.1 fixture)
@@ -2151,7 +2122,7 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("t_us") - F.unix_micros(F.col("b.snap_ts"))
         <= F.unix_micros(F.col("f.snap_ts")) - F.col("t_us")
     )
-    return filled.select(
+    return a.select(
         "event_id",
         "event_type",
         F.when(take_back, F.col("b.snap_ts"))
@@ -2241,7 +2212,7 @@ def agg_time_spine_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     events scan: the spine bounds and the type dimension derive
     from the pinned hourly aggregate itself (min/max hour and
     distinct types survive the rollup exactly), not from fresh
-    corpus scans (r6 scan audit: 3 before, 1 after)."""
+    corpus scans (1 events scan instead of 3)."""
     e = load(spark, sf_dir, "events").where(SANE_TS_SQL)
     hourly = compute_once(
         e.groupBy(
@@ -2366,18 +2337,11 @@ def agg_interevent_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ASOF_TOLERANCE_S = 10800  # 3h freshness bound (half the snapshot period)
 
-_ASOF_TOL_ORACLE = f"""
-WITH ev AS (SELECT * FROM events
-            WHERE ts IS NOT NULL AND event_type IS NOT NULL),
-snap AS (SELECT event_type,
-        to_timestamp(CAST(floor(epoch(ts) / 21600) * 21600 AS BIGINT))
-          AT TIME ZONE 'UTC' AS snap_ts,
-        max(value) AS snap_max
-      FROM ev GROUP BY 1, 2),
-b AS (SELECT e.event_id, e.event_type, e.ts,
-        s.snap_ts AS b_ts, s.snap_max AS b_max
-      FROM ev e ASOF JOIN snap s
-      ON e.event_type = s.event_type AND e.ts >= s.snap_ts)
+
+@register(
+    "join_asof_tolerance",
+    oracle=f"""
+WITH {_ASOF_CTE}
 SELECT event_id, event_type,
        epoch_us(ts) - epoch_us(b_ts) <= {ASOF_TOLERANCE_S} * CAST(1000000 AS BIGINT)
          AS fresh,
@@ -2386,10 +2350,8 @@ SELECT event_id, event_type,
        CASE WHEN epoch_us(ts) - epoch_us(b_ts)
                  <= {ASOF_TOLERANCE_S} * CAST(1000000 AS BIGINT) THEN b_max END AS snap_max
 FROM b
-"""
-
-
-@register("join_asof_tolerance", oracle=_ASOF_TOL_ORACLE)
+""",
+)
 def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time as-of join with a freshness TTL (pandas
     merge_asof's `tolerance`): the backward snapshot only counts if
@@ -2398,64 +2360,16 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     last known feature value" and "join it only if it isn't stale",
     which is what feature-store reads actually require.
 
-    Same one-exchange union-and-window plan as `join_asof`; the TTL
-    is a codegen CASE on the exact integer microsecond gap (the
+    Same one-exchange `_asof` plan as `join_asof`; the TTL is a
+    codegen CASE on the exact integer microsecond gap (the
     `join_asof_nearest` device), so the tolerance adds zero data
-    motion.
-
-    NULL pin (r8 sweep): as-of needs a non-NULL (key, time) — NULL
-    ts/event_type rows are excluded EXPLICITLY on both engines."""
-    e = load(spark, sf_dir, "events").filter(
-        F.col("ts").isNotNull() & F.col("event_type").isNotNull()
-    )
-    snap_ts = F.timestamp_seconds(
-        (F.col("ts").cast("long") / 21600).cast("long") * 21600
-    )
-    snap = e.groupBy("event_type", snap_ts.alias("snap_ts")).agg(
-        F.max("value").alias("snap_max")
-    )
-    tagged_snap = snap.select(
-        "event_type",
-        F.col("snap_ts").alias("t"),
-        F.lit(None).cast("long").alias("event_id"),
-        "snap_ts",
-        "snap_max",
-        F.lit(0).alias("tag"),
-    )
-    tagged_ev = e.select(
-        "event_type",
-        F.col("ts").alias("t"),
-        "event_id",
-        F.lit(None).cast("timestamp").alias("snap_ts"),
-        F.lit(None).cast("double").alias("snap_max"),
-        F.lit(1).alias("tag"),
-    )
-    w = (
-        W.partitionBy("event_type")
-        .orderBy("t", "tag")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    # one struct per snapshot row (the join_asof r9 carry note: split
-    # ts/max carries desync on an all-NULL-value bucket)
-    sn = F.when(
-        F.col("tag") == 0, F.struct(F.col("snap_ts"), F.col("snap_max"))
-    )
-    filled = (
-        tagged_snap.unionByName(tagged_ev)
-        .select(
-            "event_id",
-            "event_type",
-            "tag",
-            F.unix_micros(F.col("t")).alias("t_us"),
-            F.last(sn, ignorenulls=True).over(w).alias("b"),
-        )
-        .filter(F.col("tag") == 1)
-    )
+    motion. NULL ts/event_type rows are excluded on both engines
+    (`_ASOF_CTE`)."""
     fresh = (
         F.col("t_us") - F.unix_micros(F.col("b.snap_ts"))
         <= ASOF_TOLERANCE_S * 1_000_000
     )
-    return filled.select(
+    return _asof(spark, sf_dir).select(
         "event_id",
         "event_type",
         fresh.alias("fresh"),
@@ -2533,7 +2447,8 @@ def agg_user_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     never wrap: past BIGINT the `n_users`/`total_events` casts raise
     under ANSI (as the oracle's BIGINT casts do), and the Gini stays
     exact until a term passes 10^38, where ANSI decimal overflow
-    raises too. No users reads (0, 0, NULL).
+    raises too. No users reads (0, NULL, NULL): SQL's sum over no
+    rows is NULL.
 
     Scale shape: the corpus-width motion is the user-keyed count agg.
     The rank over the aggregated user table is `catalog.global_rank`
@@ -2550,7 +2465,7 @@ def agg_user_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = "decimal(38,0)"
     s = ranked.agg(
         F.count("*").alias("n"),
-        F.coalesce(F.sum(F.col("x").cast(exact)), F.lit(0).cast(exact)).alias("tot"),
+        F.sum(F.col("x").cast(exact)).alias("tot"),
         F.sum(F.col("rank").cast(exact) * F.col("x")).alias("wsum"),
     )
     num = 2 * F.col("wsum") - (F.col("n") + 1) * F.col("tot")
@@ -2978,7 +2893,7 @@ def agg_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     events, and the day rollup output is calendar-sized."""
     e = load(spark, sf_dir, "events")
     # pin the (user, day) set feeding the first-seen agg AND the
-    # join-back (r6 scan audit; the agg_retention_cohorts pattern)
+    # join-back (the agg_retention_cohorts pattern)
     ud = compute_once(
         e.select(
             "user_id", F.to_date(F.date_trunc("day", F.col("ts"))).alias("day")
@@ -3169,10 +3084,10 @@ def agg_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: scan-local digit extraction, ONE 9-key hash agg
     with map-side combine, 1-row total crossJoin-broadcast — a
     constant-size audit at any corpus scale."""
-    # non-finite pin (r7 sweep): a leading digit exists only for
-    # finite values; the shared 1e12 domain keeps the audit universe
-    # identical to the cents-device queries
-    # the 1e-300 floor (r7 review): below it pow(10, e) underflows to
+    # non-finite pin: a leading digit exists only for finite values;
+    # the shared 1e12 domain keeps the audit universe identical to the
+    # cents-device queries
+    # the 1e-300 floor: below it pow(10, e) underflows to
     # 0.0 and the leading-digit division explodes — Spark ANSI throws
     # DIVIDE_BY_ZERO on a subnormal like 5e-324 while DuckDB reads
     # NULL; a leading digit for sub-1e-300 magnitudes is numerically
@@ -3193,7 +3108,6 @@ def agg_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(d0)
     )
     # the 9-row digit census feeds the total AND the report — pin it
-    # (r6 scan audit)
     c = compute_once(
         e.select(digit.alias("digit")).groupBy("digit").agg(
             F.count("*").alias("n_obs")
@@ -3217,7 +3131,7 @@ def agg_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------- mergeable-sketch rollup
 
 _HLL_UNION_ORACLE = (
-    # NULL pin (r8 sweep): the (type, day) sketch grid needs non-NULL
+    # NULL pin: the (type, day) sketch grid needs non-NULL
     # keys on both engines — Spark's rolled-join drops a NULL
     # event_type group (null-unsafe equality) and a NULL day would
     # count as a merged sketch on one side only
@@ -3364,7 +3278,7 @@ def _pq_sql(q: float, elem: str, arr: str = "arr", n: str = "n") -> str:
     interpolate with DIFFERENT formulas whose ulp drift would leak
     through any rounding contract.
 
-    n=0 guard (r7 ADVICE): with an empty/all-NULL key set the index
+    n=0 guard: with an empty/all-NULL key set the index
     degenerates to lo+1 = 0 — Spark's `element_at(arr, 0)` raises
     INVALID_INDEX_OF_ZERO while DuckDB's `list_extract(arr, 0)`
     reads NULL. The quantile of an empty set is honestly undefined:
@@ -3511,18 +3425,17 @@ def join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines; every count is exact; fp_rate is one shared
     rounded division over true negatives.
 
-    Plan note (r6 review fix): the probe is SCAN-SIDE — k chained
-    BroadcastHashJoins against the <= M-row bit table, one per hash
-    function, with the pass predicate evaluated before any exchange.
-    The earlier explode-by-k + regroup form shuffled the FULL fact
-    table through a (orderkey, custkey) aggregate, which is exactly
-    the shuffle the bloom exists to avoid. The r6 scan audit then
-    collapsed the THREE fact passes (total / bloom-pass / truth) to
-    ONE: the truth semi-join rides the same probe pass as a fourth
-    broadcast join, and all three counts fall out of a single
-    conditional agg — one fact scan, zero fact exchange (customer's
-    dim and bit frames are pinned; bits re-derived per hash arm had
-    billed four customer scans)."""
+    Plan note: the probe is SCAN-SIDE — k chained BroadcastHashJoins
+    against the <= M-row bit table, one per hash function, with the
+    pass predicate evaluated before any exchange. The earlier
+    explode-by-k + regroup form shuffled the FULL fact table through
+    a (orderkey, custkey) aggregate, which is exactly the shuffle the
+    bloom exists to avoid. The three fact passes (total / bloom-pass
+    / truth) are collapsed to ONE: the truth semi-join rides the same
+    probe pass as a fourth broadcast join, and all three counts fall
+    out of a single conditional agg — one fact scan, zero fact
+    exchange (customer's dim and bit frames are pinned; bits
+    re-derived per hash arm had billed four customer scans)."""
     c = load(spark, sf_dir, "customer")
     dim = compute_once(
         c.filter(F.col("c_mktsegment") == _JB_SEGMENT)
@@ -3564,7 +3477,7 @@ def join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         " AND ".join(f"p{j} IS NOT NULL" for j in range(JOIN_BLOOM_K))
     )
     # coalesce: sum over an EMPTY fact table is NULL where the
-    # oracle's count(*) is 0 (r6 sweep review finding)
+    # oracle's count(*) is 0
     counts = probe.agg(
         F.count("*").alias("n_orders"),
         F.coalesce(
@@ -3581,9 +3494,9 @@ def join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_pass_bloom") - F.col("n_true_match"))
         .cast("long")
         .alias("bloom_fp"),
-        # nullif: zero true negatives (e.g. empty orders, r8 empty-
-        # orders sweep) makes fp_rate honestly undefined — NULL on
-        # both engines instead of an ANSI DIVIDE_BY_ZERO crash
+        # nullif: zero true negatives (e.g. empty orders) makes
+        # fp_rate honestly undefined — NULL on both engines instead of
+        # an ANSI DIVIDE_BY_ZERO crash
         F.round(
             (F.col("n_pass_bloom") - F.col("n_true_match"))
             * 1.0
@@ -3599,16 +3512,15 @@ def join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------- concurrency sweep-line
 
 # Session-interval contract shared by agg_concurrency_peak and
-# agg_occupancy_hours (r6 review consolidation): integer epoch-second
-# boundaries (floor(epoch), floor(value) seconds of duration,
-# end-exclusive [s0, s1)), sub-second sessions dropped. Stated ONCE per
-# engine so the two operators can never diverge on what a session is.
-# SESSION_MAX_S (r7 non-finite sweep): a session "duration" beyond 30
-# days is a data error (NaN/±inf/garbage seconds), and unbounded it
-# explodes the per-day split into a 10^14-element sequence
-# (COLLECTION_SIZE_LIMIT crash). `value < cap` excludes NaN on both
-# engines (NaN compares false), ±inf, and overflow-range magnitudes
-# in one shared predicate.
+# agg_occupancy_hours: integer epoch-second boundaries (floor(epoch),
+# floor(value) seconds of duration, end-exclusive [s0, s1)),
+# sub-second sessions dropped. Stated ONCE per engine so the two
+# operators can never diverge on what a session is.
+# SESSION_MAX_S: a session "duration" beyond 30 days is a data error
+# (NaN/±inf/garbage seconds), and unbounded it explodes the per-day
+# split into a 10^14-element sequence (COLLECTION_SIZE_LIMIT crash).
+# `value < cap` excludes NaN on both engines (NaN compares false),
+# ±inf, and overflow-range magnitudes in one shared predicate.
 SESSION_MAX_S = 30 * 86400
 
 _SESSION_CTE = f"""
@@ -3679,7 +3591,7 @@ def agg_concurrency_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     capacity-planning statistic (max simultaneous load) that
     `agg_hourly_heatmap`'s arrival counts cannot give.
 
-    The day-splitting design (r6 review rewrite) is what makes the
+    The day-splitting design is what makes the
     semantics exact at the edges the carry-in formulation got wrong:
     a session ending exactly at midnight contributes an EMPTY
     sub-interval to the next day (end-exclusive — no phantom peak),
@@ -3713,7 +3625,7 @@ def agg_concurrency_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # sub-intervals feed both sweep arms AND the per-day meta — pin
     # them or each branch replays the scan-sessionize-explode chain
-    # (r6 scan audit: 3 events scans before, 1 after)
+    # (1 events scan instead of 3)
     iv = compute_once(
         sub.select(
             "event_type",
@@ -3823,7 +3735,7 @@ def agg_markov_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the types²-bounded transition matrix feeds the row-sum AND the
     # term branches — pin it or both replay the corpus lag window
-    # (r6 scan audit: 3 events scans before, 1 after)
+    # (1 events scan instead of 3)
     t = compute_once(
         g.filter(F.col("s").isNotNull())
         .groupBy("s", "t")
@@ -3991,7 +3903,7 @@ def agg_daily_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     never reaches the window."""
     e = load(spark, sf_dir, "events")
     # pin the calendar-bounded daily series feeding the lag window
-    # branches (r6 scan audit)
+    # branches
     dc = compute_once(
         e.select(F.expr("CAST(ts AS LONG) div 86400").alias("day_num"))
         .groupBy("day_num")
@@ -4073,7 +3985,7 @@ def agg_value_log_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: scan-local bucket assignment, ONE
     (type, bucket)-keyed agg with map-side combine onto a
     types x ~40 output. All columns integer-exact."""
-    e = load(spark, sf_dir, "events").where(FINITE_FLOOR_SQL)  # r9 nonfinite-gate pin
+    e = load(spark, sf_dir, "events").where(FINITE_FLOOR_SQL)  # finite-measure pin
     v = e.select("event_type", F.floor("value").cast("long").alias("iv"))
     b = v.withColumn(
         "bucket",
@@ -4133,7 +4045,7 @@ def agg_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(max(ts) AS LONG) div 86400").alias("d1"),
     )
     # pin the per-user lifetime frame feeding the total AND the
-    # explode (r6 scan audit)
+    # explode
     lt = compute_once(
         u.select(
             F.least(F.col("d1") - F.col("d0"), F.lit(SURVIVAL_MAX_DAYS)).alias(
@@ -4196,7 +4108,7 @@ def agg_user_type_venn(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     ut = e.select("user_id", "event_type").distinct()
     # pin the per-user combo frame feeding the total AND the region
-    # rollup (r6 scan audit)
+    # rollup
     combo = compute_once(
         ut.groupBy("user_id").agg(
             F.array_join(F.array_sort(F.collect_list("event_type")), "+").alias(
@@ -4280,7 +4192,7 @@ def agg_funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums. No windows, no sorts."""
     e = load(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     # entry table feeds the conversion join AND the entered count —
-    # pin it or both replay the pushed-filter scan (r6 scan audit)
+    # pin it or both replay the pushed-filter scan
     a = compute_once(
         e.filter(F.col("event_type") == CONVERT_FROM)
         .groupBy("user_id")
@@ -4384,8 +4296,8 @@ def agg_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ONE events scan: the day span derives from the pinned
     # (day, hour) counts (min/max day survives the rollup), and the
-    # dense grid is pinned for its three consumer rollups (r6 scan
-    # audit: 6 events scans before, 1 after)
+    # dense grid is pinned for its three consumer rollups (1 events
+    # scan instead of 6)
     cnt = compute_once(
         b.groupBy("day_num", "hour_of_day").agg(F.count("*").alias("c"))
     )
@@ -4451,8 +4363,8 @@ SUCCESS_THRESHOLD = 100  # value >= this counts as a "hit" (shared
 # documented lifecycle, so the threshold must not drift apart)
 
 # Shared hits/trials aggregation: ONE CTE text for both oracles and
-# ONE Spark builder for both operators (r6 review finding — the
-# duplicated blocks risked silent threshold drift).
+# ONE Spark builder for both operators (duplicated blocks risk
+# silent threshold drift).
 _HITS_TRIALS_CTE = (
     "SELECT event_type, "
     f"CAST(sum(CASE WHEN value >= {SUCCESS_THRESHOLD} THEN 1 ELSE 0 END) "
@@ -4476,13 +4388,13 @@ def _hits_trials(e: DataFrame) -> DataFrame:
 # parses bare decimal literals as exact DECIMAL (1.96*1.96 = 3.8416
 # exactly) while Python pre-folds them to doubles (3.8415999999999997)
 # — a ulp gap that can flip round(...,6)/ceil on boundary-straddling
-# groups (r6 review finding, probed). An all-double shared tree makes
+# groups. An all-double shared tree makes
 # every intermediate IEEE-identical on both engines.
 _WZ = f"CAST({WILSON_Z} AS DOUBLE)"
 _WP = "(CAST(hits AS DOUBLE) / CAST(trials AS DOUBLE))"
 _WT = "CAST(trials AS DOUBLE)"
 _RATE_SQL = f"round({_WP}, 6)"
-# the trailing `+ 0.0` pins the ZERO SIGN (r7 json-edge sweep): at
+# the trailing `+ 0.0` pins the ZERO SIGN: at
 # p = 0 the bound is mathematically zero but arrives as a ±epsilon
 # whose sign the two engines' round() treat differently — DuckDB
 # keeps -0.0 while Spark's BigDecimal round yields +0.0. IEEE
@@ -4522,7 +4434,7 @@ def agg_wilson_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim by both engines — F.expr here, inline in the oracle —
     so every intermediate double is IEEE-identical, rounded once.
     (Python-side pre-folded constants were a ulp-drift bug vs
-    DuckDB's exact-DECIMAL literals; r6 review finding.) Groups
+    DuckDB's exact-DECIMAL literals.) Groups
     present in the table always have trials >= 1, so no
     zero-division arm is reachable.
 
@@ -4604,7 +4516,7 @@ def agg_dist_drift_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one (bucket, slice)-conditional agg with map-side
     partials, a 40-row window, scalar max. The day split reuses the
     integer epoch-day contract."""
-    # r9 nonfinite-gate pin: FINITE_FLOOR_SQL
+    # finite-measure pin: FINITE_FLOOR_SQL
     e = load(spark, sf_dir, "events").where(FINITE_FLOOR_SQL).select(
         F.expr("CAST(ts AS LONG) div 86400").alias("day_num"),
         F.floor("value").cast("long").alias("iv"),
@@ -4621,8 +4533,8 @@ def agg_dist_drift_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # TWO events scans total (min-day probe + bucket agg — the
     # two-pass scalar-stats shape): slice totals derive from the
     # pinned 40-row bucket table instead of a third corpus scan,
-    # and the bucket table feeds the CDF window too (r6 scan
-    # audit: 6 scans before)
+    # and the bucket table feeds the CDF window too (2 scans
+    # instead of 6)
     c = compute_once(
         sl.groupBy("bucket").agg(
             F.sum(F.when(F.col("slice") == "a", 1).otherwise(0)).alias("ca"),
@@ -4637,10 +4549,9 @@ def agg_dist_drift_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("ca").over(w).alias("fa"), F.sum("cb").over(w).alias("fb")
     )
     # nullif, not bare div: DuckDB's integer division by zero reads
-    # NULL but Spark's is an ANSI DIVIDE_BY_ZERO crash (r7
-    # degenerate-input sweep — a stream entirely inside the split
-    # window leaves nb = 0), so the guard is what makes the
-    # "NULLs identically on both engines" contract below true
+    # NULL but Spark's is an ANSI DIVIDE_BY_ZERO crash (a stream
+    # entirely inside the split window leaves nb = 0), so the guard is
+    # what makes the "NULLs identically on both engines" contract below true
     d = cum.crossJoin(F.broadcast(n)).agg(
         F.max(
             F.abs(
@@ -4659,7 +4570,7 @@ def agg_dist_drift_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             # division identically on both engines; the probe stays
             # NULL (undefined) but the FLAG must not — a monitor
             # filtering on it would silently drop the stream either
-            # way (r6 review finding)
+            # way
             F.coalesce(F.col("d_micro") >= 100000, F.lit(False)).alias(
                 "drift_flag"
             ),
@@ -4741,8 +4652,8 @@ AB_Z_BETA = 0.841621  # 80% power
 # verbatim on both engines, every operand CAST AS DOUBLE. The CASE
 # guard exists because a baseline above 1 - delta cannot exhibit a
 # +delta lift at all — without it the variance sum goes negative and
-# the closed form emits a NEGATIVE n and feasible=true (r6 review
-# finding, p1=1.0 gave n=-792): n is NULL and feasible FALSE there.
+# the closed form emits a NEGATIVE n and feasible=true (p1=1.0
+# gave n=-792): n is NULL and feasible FALSE there.
 _ABD = f"CAST({AB_DELTA} AS DOUBLE)"
 _ABZ = f"(CAST({AB_Z_ALPHA} AS DOUBLE) + CAST({AB_Z_BETA} AS DOUBLE))"
 _ABP1 = "(CAST(hits AS DOUBLE) / CAST(trials AS DOUBLE))"
@@ -4785,7 +4696,7 @@ def agg_ab_test_sizing(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the shared all-double SQL fragment `_AB_NREQ_SQL` evaluated
     verbatim by both engines (the `_WILSON_LB_SQL` device — Python
     pre-folded z-constants differ from DuckDB's DECIMAL literals by
-    ulps, r6 review finding), so ceil sees the IDENTICAL double.
+    ulps), so ceil sees the IDENTICAL double.
     A baseline above 1 − δ cannot show a +δ lift: n_required is
     NULL and feasible false there (guarded CASE arm, both engines).
 
@@ -4870,7 +4781,7 @@ def agg_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     the prefix sums (unbounded-frame aggregates) instead of a
     separate aggregate branch — the first cut's n-as-a-DataFrame
     crossJoin recomputed `daily` per branch, tripling the corpus
-    scan (caught in the r6 session-6 plan audit).
+    scan.
     NULL timestamps are excluded on BOTH engines (the repo's
     explicit-filter convention — Spark sorts a NULL day group first
     where DuckDB sorts it last, which would shift every rank)."""
@@ -4965,7 +4876,7 @@ def agg_trend_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     device."""
     e = load(spark, sf_dir, "events")
     # the daily aggregate self-joins — pin it or both pair sides
-    # replay the corpus scan (r6 scan audit)
+    # replay the corpus scan
     daily = compute_once(
         e.groupBy(
             "event_type",
@@ -5145,16 +5056,13 @@ def agg_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------ session bounce rate
 
-_BOUNCE_ORACLE = f"""
+
+@register(
+    "agg_sessions_bounce",
+    oracle=f"""
 WITH s AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
            WHERE ts IS NOT NULL AND user_id IS NOT NULL),
-g AS (SELECT *, CASE WHEN us - lag(us) OVER w > {SESSION_GAP_US}
-                     OR lag(us) OVER w IS NULL THEN 1 ELSE 0 END AS new_s
-      FROM s WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-t AS (SELECT *, CAST(sum(new_s) OVER (PARTITION BY user_id
-        ORDER BY us, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND
-        CURRENT ROW) AS BIGINT) AS session_seq
-      FROM g),
+{_SESSION_SEQ_CTE},
 ses AS (SELECT user_id, session_seq, min(us) AS start_us,
                max(us) - min(us) AS dur_us,
                CAST(count(*) AS BIGINT) AS n_events
@@ -5167,47 +5075,35 @@ SELECT CAST(date_trunc('day', make_timestamp(start_us)) AS DATE) AS day,
              / count(*), 6) AS bounce_share,
        CAST(sum(dur_us) AS BIGINT) AS dur_us_sum
 FROM ses GROUP BY 1
-"""
-
-
-@register("agg_sessions_bounce", oracle=_BOUNCE_ORACLE)
+""",
+)
 def agg_sessions_bounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily bounce-rate over sessionized activity: sessions from the
-    shared 30-minute-gap contract (`agg_sessionize_batch` device),
-    rolled up by session-START day into session count, single-event
-    ("bounce") count and share, and total engaged time — the
-    engagement KPI a product dashboard reads off the session table,
-    and (run over crawl fetches) the one-hit-wonder rate a crawler
-    audit reports. NULL ts / NULL user_id rows are excluded by the
-    same stated contract as `agg_burstiness_fano` (an unstamped or
-    anonymous event can't join a session).
+    shared 30-minute-gap contract (`_session_seq`), rolled up by
+    session-START day into session count, single-event ("bounce")
+    count and share, and total engaged time — the engagement KPI a
+    product dashboard reads off the session table, and (run over crawl
+    fetches) the one-hit-wonder rate a crawler audit reports. NULL ts
+    / NULL user_id rows are excluded by the same stated contract as
+    `agg_burstiness_fano` (an unstamped or anonymous event can't join
+    a session).
 
     Exactness: session bounds and durations are exact integer
     microseconds (the sessionize device); the one division (bounce
     share) is rounded 6dp; day is the session-start instant's UTC
     calendar day on both engines (timestamp_micros ↔ make_timestamp).
 
-    Plan: the ONE user_id shuffle serves lag + running-sum windows
-    (Catalyst chains them over a single sort) AND the per-session
-    agg; the day rollup shuffles only |sessions-per-day| aggregate
-    rows. Same 100 TB shape as `agg_sessionize_batch`."""
+    Plan: the ONE user_id shuffle serves the `_session_seq` windows
+    AND the per-session agg; the day rollup shuffles only
+    |sessions-per-day| aggregate rows. Same 100 TB shape as
+    `agg_sessionize_batch`."""
     e = (
         load(spark, sf_dir, "events")
         .where("ts IS NOT NULL AND user_id IS NOT NULL")
         .select("event_id", "user_id", F.unix_micros("ts").alias("us"))
     )
-    w = W.partitionBy("user_id").orderBy("us", "event_id")
-    new_s = (F.col("us") - F.lag("us").over(w) > SESSION_GAP_US) | F.lag(
-        "us"
-    ).over(w).isNull()
     ses = (
-        e.withColumn("new_s", new_s.cast("long"))
-        .withColumn(
-            "session_seq",
-            F.sum("new_s").over(
-                w.rowsBetween(W.unboundedPreceding, W.currentRow)
-            ),
-        )
+        _session_seq(e)
         .groupBy("user_id", "session_seq")
         .agg(
             F.min("us").alias("start_us"),
@@ -5478,8 +5374,8 @@ def agg_tail_hill(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").where("user_id IS NOT NULL")
     # slim (user, count) frame feeds the rank window (read twice:
     # cut + terms) and the n scalar — pin it or every branch
-    # re-scans and re-aggregates the event stream (the r6 scan-audit
-    # class; 8 scans before, 1 after)
+    # re-scans and re-aggregates the event stream (1 scan instead
+    # of 8)
     uc = compute_once(e.groupBy("user_id").agg(F.count("*").alias("c")))
     r = uc.select(
         "c",
@@ -5526,7 +5422,7 @@ def agg_tail_hill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ----------------------- audience-overlap matrix (r10)
+# ----------------------- audience-overlap matrix
 
 _AUD_OVERLAP_ORACLE = """
 WITH tu AS (SELECT DISTINCT event_type, user_id FROM events

@@ -613,45 +613,31 @@ def test_int8_quantize_adversarial_vectors(spark):
 )
 @settings(**_SETTINGS)
 def test_ewma_recurrence_property(spark, series_list):
-    """agg_ewma_volume's integer recurrence, run through the real
-    applyInPandas stage over arbitrary per-type daily series, equals
-    a sequential reference — including the first-day seed and the
-    per-step floor division."""
+    """agg_ewma_volume's integer recurrence, run through the operator's
+    native fold (`_ewma_fold`) over arbitrary per-type daily series,
+    equals a sequential reference — including the first-day seed and
+    the per-step floor division. Rows arrive shuffled, so the fold's
+    own day sort is exercised too."""
     import datetime as dt
+    import random
 
     from social_media_data_pipeline_recession_political_sentiment_spark.operators.relational import (
         EWMA_ALPHA_PCT,
         EWMA_MICRO,
+        _ewma_fold,
     )
 
     rows = []
     for t, series in enumerate(series_list):
         for i, n in enumerate(series):
             rows.append((f"t{t}", dt.date(2024, 1, 1) + dt.timedelta(days=i), n))
+    random.Random(len(rows)).shuffle(rows)
     df = spark.createDataFrame(rows, "event_type string, day date, n long")
 
-    # run the identical pandas stage the operator uses, over this frame
-    import pandas as pd
-
-    def ewma(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("day").reset_index(drop=True)
-        s, out = 0, []
-        for i, n in enumerate(int(x) for x in pdf["n"]):
-            s = (
-                n * EWMA_MICRO
-                if i == 0
-                else (EWMA_ALPHA_PCT * n * EWMA_MICRO + (100 - EWMA_ALPHA_PCT) * s) // 100
-            )
-            out.append(s)
-        pdf["ewma_micros"] = pd.Series(out, dtype="int64")
-        return pdf
-
     got = {
-        (r.event_type, r.day): r.ewma_micros
-        for r in df.groupBy("event_type")
-        .applyInPandas(ewma, schema="event_type string, day date, n long, ewma_micros long")
-        .collect()
+        (r.event_type, r.day): r.ewma_micros for r in _ewma_fold(df).collect()
     }
+    assert len(got) == len(rows)
     for t, series in enumerate(series_list):
         s = 0
         for i, n in enumerate(series):

@@ -50,7 +50,6 @@ ALLOW = {
     "ext_mm_resize_stub": "per-payload media codec, which needs Python",
     # demonstrations of a Python surface or a sequential sketch
     "udaf_value_range": "the grouped-aggregate pandas UDF surface it demonstrates",
-    "agg_ewma_volume": "integer EWMA recurrence over a calendar-bounded series",
     "agg_heavy_hitters_mg": "partition-local Misra-Gries summary in Arrow batches",
 }
 

@@ -210,7 +210,8 @@ def test_empty_corpus_tables_do_not_crash_fixed_class(spark):
 def test_empty_input_grand_total_oracle_parity(spark):
     """Grouping sets over ZERO-row events/documents read SQL's one
     grand-total row (count 0, rollup's total_chars NULL), as DuckDB
-    and PostgreSQL do; Spark alone would return no row. The exact
+    and PostgreSQL do; Spark alone would return no row. The Gini
+    scalar reads (0, NULL, NULL): sum over no rows is NULL. The exact
     driver-replica comparison (rowcount + schema + value hash) on the
     --empty fixture."""
     import sys
@@ -228,7 +229,7 @@ def test_empty_input_grand_total_oracle_parity(spark):
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{fixture}/{t}.parquet'")
     qs, os_ = registry.queries(), registry.oracles()
     bad = {}
-    for name in ("agg_cube", "agg_rollup", "agg_grouping_sets"):
+    for name in ("agg_cube", "agg_rollup", "agg_grouping_sets", "agg_user_gini"):
         assert qs[name](spark, fixture).count() == 1, name
         problems = compare_query(spark, con, qs[name], os_[name], fixture)
         if problems:
@@ -236,6 +237,7 @@ def test_empty_input_grand_total_oracle_parity(spark):
     assert not bad, bad
     row = qs["agg_rollup"](spark, fixture).collect()[0]
     assert (row.source, row.lang, row.n_docs, row.total_chars) == (None, None, 0, None)
+    assert tuple(qs["agg_user_gini"](spark, fixture).collect()[0]) == (0, None, None)
 
 
 def test_null_riddled_tables_do_not_crash_fixed_class(spark):

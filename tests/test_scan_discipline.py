@@ -1,14 +1,15 @@
-"""Source-scan multiplicity regression locks (the r6 single-scan
-sweep, BASELINE.md "Round-6 single-scan sweep").
+"""Plan-shape regression locks: source-scan multiplicity and the
+shuffle/sort/window counts of the event-time devices.
 
 Spark does not deduplicate common DataFrame subplans: a frame feeding
 k plan branches re-scans its source (and re-runs its derivation) k
-times. These tests pin the post-sweep scan counts of the sweep's
-poster-child queries so a refactor that drops a `compute_once` seam
-— or adds a new branch without one — fails HERE instead of silently
-re-billing the corpus at 100 TB. Counts come from the same formatted-
-plan parse as `tools/scan_count_audit.py`; plans only, nothing
-executes.
+times. These tests pin the scan counts of the queries that once
+re-scanned most, so a refactor that drops a `compute_once` seam — or
+adds a new branch without one — fails HERE instead of silently
+re-billing the corpus at 100 TB. They also pin the Exchange/Sort/
+Window counts that the as-of and sessionizer devices promise. Counts
+come from the same formatted-plan parse as
+`tools/scan_count_audit.py`; plans only, nothing executes.
 """
 
 from __future__ import annotations
@@ -29,12 +30,18 @@ SF_SMOKE = "/root/testdata/sf0.001"
 _LOC = re.compile(r"Location: \w+ \[[^\]]*?([\w.]+\.(?:parquet|csv|json))")
 
 
-def _scan_counts(df) -> Counter:
+def _plan_blocks(df) -> list[str]:
+    """The formatted plan's per-node detail blocks, each starting with
+    its node name (the tree drawing before them is dropped)."""
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
+    return re.split(r"\n\(\d+\) ", buf.getvalue())[1:]
+
+
+def _scan_counts(df) -> Counter:
     tables: Counter = Counter()
-    for block in re.split(r"\n\(\d+\) ", buf.getvalue()):
+    for block in _plan_blocks(df):
         # ExistingRDD = a compute_once read, not a source re-scan
         if block.startswith("Scan ") and not block.startswith(
             "Scan ExistingRDD"
@@ -71,6 +78,33 @@ def test_scan_multiplicity_bounded(spark, name, table, max_scans):
         f"{name} scans {table} {counts[table]}x (bound {max_scans}): "
         f"a shared frame lost its compute_once pin, or a new branch "
         f"needs one (see tools/scan_count_audit.py)"
+    )
+
+
+# (query, max Exchange, Sort and Window operators its plan may hold):
+# the shapes the event-time devices promise — the as-of carry and the
+# sessionizer each run over ONE shuffle on their key (the other as-of
+# exchange feeds the snapshot aggregate, bounce's the day rollup), and
+# nearest's second carry adds a sort and a Window but no shuffle.
+SHAPES = [
+    ("join_asof", 2, 1, 1),
+    ("join_asof_tolerance", 2, 1, 1),
+    ("join_asof_nearest", 2, 2, 2),
+    ("join_attribution_first_touch", 1, 1, 1),
+    ("agg_sessionize_batch", 1, 1, 2),
+    ("agg_sessions_bounce", 2, 1, 2),
+]
+
+
+@pytest.mark.parametrize("name,exchanges,sorts,windows", SHAPES)
+def test_event_time_device_plan_shape(spark, name, exchanges, sorts, windows):
+    nodes = Counter(
+        b.split(None, 1)[0] for b in _plan_blocks(queries()[name](spark, SF_SMOKE))
+    )
+    got = (nodes["Exchange"], nodes["Sort"], nodes["Window"])
+    assert all(g <= b for g, b in zip(got, (exchanges, sorts, windows))), (
+        f"{name} plans (Exchange, Sort, Window) = {got}, "
+        f"bound {(exchanges, sorts, windows)}"
     )
 
 
